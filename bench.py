@@ -16,6 +16,8 @@ import os
 import sys
 import time
 
+from onetl_spark.session import build_session
+
 HEADLINE = [
     "brand_bradley_terry",
     "brand_bt_upset_rate",
@@ -388,36 +390,10 @@ WARMUP = [
 ]
 
 
-def build_spark(cpus: int):
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("onetl_spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # r13 config A/B (two stall-filtered windows, 16-query set,
-        # geomean 0.84, full 404/404 parity sweep under the flag —
-        # PARITY_r13_shj_sweep.log): let the planner pick shuffled-hash
-        # over sort-merge when its size conditions hold. Scale-rational
-        # (guide §3.1: skip both sort passes when a build partition fits;
-        # SMJ fallback and AQE skew handling unaffected), not a local
-        # tune — sort elimination grows with shuffled bytes.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.warehouse.dir", os.path.join(os.path.dirname(__file__), ".scratch", "bench-wh"))
-    )
-    # Session-config A/B hook (r13 optimization round): extra conf pairs as
-    # "k=v;k=v" — additions-only, defaults above unchanged when unset, so
-    # the driver's bench invocation is untouched unless it sets the var.
-    for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            builder = builder.config(k.strip(), v.strip())
-    return builder.getOrCreate()
+# Deployment settings of the bench session; its confs are
+# onetl_spark.session.PROFILE, shared with the tests and tools.
+DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+WAREHOUSE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch", "bench-wh")
 
 
 def execute_fully(df) -> None:
@@ -515,8 +491,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
-    spark = build_spark(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(cpus, DRIVER_MEMORY, "onetl_spark-bench", WAREHOUSE)
 
     from onetl_spark.showcase import all_queries
 

@@ -1599,8 +1599,10 @@ def top_principal_component(
     Exactness: per-row terms round to 9 and accumulate as exact
     decimals (order-independent sums); dot folds run in array order
     (both engines fold lists left-to-right); normalization + rounding
-    happen as Spark expressions so an external SQL engine reproduces
-    the whole trajectory bit-for-bit. Returns one row per dimension
+    happen on the driver in IEEE double with a pinned fold order and
+    Spark's HALF_UP rounding of the shortest repr (``_spark_round9``),
+    so an external SQL engine doing them as expressions reproduces the
+    whole trajectory bit-for-bit. Returns one row per dimension
     ``(dim, component, eigenvalue)`` — eigenvalue is the Rayleigh
     quotient of the RETURNED component (one extra s-pass with the final
     iterate, so the pair is consistent even before convergence),

@@ -742,11 +742,12 @@ def calibration_bins(
         F.col(score_col).cast("double").alias("_s"),
         F.col(label_col).cast("long").alias("_y"),
     ).filter(F.col("_s").isNotNull() & F.col("_y").isNotNull())
-    # the bin cast is guarded by the SAME validity predicate the range
-    # guard uses: an out-of-range/NaN score must surface as the
-    # documented ValueError below, not as an ANSI CAST error raised
-    # while the aggregate computes floor(huge*bins)::int (ADVICE r12) —
-    # bad rows are parked in bin `bins-1`, and any bad row raises before
+    # the bin cast and the `_ssum` decimal cast are guarded by the SAME
+    # validity predicate the range guard uses: an out-of-range/NaN score
+    # must surface as the documented ValueError below, not as an ANSI
+    # CAST/overflow error raised while the aggregate computes
+    # floor(huge*bins)::int or huge::decimal(30,9) — bad rows are parked
+    # in bin `bins-1` with no score mass, and any bad row raises before
     # the grid is returned, so the kept grid is identical
     s_valid = (F.col("_s") >= 0) & (F.col("_s") <= 1) & ~F.isnan(F.col("_s"))
     b = F.when(
@@ -761,7 +762,9 @@ def calibration_bins(
     # consumer reads <= `bins` rows.
     per = t.groupBy(b.alias("bin")).agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(F.round(F.col("_s"), 9).cast("decimal(30,9)")).alias("_ssum"),
+        F.sum(
+            F.when(s_valid, F.round(F.col("_s"), 9).cast("decimal(30,9)"))
+        ).alias("_ssum"),
         F.sum("_y").alias("_pos"),
         F.max((~F.col("_y").isin(0, 1) | ~s_valid).cast("int")).alias("_bad"),
     ).localCheckpoint(eager=False)

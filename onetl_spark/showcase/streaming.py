@@ -114,38 +114,18 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Execute a streaming frame to completion (AvailableNow) into a
-    memory sink and return the materialized sink table.
-
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` (optional): state-partition count for
-    the stream, applied via ``spark.sql.shuffle.partitions`` around the
-    stream start and restored after. A streaming query PINS its state
-    partitioning at first start, so this is the scale knob for stateful
-    operators: on a 1000-executor cluster state partitions should track
-    cluster width (hundreds-plus), while the local bench's 32 are
-    already pure overhead for KB-sized per-partition state (r13 study
-    numbers in OPTIMIZATION_r13.md). The DEFAULT IS UNSET and the bench
-    posture is unchanged — any local-only win from shrinking state
-    partitions does not count as an optimization (it would not survive
-    the cluster); set the env per deployment instead."""
+    memory sink and return the materialized sink table."""
     spark = stream_df.sparkSession
     name = f"stream_sink_{os.getpid()}_{next(_SINK_COUNTER)}"
-    knob = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    prev = spark.conf.get("spark.sql.shuffle.partitions") if knob else None
-    if knob:
-        spark.conf.set("spark.sql.shuffle.partitions", knob)
-    try:
-        query = StreamDFWriter(
-            format="memory",
-            options=StreamWriteOptions(
-                output_mode=output_mode,
-                trigger={"availableNow": True},
-                query_name=name,
-            ),
-        ).run(stream_df)
-        query.awaitTermination()
-    finally:
-        if knob:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    query = StreamDFWriter(
+        format="memory",
+        options=StreamWriteOptions(
+            output_mode=output_mode,
+            trigger={"availableNow": True},
+            query_name=name,
+        ),
+    ).run(stream_df)
+    query.awaitTermination()
     return spark.table(name)
 
 

@@ -4,7 +4,8 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import SparkSession
+
+from onetl_spark.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SCRATCH = os.path.join(os.path.dirname(__file__), "..", ".scratch")
@@ -14,17 +15,7 @@ SCRATCH = os.path.join(os.path.dirname(__file__), "..", ".scratch")
 def spark():
     warehouse = os.path.join(SCRATCH, "warehouse")
     shutil.rmtree(warehouse, ignore_errors=True)
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("onetl_spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.warehouse.dir", warehouse)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
+    session = build_session(4, "4g", "onetl_spark-tests", warehouse)
     yield session
     session.stop()
 

@@ -320,3 +320,27 @@ def test_registry_output_types_safe(spark, sf_dir, testdata):
         if dfields:
             bad.append((name, f"decimal output columns: {dfields}"))
     assert bad == []
+
+
+def test_one_session_profile(spark):
+    """Tests, parity and tools run the benchmarked plan regime: the test
+    session carries ``session.PROFILE`` key by key, and no other module
+    builds its own session."""
+    import re
+    from pathlib import Path
+
+    from onetl_spark.session import PROFILE
+
+    assert {k: spark.conf.get(k) for k in PROFILE} == PROFILE
+
+    repo = Path(__file__).resolve().parent.parent
+    paths = [repo / "bench.py"] + [
+        p for top in ("tests", "tools", "onetl_spark") for p in (repo / top).rglob("*.py")
+    ]
+    builder = re.compile(r"SparkSession\s*\.\s*builder")
+    hits = [
+        p.relative_to(repo).as_posix()
+        for p in paths
+        if builder.search(p.read_text(encoding="utf-8"))
+    ]
+    assert hits == ["onetl_spark/session.py"]

@@ -755,10 +755,13 @@ def test_calibration_bins_hand_cases(spark):
     top = spark.createDataFrame([(1.0, 1)], "s double, y long")
     assert calibration_bins(top, "s", "y").collect()[0]["bin"] == 9
 
-    with _pt.raises(ValueError, match="within"):
-        calibration_bins(
-            spark.createDataFrame([(1.5, 1)], "s double, y long"), "s", "y"
-        ).collect()
+    # 1e22 overflows the decimal(30,9) score sum: still the ValueError,
+    # not an ANSI NUMERIC_VALUE_OUT_OF_RANGE
+    for bad in [(1.5, 1), (1e22, 0)]:
+        with _pt.raises(ValueError, match="within"):
+            calibration_bins(
+                spark.createDataFrame([bad], "s double, y long"), "s", "y"
+            ).collect()
     with _pt.raises(ValueError, match="binary|0/1"):
         calibration_bins(
             spark.createDataFrame([(0.5, 7)], "s double, y long"), "s", "y"

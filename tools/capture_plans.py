@@ -8,8 +8,9 @@ Usage:
     python tools/capture_plans.py before --only q1_pricing_summary,dedup_exact
     python tools/capture_plans.py after  --only ...  [--round r12] [--sf DIR]
 
-The session config mirrors bench.py (same shuffle partitions, AQE on)
-so the captured initial plan matches what the bench executes.
+The session is bench.py's (``onetl_spark.session.build_session``, same
+cores and driver memory) so the captured initial plan matches what the
+bench executes.
 """
 
 from __future__ import annotations
@@ -44,9 +45,9 @@ def main() -> None:
 
     sys.path.insert(0, os.path.join(REPO, "tools"))
     import bench  # noqa: E402  (repo root on path)
+    from onetl_spark.session import build_session
 
-    spark = bench.build_spark(args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(args.cpus, bench.DRIVER_MEMORY, "capture-plans", bench.WAREHOUSE)
 
     from onetl_spark.showcase import all_queries
 

@@ -157,7 +157,6 @@ def main():
     exec_only = False
     sweep = False
     sweep_kinds = ("complex",)
-    ansi = False
     while args:
         a = args.pop(0)
         if a == "--sf":
@@ -169,14 +168,6 @@ def main():
         elif a == "--sweep-decimal-types":
             sweep = True
             sweep_kinds = ("complex", "decimal")
-        elif a == "--ansi":
-            # ANSI sweep (judge r8 task 2): spark.sql.ansi.enabled=true turns
-            # silent integer wraparound / bad casts into runtime aborts —
-            # run the FULL registry at sf0.1 so overflow traps that only
-            # trigger past int32/int64 thresholds (mix31 row indexes,
-            # kendall n(n-1), long×decimal) surface systematically instead
-            # of one advice finding at a time.
-            ansi = True
         elif a == "--oracle-timeout":
             oracle_timeout = float(args.pop(0))
         elif a == "--exec-only":
@@ -190,27 +181,9 @@ def main():
         else:
             n = int(a)
 
-    from pyspark.sql import SparkSession
+    from onetl_spark.session import build_session
 
-    builder = (
-        SparkSession.builder.master("local[8]")
-        .appName("driver-parity")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.ansi.enabled", str(ansi).lower())
-    )
-    # same opt-in hook as bench.py: lets a parity sweep validate a
-    # candidate session flag (e.g. preferSortMergeJoin=false) before it
-    # is adopted; unset = exactly the historical session
-    for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            builder = builder.config(k.strip(), v.strip())
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(8, "8g", "driver-parity")
 
     mod = load_entry()
     if sweep:

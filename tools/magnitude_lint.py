@@ -150,15 +150,9 @@ def main() -> None:
                 con.close()
             else:
                 if spark is None:
-                    from pyspark.sql import SparkSession
+                    from onetl_spark.session import build_session
 
-                    spark = (
-                        SparkSession.builder.master("local[8]")
-                        .config("spark.sql.shuffle.partitions", "8")
-                        .config("spark.ui.enabled", "false")
-                        .getOrCreate()
-                    )
-                    spark.sparkContext.setLogLevel("ERROR")
+                    spark = build_session(8, "8g", "magnitude-lint")
                 df = queries[name](spark, sf_dir)
                 real_cols = [
                     f.name

@@ -1,9 +1,9 @@
 """Empirical per-job/per-stage profile of a registry query (guide §1.1).
 
 Runs the query once warm, then once instrumented, and prints a per-job
-breakdown: job wall time, stage count, task count, shuffle read/write
-bytes — the "where does the time actually go" view the Spark UI would
-give, usable headlessly.
+breakdown: stage and task counts, executor CPU, run and GC time, shuffle
+read/write bytes — the "where does the time actually go" view the Spark
+UI would give, usable headlessly.
 
 Usage:
     python tools/profile_query.py supplier_pagerank [--sf DIR] [--cpus N]
@@ -28,10 +28,12 @@ def main() -> None:
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
-    import bench
+    from py4j.protocol import Py4JJavaError
 
-    spark = bench.build_spark(args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    import bench
+    from onetl_spark.session import build_session
+
+    spark = build_session(args.cpus, bench.DRIVER_MEMORY, "profile-query", bench.WAREHOUSE)
     sc = spark.sparkContext
 
     from onetl_spark.showcase import all_queries
@@ -54,66 +56,42 @@ def main() -> None:
     sc.setJobGroup(None, None)
     spark.catalog.clearCache()
 
+    # Per-stage metrics from the AppStatusStore (filled in with the UI
+    # off): executor CPU is nanoseconds, run and GC time milliseconds.
     tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
     job_ids = sorted(tracker.getJobIdsForGroup(group))
-    jvm_tracker = sc._jsc.sc().statusTracker()
+    keys = ("stages", "tasks", "cpu_ms", "run_ms", "gc_ms", "shuffle_read", "shuffle_write")
+    total = dict.fromkeys(keys, 0)
     rows = []
-    tot_stage_ms = 0
-    tot_tasks = 0
     for jid in job_ids:
         jinfo = tracker.getJobInfo(jid)
         if jinfo is None:
             continue
-        stage_ms = 0
-        tasks = 0
-        n_stages = 0
+        row = dict.fromkeys(keys, 0)
         for sid in jinfo.stageIds:
-            opt = jvm_tracker.getStageInfo(sid)
-            if not opt.isDefined():
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Py4JJavaError:  # stage evicted from the store
                 continue
-            si = opt.get()
-            if si.numCompletedTasks() == 0 and si.numTasks() == 0:
+            if sd.status().toString() == "SKIPPED":
                 continue
-            n_stages += 1
-            tasks += si.numTasks()
-        rows.append({"job": jid, "stages": n_stages, "tasks": tasks})
-        tot_tasks += tasks
-    print(f"query={args.query} wall={wall:.3f}s jobs={len(job_ids)} tasks={tot_tasks}")
+            row["stages"] += 1
+            row["tasks"] += sd.numTasks()
+            row["cpu_ms"] += sd.executorCpuTime() // 1_000_000
+            row["run_ms"] += sd.executorRunTime()
+            row["gc_ms"] += sd.jvmGcTime()
+            row["shuffle_read"] += sd.shuffleReadBytes()
+            row["shuffle_write"] += sd.shuffleWriteBytes()
+        for k in keys:
+            total[k] += row[k]
+        rows.append({"job": jid, **row})
+    print(
+        f"query={args.query} wall={wall:.3f}s jobs={len(job_ids)} "
+        + " ".join(f"{k}={v}" for k, v in total.items())
+    )
     # compact per-job line
     print(json.dumps(rows))
-
-    # Also: REST-less stage timing via the AppStatusStore
-    store = sc._jsc.sc().statusStore()
-    try:
-        empty = sc._jvm.java.util.Collections.emptyList()
-        it = store.stageList(empty)
-        n = it.size()
-        stages = []
-        for i in range(n):
-            s = it.apply(i)
-            try:
-                dur = (s.completionTime().get().getTime() - s.submissionTime().get().getTime())
-            except Exception:
-                dur = -1
-            stages.append(
-                (
-                    s.stageId(),
-                    dur,
-                    s.numTasks(),
-                    s.shuffleReadBytes(),
-                    s.shuffleWriteBytes(),
-                    s.inputBytes(),
-                    str(s.description() if hasattr(s, "description") else ""),
-                )
-            )
-        stages.sort(key=lambda t: -t[1])
-        print("top stages by duration (id, ms, tasks, shufRead, shufWrite, input):")
-        for t in stages[:25]:
-            print(f"  stage={t[0]} ms={t[1]} tasks={t[2]} sr={t[3]} sw={t[4]} in={t[5]}")
-        tot_stage_ms = sum(max(t[1], 0) for t in stages)
-        print(f"sum stage ms (whole session incl. warm) = {tot_stage_ms}")
-    except Exception as e:  # noqa: BLE001
-        print(f"statusStore introspection failed: {type(e).__name__}: {e}")
 
     spark.stop()
 

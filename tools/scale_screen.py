@@ -53,18 +53,9 @@ def main() -> None:
         elif a == "--only":
             only = set(args.pop(0).split(","))
 
-    from pyspark.sql import SparkSession
+    from onetl_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "24g", "scale-screen")
 
     import bench
     import __spark_entry__ as entry

@@ -31,9 +31,9 @@ def main() -> None:
     args = ap.parse_args()
 
     import bench
+    from onetl_spark.session import build_session
 
-    spark = bench.build_spark(args.cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(args.cpus, bench.DRIVER_MEMORY, "solo-bench", bench.WAREHOUSE)
     from onetl_spark.showcase import all_queries
 
     queries = all_queries()

@@ -53,18 +53,9 @@ def main() -> None:
     if len(parts) < 2:
         raise SystemExit("--parts needs at least two widths")
 
-    from pyspark.sql import SparkSession
+    from onetl_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("stability-probe")
-        .config("spark.sql.shuffle.partitions", str(parts[0]))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_session(8, "8g", "stability-probe")
 
     mod = load_entry()
     queries = mod.queries()

@@ -61,17 +61,11 @@ def main() -> None:
     shutil.rmtree(SCRATCH, ignore_errors=True)
     os.makedirs(SCRATCH, exist_ok=True)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from onetl_spark.session import build_session
+
+    spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "16g", "write-scale-probe")
 
     from onetl_spark.operators.maintenance import zorder_write
 
