@@ -6,7 +6,9 @@ sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 
 Each query plan is executed fully via the `noop` sink (no driver collect
 bottleneck, no output I/O), which is what a 1000-executor run would look
-like minus the cluster: timings measure scan + shuffle + compute.
+like minus the cluster: timings measure scan + shuffle + compute. The
+side file also keeps each query's run record (``records``), so a riser
+can be read as a host stall, a new barrier or GC carry-over.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import os
 import sys
 import time
 
+from onetl_spark.metrics import SparkCommandMetrics, SparkMetricsRecorder
 from onetl_spark.session import build_session
 
 HEADLINE = [
@@ -400,6 +403,28 @@ def execute_fully(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def time_query(spark, fn, sf_dir: str, reps: int = 3) -> tuple[float, SparkCommandMetrics]:
+    """One untimed run compiles the query's generated code (seconds of
+    Janino that amortize to zero in a long-running job), then ``reps`` timed
+    noop-sink runs with DataFrame caches cleared after each, so only JVM
+    warmth carries over. Returns the median run's seconds and run record."""
+    execute_fully(fn(spark, sf_dir))
+    spark.catalog.clearCache()
+    runs = []
+    for _ in range(reps):
+        with SparkMetricsRecorder(spark) as recorder:
+            start = time.perf_counter()
+            execute_fully(fn(spark, sf_dir))
+            seconds = time.perf_counter() - start
+            recorder.drain()
+        runs.append((seconds, recorder.metrics()))
+        # queries are independent runs: drop any operator-internal caches
+        # so one query's persisted intermediates can't thrash the next one
+        spark.catalog.clearCache()
+    runs.sort(key=lambda run: run[0])
+    return runs[len(runs) // 2]
+
+
 def _current_round() -> int:
     """Round number = newest committed CORRECTNESS file + 1 (bench runs
     before the driver writes this round's file)."""
@@ -497,26 +522,18 @@ def main() -> None:
 
     queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
-    # extend with any non-headline showcase queries marked benchable
     timings: dict[str, float] = {}
+    records: dict[str, dict] = {}
 
     # JVM/codegen/footer warm-up per input path (not timed)
     for name in WARMUP:
         execute_fully(queries[name](spark, sf_dir))
     spark.catalog.clearCache()
 
-    # Per-query JVM-warm timing: one untimed run compiles the query's
-    # generated code (Janino compile of a novel expression tree costs
-    # seconds and amortizes to zero in any long-running job), then the
-    # MEDIAN of three timed runs is recorded (r8 methodology: the
-    # session-wide ~1.1-1.3x multiplier drift documented in BENCH_NOTES
-    # exceeded the 1.4x regression threshold; median-of-3 kills one-off
-    # GC/compaction spikes that min-of-2 could still sample). DataFrame
-    # caches are cleared between every run, so only JVM/codegen warmth
-    # carries over — the timed runs still scan, shuffle, and compute
-    # from parquet. A fixed CANARY query is re-timed every 25 queries;
-    # its trajectory is recorded in the side file so cross-round deltas
-    # can be normalized by session drift instead of argued about.
+    # Per-query JVM-warm median of three timed runs (time_query). A fixed
+    # CANARY query is re-timed every 25 queries; its trajectory is recorded
+    # in the side file so cross-round deltas can be normalized by session
+    # drift instead of argued about.
     # Guarded lookup: a registry rename/removal of the canary must degrade
     # to "no canary track", not KeyError-crash the whole bench (ADVICE r8).
     CANARY = "q1_pricing_summary"
@@ -534,17 +551,9 @@ def main() -> None:
 
     _run_canary()
     for qi, name in enumerate(names):
-        execute_fully(queries[name](spark, sf_dir))
-        spark.catalog.clearCache()
-        runs = []
-        for _ in range(3):
-            start = time.perf_counter()
-            execute_fully(queries[name](spark, sf_dir))
-            runs.append(time.perf_counter() - start)
-            # queries are independent runs: drop any operator-internal caches
-            # so one query's persisted intermediates can't thrash the next one
-            spark.catalog.clearCache()
-        timings[name] = round(sorted(runs)[1], 3)
+        seconds, record = time_query(spark, queries[name], sf_dir)
+        timings[name] = round(seconds, 3)
+        records[name] = record.as_dict()
         print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
         if (qi + 1) % 25 == 0:
             _run_canary()
@@ -591,6 +600,7 @@ def main() -> None:
                 "naming_note": "BENCH_close_r{N}_full.json is named for the round it CLOSES (newest committed CORRECTNESS round + 1) and is never overwritten (an existing file gets a letter-suffixed sibling); the driver's stdout-captured BENCH_r{N}.json for the same run may carry a different round number",
                 "canary": {"query": CANARY, "timings": canary_track},
                 "testdata_fingerprint": _testdata_fingerprint(sf_dir),
+                "records": records,
             },
             f,
             indent=1,

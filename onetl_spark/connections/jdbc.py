@@ -38,7 +38,6 @@ from onetl_spark.dialects.base import Dialect
 from onetl_spark.dialects.jdbc import (
     ClickhouseDialect,
     DerbyDialect,
-    GreenplumDialect,
     MSSQLDialect,
     MySQLDialect,
     OracleDialect,

@@ -4,6 +4,10 @@ Follows the reference lifecycle (SURVEY §3.2,
 onetl/db/db_writer/db_writer.py:36,132): job-description override →
 metrics recorder attached → ``connection.write_df_to_target`` → metrics
 logged (best-effort: "may be missing", db_writer.py:208-211).
+
+``last_metrics`` holds the write's run record (``SparkCommandMetrics``):
+rows its scans read (``input_rows``) and its tasks wrote (``output_rows``),
+jobs, stages, tasks, executor time, shuffle, spill and driver gap.
 """
 
 from __future__ import annotations

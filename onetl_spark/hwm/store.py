@@ -14,7 +14,6 @@ from __future__ import annotations
 import os
 import re
 import threading
-from typing import Any
 
 try:
     import yaml  # type: ignore

@@ -2220,11 +2220,6 @@ def centroid_silhouette(
     mx = F.greatest(F.col("_a"), F.col("_b"))
     s = F.when(mx > 0, (F.col("_b") - F.col("_a")) / mx)
 
-    def dmean(col, n):
-        return F.round(
-            F.sum(F.round(col, 9).cast("decimal(38,9)")).cast("double") / n, 9
-        )
-
     out = per_pt.groupBy("_lbl").agg(
         F.count(F.lit(1)).alias("_n"),
         F.sum(F.round(s, 9).cast("decimal(38,9)")).cast("double").alias("_ss"),

@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from onetl_spark.llm.ann_store import (
     incremental_ann_assign,

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.llm.sampling import (
-    UNIT_BUCKETS,
     pack_sequences,
     sample_by_hash,
     split_by_hash,

@@ -9,8 +9,6 @@
 
 from __future__ import annotations
 
-from typing import Any
-
 from onetl_spark.strategy.base import BaseStrategy
 from onetl_spark.strategy.batch import BatchHWMStrategy
 

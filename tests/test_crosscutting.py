@@ -1,6 +1,8 @@
 """Hooks, plugins, metrics, logging."""
 
 import logging
+from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -99,11 +101,80 @@ def test_plugins_no_entry_points():
 
 
 def test_metrics_recorder_captures_rows(spark, sf_dir, testdata):
+    """Rows are counted where tasks read and write them: the scan reads
+    every order, and a collect writes nothing."""
+    orders = spark.table("orders").count()
     with SparkMetricsRecorder(spark) as recorder:
         spark.table("orders").selectExpr("sum(o_totalprice)").collect()
+        recorder.drain()
     metrics = recorder.metrics()
-    assert metrics.executions >= 1
-    assert metrics.output_rows >= 1  # scan emitted rows
+    assert metrics.executions >= 1 and metrics.jobs >= 1 and metrics.tasks >= 1
+    assert (metrics.input_rows, metrics.output_rows) == (orders, 0)
+
+
+def test_dbwriter_metrics_count_rows_read_and_written(spark, testdata):
+    """A filtered append reports the rows it read and the rows it wrote,
+    not the sum of every plan node's output rows."""
+    from onetl_spark.connections import SparkSQLConnection
+    from onetl_spark.db import DBWriter
+
+    orders = spark.table("orders")
+    part = orders.where("o_orderkey % 7 = 0")
+    total, written = orders.count(), part.count()
+
+    @SparkSQLConnection.write_df_to_target.bind
+    def drain(connection, *args):
+        yield  # after the write, still inside DBWriter's recorder block
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+    spark.sql("CREATE TABLE metrics_rows_sink USING parquet AS SELECT * FROM orders WHERE false")
+    try:
+        writer = DBWriter(SparkSQLConnection(spark), "metrics_rows_sink")
+        writer.run(part)
+        assert (writer.last_metrics.input_rows, writer.last_metrics.output_rows) == (total, written)
+        assert spark.table("metrics_rows_sink").count() == written
+    finally:
+        SparkSQLConnection.write_df_to_target.unbind(drain)
+        spark.sql("DROP TABLE IF EXISTS metrics_rows_sink")
+
+
+def test_metrics_recorder_reads_only_new_executions(spark, monkeypatch):
+    """The exit cost follows the block's work, not the session's history:
+    with 5,000 retained executions only the ids after the start are read."""
+    class Store:  # the SQL status store calls the recorder makes
+        count, read = 5000, []
+
+        def executionsCount(self):
+            return self.count
+
+        def executionsList(self, offset, length):
+            return SimpleNamespace(head=lambda: SimpleNamespace(executionId=lambda: offset + length - 1))
+
+        def execution(self, eid):
+            self.read.append(eid)
+            return SimpleNamespace(isEmpty=lambda: True)  # as if evicted
+
+    store = Store()
+    monkeypatch.setattr(SparkMetricsRecorder, "_status_store", lambda self: store)
+    with SparkMetricsRecorder(spark):
+        store.count += 3  # three executions ran in the block
+    assert store.read == [5000, 5001, 5002]
+    # a start id that cannot be read leaves the record empty: no history walk
+    monkeypatch.setattr(Store, "executionsList", None)
+    with SparkMetricsRecorder(spark) as recorder:
+        store.count += 3
+    assert recorder.metrics().is_empty and len(store.read) == 3
+
+
+def test_bench_time_query_returns_run_record(spark, sf_dir, testdata, monkeypatch):
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent))
+    import bench
+    from onetl_spark.showcase import all_queries
+
+    seconds, record = bench.time_query(spark, all_queries()["q1_pricing_summary"], sf_dir, reps=1)
+    assert seconds > 0 and record.jobs >= 1 and record.stages >= 1
+    # wall time and driver gap cover the timed run, not the listener-bus drain
+    assert abs(record.wall_s - seconds) < 0.05 and 0 <= record.driver_gap_s <= record.wall_s
 
 
 def test_override_job_description(spark):
@@ -327,7 +398,6 @@ def test_one_session_profile(spark):
     session carries ``session.PROFILE`` key by key, and no other module
     builds its own session."""
     import re
-    from pathlib import Path
 
     from onetl_spark.session import PROFILE
 

@@ -4,7 +4,6 @@ gz compression, nested dirs, partitioned layout, XML native, Avro gating."""
 import os
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from onetl_spark.file import FileDFReader, FileDFWriter, FileDFWriterOptions

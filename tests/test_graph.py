@@ -4,8 +4,6 @@ import random
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from onetl_spark.llm import dedup
 from onetl_spark.operators.graph import connected_components
 

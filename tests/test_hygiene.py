@@ -7,7 +7,6 @@ exist precisely to tell them apart.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from onetl_spark.llm.hygiene import (

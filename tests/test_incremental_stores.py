@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from onetl_spark.operators.cdc import scd2_apply_batch, scd2_batch_audit
 from onetl_spark.operators.ri_store import ri_apply_batch, ri_final_status
 from onetl_spark.operators.temporal import scd2_intervals

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from onetl_spark.operators.preference import bradley_terry, pairwise_outcomes
 

@@ -40,9 +40,13 @@ def main() -> None:
     print("\ntop improvements (s):")
     for n in deltas[:20]:
         print(f"  {qa[n]:7.2f} -> {qb[n]:7.2f}  ({qb[n] - qa[n]:+.2f})  {n}")
+    ra, rb = da.get("records", {}), db.get("records", {})
     print("\ntop risers (s):")
     for n in deltas[-12:]:
-        print(f"  {qa[n]:7.2f} -> {qb[n]:7.2f}  ({qb[n] - qa[n]:+.2f})  {n}")
+        rec = ""
+        if n in ra and n in rb:  # more jobs: a new barrier; more driver gap: driver work or a stall
+            rec = f"  jobs {rb[n]['jobs'] - ra[n]['jobs']:+d}  driver_gap_s {rb[n]['driver_gap_s'] - ra[n]['driver_gap_s']:+.2f}"
+        print(f"  {qa[n]:7.2f} -> {qb[n]:7.2f}  ({qb[n] - qa[n]:+.2f})  {n}{rec}")
     extra = sorted(set(qb) - set(qa))
     if extra:
         print(f"\nnew queries ({len(extra)}): {sum(qb[n] for n in extra):.1f}s total")

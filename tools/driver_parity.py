@@ -144,10 +144,6 @@ def sweep_types(spark, mod, sf_dir, kinds=("complex",)):
     return bad
 
 
-def sweep_complex_types(spark, mod, sf_dir):
-    return sweep_types(spark, mod, sf_dir, kinds=("complex",))
-
-
 def main():
     n = 50
     sf_dir = "/root/testdata/sf0.01"

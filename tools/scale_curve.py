@@ -3,8 +3,9 @@
 Every 100-TB scale claim in this repo rests on plan-shape reading
 (bounded collects, one-shuffle-per-round iteration, banded LSH instead
 of all-pairs). This tool is the empirical check: time each family at
-sf0.01 / sf0.1 / sf1 on SAME-GENERATOR data (tools/gen_testdata.py) and
-report the per-decade scaling exponent
+sf0.01 / sf0.1 / sf1 on SAME-GENERATOR data (tools/gen_testdata.py) with
+bench.py's timing (``bench.time_query``: noop sink, one untimed warm-up,
+median of --reps) and report the per-decade scaling exponent
 
     alpha = log(t_hi / t_lo) / log(rows_hi / rows_lo)
 
@@ -30,7 +31,6 @@ import json
 import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -110,6 +110,7 @@ def main() -> None:
     spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "24g", "scale-curve")
 
     import __spark_entry__ as entry
+    import bench
 
     queries = entry.queries()
     fams = {k: v for k, v in FAMILIES.items() if only is None or k in only}
@@ -126,18 +127,9 @@ def main() -> None:
         fn = queries[qname]
         times = {}
         for sf in SFS:
-            sf_dir = os.path.join(DATA, sf)
-            # one warm-up execution then median of `reps`
-            samples = []
-            for i in range(reps + 1):
-                t0 = time.monotonic()
-                fn(spark, sf_dir).collect()
-                dt = time.monotonic() - t0
-                if i > 0:
-                    samples.append(dt)
-            samples.sort()
-            times[sf] = round(samples[len(samples) // 2], 3)
-            print(f"{fam} [{qname}] {sf}: {times[sf]}s")
+            seconds, record = bench.time_query(spark, fn, os.path.join(DATA, sf), reps)
+            times[sf] = round(seconds, 3)
+            print(f"{fam} [{qname}] {sf}: {times[sf]}s {record.details()}")
         exps = {}
         for lo, hi in zip(SFS, SFS[1:]):
             r = rows[hi][table] / rows[lo][table]

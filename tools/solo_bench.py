@@ -1,9 +1,11 @@
 """Solo per-query timing with bench.py methodology on a fresh JVM.
 
 For adjudicating individual query timings outside the full bench window:
-same session config, same noop-sink execution, one untimed JVM-warm run
-then the median of --reps timed runs, with the canary timed first and
-last so readings can be drift-normalized.
+same session config, same timing (``bench.time_query``: one untimed
+JVM-warm run, then the median of --reps timed noop-sink runs), with the
+canary timed first and last so readings can be drift-normalized. Each
+query's run record (jobs, stages, tasks, executor CPU/run/GC, shuffle,
+spill, driver gap) goes to stderr beside its time.
 
 Usage:
     python tools/solo_bench.py --only dedup_simhash,supplier_pagerank [--reps 3]
@@ -15,7 +17,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -43,24 +44,15 @@ def main() -> None:
         raise SystemExit(f"unknown queries: {unknown}")
 
     def timed(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"solo:{name}")
-        bench.execute_fully(queries[name](spark, args.sf))  # untimed warm/compile
-        spark.catalog.clearCache()
-        runs = []
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            bench.execute_fully(queries[name](spark, args.sf))
-            runs.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(None)
-        return round(sorted(runs)[len(runs) // 2], 3)
+        seconds, record = bench.time_query(spark, queries[name], args.sf, args.reps)
+        print(f"  {name}: {seconds:.3f}s {record.details()}", file=sys.stderr)
+        return round(seconds, 3)
 
     out: dict[str, float] = {}
     if not args.no_canary:
         out["canary_first"] = timed("q1_pricing_summary")
     for name in names:
         out[name] = timed(name)
-        print(f"  {name}: {out[name]:.3f}s", file=sys.stderr)
     if not args.no_canary:
         out["canary_last"] = timed("q1_pricing_summary")
     print(json.dumps(out))
