@@ -7,6 +7,11 @@ triples → mkdir tree → ThreadPoolExecutor copy (options.workers) with
 temp-file staging → per-file statuses → DownloadResult. The FileListHWM
 is updated with successfully-downloaded files and saved EVEN ON
 INTERRUPT (:762-776 finally block) — unlike column HWMs.
+
+``run`` reads the HWM from the store once and lists against that copy;
+the downloaded paths join it in one update when the copy phase ends, so
+a run costs one store read and one store write however many files the
+HWM already holds.
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ from onetl_spark.file.transfer.paths import RemoteFile
 from onetl_spark.file.transfer.results import FileResult
 from onetl_spark.hwm.store import HWMStoreStackManager
 from onetl_spark.hwm.types import FileListHWM
-from onetl_spark.strategy.base import HWMStrategy, StrategyManager
+from onetl_spark.strategy.base import HWMStrategy, StrategyManager, validate_hwm_consistency
 from onetl_spark.strategy.batch import BatchHWMStrategy
 
 log = logging.getLogger(__name__)
@@ -48,12 +53,14 @@ class FileDownloader:
     limits: list = field(default_factory=list)
     hwm: FileListHWM | None = None
     options: FileDownloaderOptions = field(default_factory=FileDownloaderOptions)
+    # the HWM ``run`` read, for the listing it makes through ``view_files``
+    _run_hwm: FileListHWM | None = field(default=None, init=False, repr=False, compare=False)
 
     @slot
     def view_files(self) -> list[RemoteFile]:
         """Dry-run listing after filters/limits/HWM (file_downloader.py:441-505)."""
         filters = list(self.filters)
-        hwm = self._current_hwm()
+        hwm = self._run_hwm if self._run_hwm is not None else self._current_hwm()
         if hwm is not None:
             filters.append(FileHWMFilter(hwm))
         from onetl_spark.file.transfer.limits import reset_limits
@@ -75,7 +82,11 @@ class FileDownloader:
         os.makedirs(self.local_path, exist_ok=True)
 
         if files is None:
-            remote_files = self.view_files()
+            self._run_hwm = hwm
+            try:
+                remote_files = self.view_files()
+            finally:
+                self._run_hwm = None
         else:
             remote_files = [
                 f if isinstance(f, RemoteFile) else RemoteFile(PurePosixPath(str(f)), self.connection.get_stat(str(f)))
@@ -92,23 +103,26 @@ class FileDownloader:
             os.makedirs(os.path.dirname(local), exist_ok=True)
 
         result = FileResult()
+        pool = ThreadPoolExecutor(max_workers=max(1, self.options.workers))
+        futures: dict = {}
         try:
-            with ThreadPoolExecutor(max_workers=max(1, self.options.workers)) as pool:
-                futures = {pool.submit(self._copy_one, f, local): f for f, local in plan}
-                for future in as_completed(futures):
-                    file = futures[future]
-                    try:
-                        status = future.result()
-                    except Exception as e:
-                        log.exception("download failed for %s", file)
-                        result.failed.append(file)
-                        continue
-                    getattr(result, status).append(file)
-                    if status == "successful" and hwm is not None:
-                        hwm.update(str(file.path))
+            futures = {pool.submit(self._copy_one, f, local): f for f, local in plan}
+            for future in as_completed(futures):
+                file = futures[future]
+                try:
+                    status = future.result()
+                except Exception:
+                    log.exception("download failed for %s", file)
+                    result.failed.append(file)
+                    continue
+                getattr(result, status).append(file)
         finally:
-            # HWM saved even on interrupt (file_downloader.py:762-776)
+            # on interrupt: drop the copies not started, wait for the running ones
+            pool.shutdown(cancel_futures=True)
+            # HWM saved even on interrupt (file_downloader.py:762-776), with
+            # every file copied so far
             if hwm is not None:
+                hwm.update([str(file.path) for future, file in futures.items() if _copied(future)])
                 HWMStoreStackManager.get_current().set_hwm(hwm)
         return result
 
@@ -133,6 +147,11 @@ class FileDownloader:
         if not isinstance(strategy, HWMStrategy):
             return None
         saved = HWMStoreStackManager.get_current().get_hwm(self.hwm.name)
-        if saved is not None:
-            return saved
-        return self.hwm.copy()
+        if saved is None:
+            return self.hwm.copy()
+        validate_hwm_consistency(saved, self.hwm)
+        return saved
+
+
+def _copied(future) -> bool:
+    return not future.cancelled() and future.exception() is None and future.result() == "successful"

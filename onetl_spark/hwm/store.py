@@ -5,12 +5,24 @@ Equivalent of the reference's ``etl_entities.hwm_store`` +
 HWM object; the YAML store keeps a per-HWM history list (most recent
 first) in one file per HWM under a base directory.
 
+The YAML store parses and emits through libyaml (``CSafeLoader`` /
+``CSafeDumper``) when PyYAML was built with it, and through PyYAML's
+pure-Python ``SafeLoader`` / ``SafeDumper`` otherwise. Both write the
+same text, so files move freely between the two; the C classes keep a
+``FileListHWM`` of thousands of paths from costing hundreds of
+milliseconds per read and write. Reads parse only the newest entry, and
+writes emit only the new one and keep the older entries as text, so the
+depth of the history adds no parsing or emitting, only a text copy.
+Without PyYAML the store falls back to JSON files.
+
 A thread-global stack selects the "current" store so stores can be used
 as context managers (mirroring HWMStoreStackManager).
 """
 
 from __future__ import annotations
 
+import itertools
+import json
 import os
 import re
 import threading
@@ -20,9 +32,27 @@ try:
 except Exception:  # pragma: no cover - pyyaml is bundled with pyspark
     yaml = None
 
-import json
-
 from onetl_spark.hwm.types import HWM
+
+if yaml is not None and yaml.__with_libyaml__:
+    _YAML_LOADER, _YAML_DUMPER = yaml.CSafeLoader, yaml.CSafeDumper
+elif yaml is not None:  # pragma: no cover - libyaml ships with PyYAML wheels
+    _YAML_LOADER, _YAML_DUMPER = yaml.SafeLoader, yaml.SafeDumper
+
+# Each top-level entry of a history PyYAML or libyaml wrote starts a line
+# with "- "; the lists nested in an entry are indented.
+_YAML_ENTRY = re.compile(r"^- ", re.MULTILINE)
+
+
+def _yaml_head(text: str, n: int) -> str:
+    """The newest ``n`` (>= 1) entries of a stored YAML history, as YAML
+    text: the emitted text is cut where entry ``n + 1`` starts, without
+    parsing it. Text in another layout is parsed and emitted again."""
+    if text and not text.startswith("- "):
+        head = (yaml.load(text, Loader=_YAML_LOADER) or [])[:n]
+        return yaml.dump(head, Dumper=_YAML_DUMPER, sort_keys=False) if head else ""
+    cut = next(itertools.islice(_YAML_ENTRY.finditer(text, 1), n - 1, None), None)
+    return text if cut is None else text[: cut.start()]
 
 
 class BaseHWMStore:
@@ -71,32 +101,32 @@ class YamlHWMStore(BaseHWMStore):
         ext = "yml" if yaml else "json"
         return os.path.join(self.path, f"{safe}.{ext}")
 
-    def _load(self, path: str) -> list[dict]:
+    @staticmethod
+    def _read(path: str) -> str:
         if not os.path.exists(path):
-            return []
+            return ""
         with open(path) as f:
-            if yaml:
-                return yaml.safe_load(f) or []
-            return json.load(f)
-
-    def _dump(self, path: str, history: list[dict]) -> None:
-        with open(path, "w") as f:
-            if yaml:
-                yaml.safe_dump(history, f, sort_keys=False)
-            else:
-                json.dump(history, f, indent=2)
+            return f.read()
 
     def get_hwm(self, name: str) -> HWM | None:
-        history = self._load(self._file_for(name))
-        if not history:
-            return None
-        return HWM.deserialize(history[0])
+        text = self._read(self._file_for(name))
+        if yaml:
+            history = yaml.load(_yaml_head(text, 1), Loader=_YAML_LOADER)
+        else:
+            history = json.loads(text) if text else []
+        return HWM.deserialize(history[0]) if history else None
 
     def set_hwm(self, hwm: HWM) -> None:
         path = self._file_for(hwm.name)
-        history = self._load(path)
-        history.insert(0, hwm.serialize())
-        self._dump(path, history[: self.MAX_HISTORY])
+        text = self._read(path)
+        if yaml:
+            new = yaml.dump([hwm.serialize()], Dumper=_YAML_DUMPER, sort_keys=False)
+            text = new + _yaml_head(text, self.MAX_HISTORY - 1)
+        else:
+            history = json.loads(text) if text else []
+            text = json.dumps(([hwm.serialize()] + history)[: self.MAX_HISTORY], indent=2)
+        with open(path, "w") as f:
+            f.write(text)
 
 
 class HWMStoreStackManager:

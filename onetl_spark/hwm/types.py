@@ -187,6 +187,7 @@ class FileListHWM(HWM):
             return self
         if isinstance(new_value, (str,)):
             new_value = [new_value]
+        # copies the set: add a run's files in one call, not one by one
         self.value = frozenset(self.value) | {str(p) for p in new_value}
         self.modified_time = datetime.now()
         return self

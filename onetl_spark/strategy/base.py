@@ -23,6 +23,22 @@ from onetl_spark.hwm.types import HWM
 log = logging.getLogger(__name__)
 
 
+def validate_hwm_consistency(saved: HWM, expected: HWM) -> None:
+    """Refuse a stored HWM that the reader did not write: a different HWM
+    class, entity or expression under the same name."""
+    if type(saved) is not type(expected):
+        raise StrategyError(
+            f"Saved HWM {saved.name!r} has type {type(saved).__name__}, "
+            f"but reader expects {type(expected).__name__}",
+        )
+    for attr in ("entity", "expression"):
+        old, new = getattr(saved, attr), getattr(expected, attr)
+        if old is not None and new is not None and old != new:
+            raise StrategyError(
+                f"Saved HWM {saved.name!r} has {attr}={old!r}, but reader uses {new!r}",
+            )
+
+
 class StrategyManager:
     _local = threading.local()
 
@@ -87,24 +103,9 @@ class HWMStrategy(BaseStrategy):
         store = HWMStoreStackManager.get_current()
         saved = store.get_hwm(self.hwm.name)
         if saved is not None:
-            self.validate_hwm_consistency(saved)
+            validate_hwm_consistency(saved, self.hwm)
             self.hwm = saved
         self._fetched = True
-
-    def validate_hwm_consistency(self, saved: HWM) -> None:
-        if self.hwm is None:
-            return
-        if type(saved) is not type(self.hwm):
-            raise StrategyError(
-                f"Saved HWM {saved.name!r} has type {type(saved).__name__}, "
-                f"but reader expects {type(self.hwm).__name__}",
-            )
-        for attr in ("entity", "expression"):
-            old, new = getattr(saved, attr), getattr(self.hwm, attr)
-            if old is not None and new is not None and old != new:
-                raise StrategyError(
-                    f"Saved HWM {saved.name!r} has {attr}={old!r}, but reader uses {new!r}",
-                )
 
     def update_hwm(self, value: Any) -> None:
         """Advance the in-memory watermark (pre-read pin, db_reader.py:592-595)."""

@@ -210,3 +210,85 @@ def test_walk_filters_match_reference_model_random(conn, tmp_path):
             if fnmatch.fnmatch(os.path.basename(p), "*.csv") and os.path.getsize(p) >= 10
         )
         assert got == want, "glob+size"
+
+
+class CountingStore(MemoryHWMStore):
+    def __init__(self):
+        super().__init__()
+        self.gets = 0
+        self.sets = 0
+
+    def get_hwm(self, name):
+        self.gets += 1
+        return super().get_hwm(name)
+
+    def set_hwm(self, hwm):
+        self.sets += 1
+        super().set_hwm(hwm)
+
+
+def test_downloader_reads_the_hwm_once_per_run(conn, remote_tree, tmp_path):
+    dl = FileDownloader(
+        conn, remote_tree, str(tmp_path / "local"), filters=[Glob("*.csv")], hwm=FileListHWM(name="once"),
+        options=FileDownloaderOptions(if_exists="overwrite"),
+    )
+    with CountingStore() as store:
+        for expected in (4, 0):
+            store.gets = store.sets = 0
+            with IncrementalStrategy():
+                assert dl.run().successful_count == expected
+            assert (store.gets, store.sets) == (1, 1)
+        # alone, the dry run still reads the saved HWM
+        store.gets = 0
+        with IncrementalStrategy():
+            assert dl.view_files() == []
+        assert store.gets == 1
+
+
+class Interrupted(BaseException):
+    """Not an Exception, like KeyboardInterrupt."""
+
+
+class InterruptedConnection(LocalFileConnection):
+    def __init__(self, copies_before_interrupt):
+        self.budget = copies_before_interrupt
+        self.copied = []
+
+    def _download_file(self, remote, local):
+        if len(self.copied) >= self.budget:
+            raise Interrupted()
+        super()._download_file(remote, local)
+        self.copied.append(remote)
+
+
+def test_downloader_interrupt_saves_exactly_the_copied_files(remote_tree, tmp_path):
+    conn = InterruptedConnection(copies_before_interrupt=2)
+    dl = FileDownloader(conn, remote_tree, str(tmp_path / "local"), hwm=FileListHWM(name="interrupted"))
+    with MemoryHWMStore() as store:
+        with pytest.raises(Interrupted):
+            with IncrementalStrategy():
+                dl.run()
+        assert len(conn.copied) == 2
+        assert store.get_hwm("interrupted").value == frozenset(conn.copied)
+
+        # the next run copies only what the interrupted one did not
+        conn.budget = 10
+        with IncrementalStrategy():
+            rest = dl.run()
+        assert rest.successful_count == 3
+        assert len(store.get_hwm("interrupted").value) == 5
+
+
+def test_downloader_refuses_a_stored_hwm_of_another_type(conn, remote_tree, tmp_path):
+    from onetl_spark.exceptions import StrategyError
+    from onetl_spark.hwm.types import ColumnIntHWM
+
+    dl = FileDownloader(conn, remote_tree, str(tmp_path / "local"), hwm=FileListHWM(name="shared_name"))
+    with MemoryHWMStore() as store:
+        store.set_hwm(ColumnIntHWM(name="shared_name", value=7, expression="id"))
+        with IncrementalStrategy():
+            with pytest.raises(StrategyError, match="ColumnIntHWM"):
+                dl.run()
+            with pytest.raises(StrategyError, match="ColumnIntHWM"):
+                dl.view_files()
+        assert store.get_hwm("shared_name").value == 7

@@ -23,6 +23,13 @@ Usage: python tools/scale_screen.py [--flag-ratio 12] [--abs-floor 3]
 NOTE the baseline: a LINEAR query over a 10x-growing table shows ~10x —
 the default flag of 12x means "beyond linear plus margin", not "slow".
 Writes SCALE_SCREEN.json; prints flagged queries.
+
+Each timed run sits in a ``SparkMetricsRecorder`` block whose record
+(jobs, stages, executor CPU, GC, spill, driver gap) lands under the
+file's ``records`` key per query and SF, so a flag can be read as more
+work, a new barrier or a host stall. DataFrame caches are cleared after
+every query, so one query's persisted intermediates cannot speed up or
+thrash the next; readings taken before that are not directly comparable.
 """
 
 from __future__ import annotations
@@ -53,6 +60,7 @@ def main() -> None:
         elif a == "--only":
             only = set(args.pop(0).split(","))
 
+    from onetl_spark.metrics import SparkMetricsRecorder
     from onetl_spark.session import build_session
 
     spark = build_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "24g", "scale-screen")
@@ -65,6 +73,7 @@ def main() -> None:
     if only:
         names = [n for n in names if n in only]
     timings: dict[str, dict] = {}
+    records: dict[str, dict] = {}
     errors: dict[str, dict] = {}
 
     for sf in SFS:
@@ -73,12 +82,16 @@ def main() -> None:
         bench.execute_fully(queries["q1_pricing_summary"](spark, sf_dir))
         for i, name in enumerate(names):
             try:
-                t0 = time.monotonic()
-                bench.execute_fully(queries[name](spark, sf_dir))
-                dt = round(time.monotonic() - t0, 3)
+                with SparkMetricsRecorder(spark) as recorder:
+                    t0 = time.monotonic()
+                    bench.execute_fully(queries[name](spark, sf_dir))
+                    dt = round(time.monotonic() - t0, 3)
+                    recorder.drain()
                 timings.setdefault(name, {})[sf] = dt
+                records.setdefault(name, {})[sf] = recorder.metrics().as_dict()
             except Exception as e:  # noqa: BLE001
                 errors.setdefault(name, {})[sf] = f"{type(e).__name__}: {e}"[:200]
+            spark.catalog.clearCache()
             if (i + 1) % 40 == 0:
                 print(f"[{sf}] {i + 1}/{len(names)}", flush=True)
 
@@ -109,6 +122,7 @@ def main() -> None:
         with open(out_path) as f:
             out = json.load(f)
         out["timings"].update(timings)
+        out.setdefault("records", {}).update(records)
         out.setdefault("errors", {}).update(errors)
         # drop prior flags for anything re-screened this run — including
         # queries that ERRORED (they land in `errors`, not `timings`; a
@@ -121,6 +135,7 @@ def main() -> None:
             "flag_ratio": flag_ratio,
             "abs_floor": abs_floor,
             "timings": timings,
+            "records": records,
             "errors": errors,
             "flagged": new_flags,
         }
