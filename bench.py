@@ -428,16 +428,9 @@ def time_query(spark, fn, sf_dir: str, reps: int = 3) -> tuple[float, SparkComma
 def _current_round() -> int:
     """Round number = newest committed CORRECTNESS file + 1 (bench runs
     before the driver writes this round's file)."""
-    import glob
-    import re
+    from onetl_spark.showcase import correctness_history
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return (max(rounds) + 1) if rounds else 1
+    return correctness_history()[1] + 1
 
 
 _FAMILY_PREFIXES = [

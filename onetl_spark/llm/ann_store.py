@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from onetl_spark.spark_utils import widen_small_scan
+from onetl_spark.spark_utils import fsig, widen_small_scan
 
 __all__ = [
     "centroid_seed_store",
@@ -55,11 +55,6 @@ __all__ = [
 
 _DEC = "decimal(25,12)"
 _K = 4
-
-
-def _fsig(col):
-    """round(float32(x), 9) + 0.0 — see `showcase/util.fsig`."""
-    return F.round(col.cast("float").cast("double"), 9) + F.lit(0.0)
 
 
 def _pts(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -194,7 +189,7 @@ def incremental_ann_assign(
             F.lit(t).cast("int").alias("batch_id"),
             F.col("_id").alias(id_col),
             "cluster",
-            _fsig(F.col("_d")).alias("dist"),
+            fsig(F.col("_d")).alias("dist"),
         )
         out = v if out is None else out.unionByName(v)
         store = fold_into_store(a, store).localCheckpoint(eager=False)
@@ -219,17 +214,17 @@ def incremental_ann_report(verdicts: DataFrame) -> DataFrame:
         .orderBy("batch_id")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    mean_d = _fsig(F.col("_sd").cast("double") / F.col("n_assigned"))
+    mean_d = fsig(F.col("_sd").cast("double") / F.col("n_assigned"))
     pre = g.select(
         "batch_id",
         "cluster",
         "n_assigned",
-        _fsig(
+        fsig(
             F.col("n_assigned").cast("double") / F.sum("n_assigned").over(w_batch)
         ).alias("batch_share"),
         mean_d.alias("mean_dist"),
         F.sum("n_assigned").over(w_cum).cast("long").alias("cum_n"),
-        _fsig(
+        fsig(
             F.sum("_sd").over(w_cum).cast("double")
             / F.sum("n_assigned").over(w_cum)
         ).alias("cum_mean_dist"),
@@ -244,6 +239,6 @@ def incremental_ann_report(verdicts: DataFrame) -> DataFrame:
         "cum_mean_dist",
         F.when(
             F.col("cum_mean_dist") > 0,
-            _fsig(F.col("mean_dist") / F.col("cum_mean_dist")),
+            fsig(F.col("mean_dist") / F.col("cum_mean_dist")),
         ).alias("drift_ratio"),
     )

@@ -34,7 +34,7 @@ that crosses any fixed absolute rounding grid once magnitudes grow
 (r10 `events_value_changepoint` at 1.4e7; r11 sf1 strict parity caught
 σ/excursions at 1e4). IEEE double→float32 rounding keeps ~7 significant
 digits at any magnitude and is bit-identical across engines
-(`showcase/util.fsig`).
+(`spark_utils.fsig`).
 """
 
 from __future__ import annotations
@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from onetl_spark.spark_utils import fsig
 
 __all__ = ["cusum_excursions", "single_changepoint"]
 
@@ -68,21 +70,6 @@ def _prefix_cols(key_cols: list[str], order_col: str, value_col: str, scale: int
         (F.col(value_col).isNull() | F.col(order_col).isNull()).cast("int")
     ).over(w_all)
     return w_all, w_run, x_dec, xx_dec, bad
-
-
-def _fsig(col):
-    """Composed engine-stable rounding: ``round(float32(x), 9) + 0.0``.
-
-    The float32 round-trip is RELATIVE (~7 significant digits at any
-    magnitude — see `showcase/util.fsig`), so alone it cannot
-    canonicalize near-zero cancellation outputs: when a CUSUM excursion
-    or SSE term is mathematically ~0, engine A computes 0.0 and engine B
-    ~2e-12, and float32 preserves both distinctly. Composing an ABSOLUTE
-    9-dp rounding after it maps the near-zero band onto one grid, and the
-    trailing + 0.0 kills the -0.0/0.0 split a rounded difference can
-    leave behind. Mirror in SQL with `showcase/util.sql_fsig`.
-    """
-    return F.round(col.cast("float").cast("double"), 9) + F.lit(0.0)
 
 
 def _guarded(col, bad_col, op_name: str):
@@ -181,10 +168,10 @@ def cusum_excursions(
         *key_cols,
         order_col,
         value_col,
-        g(_fsig(F.col("_mu"))).alias("mu"),
-        g(_fsig(F.col("_sigma"))).alias("sigma"),
-        g(_fsig(F.col("_p") - p_min)).alias("cusum_pos"),
-        g(_fsig(F.col("_q") - q_min)).alias("cusum_neg"),
+        g(fsig(F.col("_mu"))).alias("mu"),
+        g(fsig(F.col("_sigma"))).alias("sigma"),
+        g(fsig(F.col("_p") - p_min)).alias("cusum_pos"),
+        g(fsig(F.col("_q") - q_min)).alias("cusum_neg"),
     )
 
 
@@ -240,10 +227,10 @@ def single_changepoint(
         F.col(order_col).alias("split_at"),
         i.alias("_i"),
         n.alias("n_points"),
-        g(_fsig(sse_left + sse_right)).alias("sse_split"),
-        g(_fsig(sse_total)).alias("sse_total"),
-        g(_fsig(sx_i / i)).alias("pre_mean"),
-        g(_fsig((sx_n - sx_i) / (n - i))).alias("post_mean"),
+        g(fsig(sse_left + sse_right)).alias("sse_split"),
+        g(fsig(sse_total)).alias("sse_total"),
+        g(fsig(sx_i / i)).alias("pre_mean"),
+        g(fsig((sx_n - sx_i) / (n - i))).alias("post_mean"),
     ).filter(F.col("_i") < F.col("n_points"))
 
     w_best = W.partitionBy(*key_cols).orderBy(F.asc("sse_split"), F.asc("_i"))

@@ -30,8 +30,8 @@ control done Spark-side before aggregation:
 
 Float discipline: the only engine-variant primitive in the chain is
 ``ln`` (libm, last-ULP differences) — the noise term and every released
-double go through the composed float32 rounding (``_fsig``, see
-`showcase/util.fsig`), and the uniform itself is EXACT (52-bit md5
+double go through the composed float32 rounding (``fsig``, see
+`spark_utils.fsig`), and the uniform itself is EXACT (52-bit md5
 prefix → ``(h + 0.5) / 2**52`` is dyadic arithmetic, bit-identical in
 any IEEE engine).
 
@@ -59,6 +59,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from onetl_spark.spark_utils import fsig
+
 __all__ = [
     "hash_uniform",
     "laplace_noise",
@@ -69,14 +71,6 @@ __all__ = [
 ]
 
 _TWO_52 = float(2**52)
-
-
-def _fsig(col: Column) -> Column:
-    """Composed engine-stable rounding: ``round(float32(x), 9) + 0.0``
-    (relative float32 quantization for any magnitude + absolute 9-dp
-    canonicalization near zero + negative-zero kill). Mirror in SQL with
-    `showcase/util.sql_fsig`."""
-    return F.round(col.cast("float").cast("double"), 9) + F.lit(0.0)
 
 
 def hash_uniform(key: Column, seed: str) -> Column:
@@ -96,10 +90,10 @@ def laplace_noise(key: Column, scale: float, seed: str) -> Column:
     """Laplace(0, scale) noise by inverse CDF on the hash uniform:
     ``-scale * sign(u - 1/2) * ln(1 - 2|u - 1/2|)``. Everything except
     ``ln`` is exact IEEE arithmetic; the result is float32-rounded
-    (`_fsig`) so libm last-ULP differences cannot surface cross-engine."""
+    (`fsig`) so libm last-ULP differences cannot surface cross-engine."""
     t = hash_uniform(key, seed) - F.lit(0.5)
     raw = F.lit(-scale) * F.signum(t) * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(t))
-    return _fsig(raw)
+    return fsig(raw)
 
 
 def _sel_key(user: Column, cols: list[Column], seed: str) -> Column:
@@ -182,7 +176,7 @@ def dp_count_release(
     return counts.select(
         *group_cols,
         "true_count",
-        _fsig(F.col("true_count").cast("double") + noise).alias("noisy_count"),
+        fsig(F.col("true_count").cast("double") + noise).alias("noisy_count"),
         F.lit(float(epsilon)).alias("epsilon"),
         F.lit(sensitivity).alias("sensitivity"),
         F.lit(scale).alias("noise_scale"),
@@ -256,7 +250,7 @@ def dp_sum_release(
     return sums.select(
         *group_cols,
         "true_sum",
-        _fsig(F.col("true_sum") + noise).alias("noisy_sum"),
+        fsig(F.col("true_sum") + noise).alias("noisy_sum"),
         F.lit(float(epsilon)).alias("epsilon"),
         F.lit(sensitivity).alias("sensitivity"),
         F.lit(scale).alias("noise_scale"),

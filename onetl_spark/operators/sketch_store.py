@@ -48,13 +48,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from onetl_spark.operators.sketches import _hll_alpha, _HLL_HASH_BITS
+from onetl_spark.spark_utils import fsig
 
 __all__ = ["hll_ingest_series", "hll_cumulative_registers", "hll_grid_estimate"]
-
-
-def _fsig(col):
-    """round(float32(x), 9) + 0.0 — see `showcase/util.fsig`."""
-    return F.round(col.cast("float").cast("double"), 9) + F.lit(0.0)
 
 
 def _batch_registers(
@@ -202,7 +198,7 @@ def hll_grid_estimate(
         batch_col,
         *group_cols,
         *(["batch_rows"] if with_rows else []),
-        _fsig(est).alias("cum_distinct"),
+        fsig(est).alias("cum_distinct"),
     )
 
 
@@ -249,7 +245,7 @@ def hll_ingest_series(
         *group_cols,
         "batch_rows",
         "cum_distinct",
-        _fsig(
+        fsig(
             F.col("cum_distinct") - F.lag("cum_distinct", 1, 0.0).over(w_lag)
         ).alias("new_distinct"),
     )
@@ -266,5 +262,5 @@ def hll_ingest_series(
         "batch_rows",
         "cum_distinct",
         "new_distinct",
-        F.when(F.col("batch_rows") > 0, _fsig(rate)).alias("returning_rate"),
+        F.when(F.col("batch_rows") > 0, fsig(rate)).alias("returning_rate"),
     )

@@ -52,60 +52,41 @@ def _debt_ordered(queries):
     driver commits a new CORRECTNESS file, so the window rotates itself:
     freshly-verified queries sink, stale ones resurface.
     """
-    import glob
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    last_green = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
-            with open(path) as f:
-                rows = json.load(f)
-        except (ValueError, OSError, json.JSONDecodeError):  # pragma: no cover
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                last_green[name] = max(last_green.get(name, -1), rnd)
-    # Self-pruning: an override member with a green row at/after the round
-    # its contract changed has been re-verified — it re-enters normal debt
-    # ordering automatically (r8 lesson: manual pruning left a stale
-    # override that displaced never-green queries out of the r9 window).
-    reverify = {
-        n for n in REVERIFY_FIRST if last_green.get(n, -1) < REVERIFY_SINCE
-    }
+    last_green, _ = correctness_history()
     names = list(queries)
     order = sorted(
-        range(len(names)),
-        key=lambda i: (
-            names[i] not in reverify,
-            last_green.get(names[i], -1),
-            i,
-        ),
+        range(len(names)), key=lambda i: (last_green.get(names[i], -1), i)
     )
     return {names[i]: queries[names[i]] for i in order}
 
 
-# Queries whose OUTPUT CONTRACT changed since their last driver check must
-# lead the next window regardless of debt age — a contract change voids any
-# green history and a never-green entry must not queue behind 50 older ones.
-# r8: the seven DECIMAL→DOUBLE output-boundary fixes (judge r7 task 1).
-# Entries prune THEMSELVES once a CORRECTNESS_r*.json at round >=
-# REVERIFY_SINCE shows them green (see _debt_ordered); when adding new
-# members after a fresh contract change, bump REVERIFY_SINCE to that round.
-REVERIFY_SINCE = 8
-REVERIFY_FIRST = frozenset(
-    {
-        "q18_large_volume_customer",
-        "q10_returned_item_reporting",
-        "orders_cube_priority_status",
-        "events_time_grouping_sets",
-        "region_nation_revenue_share",
-        "orders_price_date_skyline",
-        "events_scd2_point_in_time",
-    }
-)
+def correctness_history() -> tuple[dict[str, int], int]:
+    """Read the committed ``CORRECTNESS_r*.json`` files: query name -> the
+    newest round with a green (``hash_match``) row, and the newest round
+    on file. A file that does not parse still counts as a round."""
+    import glob
+    import json
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    last_green: dict[str, int] = {}
+    newest = 0
+    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        newest = max(newest, rnd)
+        try:
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        for name, row in rows.items():
+            if isinstance(row, dict) and row.get("hash_match"):
+                last_green[name] = max(last_green.get(name, -1), rnd)
+    return last_green, newest
 
 
 def all_oracles():

@@ -47,32 +47,6 @@ GROUP BY user_id
 """
 
 
-def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregation (all 4 grouping sets) with grouping flags."""
-    ensure_views(spark, sf_dir)
-    return (
-        spark.table("orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("total"),
-            F.grouping("o_orderstatus").cast("long").alias("g_status"),
-            F.grouping("o_orderpriority").cast("long").alias("g_priority"),
-        )
-    )
-
-
-CUBE_SQL = f"""
-SELECT o_orderstatus, o_orderpriority,
-       COUNT(*) AS n_orders,
-       {sql_dsum('o_totalprice')} AS total,
-       CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
-       CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-"""
-
-
 def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT percentiles per event type (Spark ``percentile``, not the
     approximate sketch — approx_percentile/DuckDB approx sketches differ
@@ -101,13 +75,11 @@ GROUP BY event_type
 
 SPARK_QUERIES = {
     "events_pivot_by_type": events_pivot_by_type,
-    "agg_cube_status_priority": agg_cube_status_priority,
     "events_value_percentiles": events_value_percentiles,
 }
 
 ORACLE_SQL = {
     "events_pivot_by_type": PIVOT_SQL,
-    "agg_cube_status_priority": CUBE_SQL,
     "events_value_percentiles": PERCENTILES_SQL,
 }
 

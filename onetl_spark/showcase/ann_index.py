@@ -27,6 +27,7 @@ from onetl_spark.llm.ann_store import (
     incremental_ann_assign,
     incremental_ann_report,
 )
+from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views, sql_fsig
 
 SPARK_QUERIES: dict = {}
@@ -143,79 +144,35 @@ FROM rep
 """
 
 
-def _stage_embedding_batches(sf_dir: str) -> str:
-    """Stage the embeddings table as THREE parquet files (``vec_id % 3``,
-    mtime-ordered) in one stream-source directory, keyed by the absolute
-    source path (two roots sharing a basename must not alias)."""
-    import hashlib
-
-    import duckdb
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    src_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:10]
-    base = os.path.join(
-        repo,
-        ".scratch",
-        "stream_src_embeddings",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{src_key}",
-    )
-    names = [os.path.join(base, f"{k}_batch.parquet") for k in range(_N_BATCHES)]
-    stamp = os.path.getmtime(src)
-    if all(os.path.exists(p) for p in names) and os.path.getmtime(base) >= stamp:
-        return base
-    os.makedirs(base, exist_ok=True)
-    con = duckdb.connect()
-    for k, p in enumerate(names):
-        con.execute(
-            f"COPY (SELECT * FROM read_parquet('{src}') "
-            f"WHERE vec_id % {_N_BATCHES} = {k} AND embedding IS NOT NULL) "
-            f"TO '{p}' (FORMAT PARQUET)"
-        )
-        os.utime(p, (stamp + 1000 * k, stamp + 1000 * k))
-    con.close()
-    os.utime(base, (stamp, stamp))
-    return base
-
-
 def streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The index-maintenance loop as a REAL streaming pipeline
     (`streaming/ann_store.py`): the embedding corpus replayed as three
-    deterministic micro-batches through ``foreachBatch`` with an
-    external parquet centroid store — batch 0 seeds AND assigns, later
-    batches assign against the folded store. Must reproduce the batch
-    operator's verdicts hash-exactly (SAME ORACLE as
+    deterministic micro-batches (``vec_id % 3``) through ``foreachBatch``
+    with an external parquet centroid store — batch 0 seeds AND assigns,
+    later batches assign against the folded store. Must reproduce the
+    batch operator's verdicts hash-exactly (SAME ORACLE as
     `incremental_ann_verdicts`)."""
-    import tempfile
-
-    from onetl_spark.file.format.parquet import Parquet
     from onetl_spark.streaming.ann_store import ann_index_batch_fn
-    from onetl_spark.streaming.reader import StreamDFReader
-    from onetl_spark.streaming.writer import StreamDFWriter, StreamWriteOptions
 
     ensure_views(spark, sf_dir)
-    source = _stage_embedding_batches(sf_dir)
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.path.join(repo, ".scratch")
-    os.makedirs(scratch, exist_ok=True)
-    work = tempfile.mkdtemp(prefix="ann_index_stream_", dir=scratch)
-
-    stream = StreamDFReader(
-        spark=spark,
-        format=Parquet(),
-        source_path=source,
-        df_schema=spark.read.parquet(
-            os.path.join(sf_dir, "embeddings.parquet")
-        ).schema,
-        options={"maxFilesPerTrigger": "1"},
-    ).run()
-    query = StreamDFWriter(
-        foreach_batch=ann_index_batch_fn(
-            os.path.join(work, "store"), os.path.join(work, "verdicts"), k=_K
+    source = stage_batches(
+        "embeddings",
+        sf_dir,
+        ["embeddings"],
+        [
+            f"SELECT * FROM embeddings "
+            f"WHERE vec_id % {_N_BATCHES} = {k} AND embedding IS NOT NULL"
+            for k in range(_N_BATCHES)
+        ],
+    )
+    schema = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).schema
+    work = run_foreach_batch(
+        "streaming_ann_index",
+        batch_stream(spark, source, schema),
+        lambda work_dir: ann_index_batch_fn(
+            os.path.join(work_dir, "store"), os.path.join(work_dir, "verdicts"), k=_K
         ),
-        options=StreamWriteOptions(trigger={"availableNow": True}),
-    ).run(stream)
-    query.awaitTermination()
+    )
     return spark.read.parquet(os.path.join(work, "verdicts"))
 
 

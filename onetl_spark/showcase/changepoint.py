@@ -7,7 +7,7 @@ grid-sized while the event-sized work is one groupBy shuffle.
 
 Oracle strategy: decimal-exact prefix sums (the dsum discipline) feed
 closed-form double arithmetic; every emitted double goes through the
-float32 round-trip (util.fsig) because these statistics scale with the
+float32 round-trip (spark_utils.fsig) because these statistics scale with the
 data and the decimal→double cast ULP makes any fixed absolute rounding
 engine-unstable at scale (r10 driver red at 1.4e7; r11 sf1 strict parity
 at 1e4) — the CTE chain mirrors the operator's window stages

@@ -29,6 +29,7 @@ from onetl_spark.file.transfer.connection import LocalFileConnection
 from onetl_spark.file.transfer.downloader import FileDownloader
 from onetl_spark.file.transfer.filters import ExcludeDir, FileSizeRange, Glob
 from onetl_spark.file.transfer.limits import MaxFilesCount
+from onetl_spark.showcase.replay import scratch_path
 from onetl_spark.showcase.util import ensure_views
 
 _SUBSET_MOD = 7
@@ -41,9 +42,7 @@ def _stage_tree(spark: SparkSession, sf_dir: str) -> str:
     """Materialize documents (doc_id % 7 = 0) as root/<source>/doc_<id>.txt;
     idempotent per (sf basename, documents mtime)."""
     doc_path = os.path.join(sf_dir, "documents.parquet")
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
+    root = scratch_path(
         "file_transfer_stage",
         f"{os.path.basename(os.path.normpath(sf_dir))}_{int(os.path.getmtime(doc_path))}",
     )

@@ -34,6 +34,7 @@ from onetl_spark.llm.dedup import (
     minhash_signature_store,
 )
 from onetl_spark.showcase.llm import _sql_sig_entries, SQL_MD5LONG, SQL_SHINGLES, SQL_TOKENS
+from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views
 
 SPARK_QUERIES: dict = {}
@@ -170,93 +171,39 @@ FROM verdicts GROUP BY verdict
 """
 
 
-def _stage_doc_batches(sf_dir: str) -> str:
-    """Stage the documents table as TWO parquet files in one stream-source
-    directory — history first (older mtime), today's batch second — so the
-    file stream (maxFilesPerTrigger=1, oldest-first) replays the exact
-    split the batch queries use, as two deterministic micro-batches."""
-    import duckdb
-    import hashlib
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    src = os.path.join(sf_dir, "documents.parquet")
-    # key the cache by the ABSOLUTE source path, not just the basename:
-    # two roots sharing a basename (/root/testdata/sf1 vs
-    # .scratch/testdata/sf1) must not alias to one staged split, or the
-    # mtime check can silently serve the wrong corpus
-    src_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:10]
-    base = os.path.join(
-        repo,
-        ".scratch",
-        "stream_src_docs",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{src_key}",
-    )
-    hist = os.path.join(base, "0_history.parquet")
-    batch = os.path.join(base, "1_batch.parquet")
-    stamp = os.path.getmtime(src)
-    if (
-        os.path.exists(hist)
-        and os.path.exists(batch)
-        and os.path.getmtime(base) >= stamp
-    ):
-        return base
-    os.makedirs(base, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"COPY (SELECT * FROM read_parquet('{src}') WHERE doc_id % 5 <> 0) "
-        f"TO '{hist}' (FORMAT PARQUET)"
-    )
-    con.execute(
-        f"COPY (SELECT * FROM read_parquet('{src}') WHERE doc_id % 5 = 0) "
-        f"TO '{batch}' (FORMAT PARQUET)"
-    )
-    con.close()
-    os.utime(hist, (stamp, stamp))
-    os.utime(batch, (stamp + 1000, stamp + 1000))
-    os.utime(base, (stamp, stamp))
-    return base
-
-
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-dedup loop as a REAL streaming pipeline
-    (`streaming/incremental.py`): a document file stream replayed as two
-    deterministic micro-batches through ``foreachBatch`` with an external
-    parquet signature store — batch 0 (history) bootstraps the store,
-    batch 1 (today) emits verdicts and appends its fresh signatures.
-    Same output contract — and the SAME ORACLE — as
+    (`streaming/incremental.py`): the documents replayed as two
+    deterministic micro-batches — history first, then today's batch, the
+    split the batch queries use — through ``foreachBatch`` with an
+    external parquet signature store: batch 0 (history) bootstraps the
+    store, batch 1 (today) emits verdicts and appends its fresh
+    signatures. Same output contract — and the SAME ORACLE — as
     `incremental_dedup_verdicts`: the streaming pipeline must reproduce
     the batch operator's verdicts exactly."""
-    import tempfile
-
-    from onetl_spark.file.format.parquet import Parquet
     from onetl_spark.streaming.incremental import incremental_dedup_batch_fn
-    from onetl_spark.streaming.reader import StreamDFReader
-    from onetl_spark.streaming.writer import StreamDFWriter, StreamWriteOptions
 
     ensure_views(spark, sf_dir)
-    source = _stage_doc_batches(sf_dir)
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.path.join(repo, ".scratch")
-    os.makedirs(scratch, exist_ok=True)
-    work = tempfile.mkdtemp(prefix="inc_dedup_stream_", dir=scratch)
-    store_dir = os.path.join(work, "store")
-    verdict_dir = os.path.join(work, "verdicts")
-
-    stream = StreamDFReader(
-        spark=spark,
-        format=Parquet(),
-        source_path=source,
-        df_schema=spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema,
-        options={"maxFilesPerTrigger": "1"},
-    ).run()
-    query = StreamDFWriter(
-        foreach_batch=incremental_dedup_batch_fn(
-            store_dir, verdict_dir, threshold=_THRESHOLD
+    source = stage_batches(
+        "docs",
+        sf_dir,
+        ["documents"],
+        [
+            "SELECT * FROM documents WHERE doc_id % 5 <> 0",
+            "SELECT * FROM documents WHERE doc_id % 5 = 0",
+        ],
+    )
+    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    work = run_foreach_batch(
+        "streaming_incremental_dedup",
+        batch_stream(spark, source, schema),
+        lambda work_dir: incremental_dedup_batch_fn(
+            os.path.join(work_dir, "store"),
+            os.path.join(work_dir, "verdicts"),
+            threshold=_THRESHOLD,
         ),
-        options=StreamWriteOptions(trigger={"availableNow": True}),
-    ).run(stream)
-    query.awaitTermination()
-    return spark.read.parquet(verdict_dir)
+    )
+    return spark.read.parquet(os.path.join(work, "verdicts"))
 
 
 def incremental_decon_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.sketch_store import hll_ingest_series
+from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views, sql_fsig
 
 SPARK_QUERIES: dict = {}
@@ -178,68 +179,32 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day
 """
 
 
-def _stage_event_batches(sf_dir: str) -> str:
-    """Stage the events table as THREE parquet files (``event_id % 3``,
-    mtime-ordered) in one stream-source directory, so the file stream
-    replays a 3-batch ingest deterministically. Only the columns the
-    monitor needs are staged (and ts is cast to µs in DuckDB, sidestepping
-    the INT64-nanos footgun)."""
-    import hashlib
-
-    import duckdb
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    src = os.path.join(sf_dir, "events.parquet")
-    src_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:10]
-    base = os.path.join(
-        repo,
-        ".scratch",
-        "stream_src_events",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{src_key}",
-    )
-    names = [os.path.join(base, f"{k}_batch.parquet") for k in range(3)]
-    stamp = os.path.getmtime(src)
-    if all(os.path.exists(p) for p in names) and os.path.getmtime(base) >= stamp:
-        return base
-    os.makedirs(base, exist_ok=True)
-    con = duckdb.connect()
-    for k, p in enumerate(names):
-        con.execute(
-            f"COPY (SELECT event_id, event_type, user_id "
-            f"FROM read_parquet('{src}') WHERE event_id % 3 = {k} "
-            f"AND user_id IS NOT NULL AND event_type IS NOT NULL "
-            f"AND ts IS NOT NULL) TO '{p}' (FORMAT PARQUET)"
-        )
-        os.utime(p, (stamp + 1000 * k, stamp + 1000 * k))
-    con.close()
-    os.utime(base, (stamp, stamp))
-    return base
-
-
 def streaming_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest monitor as a REAL streaming pipeline
     (`streaming/ingest.py`): the event stream replayed as three
-    deterministic micro-batches through ``foreachBatch`` with an
-    external parquet HLL register store — each batch emits its series
-    rows against the store accumulated so far and folds its registers
-    in. Must reproduce the batch operator's series hash-exactly (the
-    oracle is the same series SQL at the ``event_id % 3`` split)."""
-    import tempfile
-
+    deterministic micro-batches (``event_id % 3``) through
+    ``foreachBatch`` with an external parquet HLL register store — each
+    batch emits its series rows against the store accumulated so far and
+    folds its registers in. Only the columns the monitor needs are staged.
+    Must reproduce the batch operator's series hash-exactly (the oracle
+    is the same series SQL at the ``event_id % 3`` split)."""
     from pyspark.sql import types as T
 
-    from onetl_spark.file.format.parquet import Parquet
     from onetl_spark.streaming.ingest import ingest_monitor_batch_fn
-    from onetl_spark.streaming.reader import StreamDFReader
-    from onetl_spark.streaming.writer import StreamDFWriter, StreamWriteOptions
 
     ensure_views(spark, sf_dir)
-    source = _stage_event_batches(sf_dir)
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.path.join(repo, ".scratch")
-    os.makedirs(scratch, exist_ok=True)
-    work = tempfile.mkdtemp(prefix="ingest_monitor_stream_", dir=scratch)
-
+    source = stage_batches(
+        "ingest",
+        sf_dir,
+        ["events"],
+        [
+            f"SELECT event_id, event_type, user_id "
+            f"FROM events WHERE event_id % 3 = {k} "
+            f"AND user_id IS NOT NULL AND event_type IS NOT NULL "
+            f"AND ts IS NOT NULL"
+            for k in range(3)
+        ],
+    )
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -247,24 +212,17 @@ def streaming_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("user_id", T.LongType()),
         ]
     )
-    stream = StreamDFReader(
-        spark=spark,
-        format=Parquet(),
-        source_path=source,
-        df_schema=schema,
-        options={"maxFilesPerTrigger": "1"},
-    ).run()
-    query = StreamDFWriter(
-        foreach_batch=ingest_monitor_batch_fn(
-            os.path.join(work, "store"),
-            os.path.join(work, "series"),
+    work = run_foreach_batch(
+        "streaming_ingest_monitor",
+        batch_stream(spark, source, schema),
+        lambda work_dir: ingest_monitor_batch_fn(
+            os.path.join(work_dir, "store"),
+            os.path.join(work_dir, "series"),
             ["event_type"],
             "user_id",
             b=8,
         ),
-        options=StreamWriteOptions(trigger={"availableNow": True}),
-    ).run(stream)
-    query.awaitTermination()
+    )
     return spark.read.parquet(os.path.join(work, "series"))
 
 

@@ -4148,15 +4148,6 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cos_sql(va: str, vb: str) -> str:
-    return (
-        f"round(list_sum(list_transform(range(1, len({va})+1), "
-        f"i -> CAST({va}[i] AS DOUBLE) * CAST({vb}[i] AS DOUBLE))) / "
-        f"(sqrt(list_sum(list_transform({va}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) * "
-        f"sqrt(list_sum(list_transform({vb}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 9)"
-    )
-
-
 ANN_RECALL_SQL = f"""
 WITH centroids AS (
   SELECT vec_id AS centroid_id, embedding AS cvec FROM embeddings WHERE vec_id % 64 = 7

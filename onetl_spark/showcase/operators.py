@@ -8,6 +8,8 @@ operator implementations themselves.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from onetl_spark.connections import SparkSQLConnection
 from onetl_spark.db import DBReader
 from onetl_spark.hwm.types import ColumnIntHWM
 from onetl_spark.hwm.window import Edge, Window
+from onetl_spark.showcase.replay import scratch_path
 from onetl_spark.showcase.util import dsum, ensure_views, sql_dsum
 from onetl_spark.strategy import IncrementalBatchStrategy, SnapshotBatchStrategy
 
@@ -270,7 +273,6 @@ SELECT * FROM nation
 def filedf_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FileDFWriter → FileDFReader round-trip through CSV on SparkLocalFS
     (SURVEY §2.5/§2.6). Doubles survive via shortest-repr round-trip."""
-    import os
     import shutil
 
     from pyspark.sql.types import (
@@ -286,7 +288,7 @@ def filedf_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from onetl_spark.file.format import CSV
 
     ensure_views(spark, sf_dir)
-    target = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch", "csv_roundtrip")
+    target = scratch_path("csv_roundtrip")
     shutil.rmtree(target, ignore_errors=True)
 
     local_fs = SparkLocalFS(spark)
@@ -394,12 +396,8 @@ ORACLE_SQL["salted_join_order_volume"] = SALTED_JOIN_SQL
 
 
 def _derby_scratch(sf_dir: str, name: str) -> str:
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(
-        repo, ".scratch", "derby_showcase",
-        os.path.basename(os.path.normpath(sf_dir)), name,
+    return scratch_path(
+        "derby_showcase", os.path.basename(os.path.normpath(sf_dir)), name
     )
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.ri_store import ri_apply_batch, ri_final_status
+from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views
 
 SPARK_QUERIES: dict = {}
@@ -155,72 +156,36 @@ ORDER BY fact_batch, status
 """
 
 
-def _stage_feed_batches(sf_dir: str) -> str:
-    """Stage the multiplexed dim+fact feed as THREE parquet files
-    (mtime-ordered load windows): each window carries its customer-key
-    arrivals (``kind='dim'``) and its order facts (``kind='fact'``) in
-    one schema ``(kind, key, fact_id)`` — the single-CDC-topic shape."""
-    import hashlib
-
-    import duckdb
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    src_o = os.path.join(sf_dir, "orders.parquet")
-    src_c = os.path.join(sf_dir, "customer.parquet")
-    src_key = hashlib.md5(os.path.abspath(src_o).encode()).hexdigest()[:10]
-    base = os.path.join(
-        repo,
-        ".scratch",
-        "stream_src_ri",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{src_key}",
-    )
-    names = [os.path.join(base, f"{k}_window.parquet") for k in range(_N_BATCHES)]
-    stamp = max(os.path.getmtime(src_o), os.path.getmtime(src_c))
-    if all(os.path.exists(p) for p in names) and os.path.getmtime(base) >= stamp:
-        return base
-    os.makedirs(base, exist_ok=True)
-    con = duckdb.connect()
-    for k, p in enumerate(names):
-        con.execute(
-            f"COPY ("
-            f"SELECT 'dim' AS kind, c_custkey AS key, "
-            f"       CAST(NULL AS BIGINT) AS fact_id "
-            f"FROM read_parquet('{src_c}') WHERE c_custkey % 4 = {k} "
-            f"UNION ALL "
-            f"SELECT 'fact' AS kind, o_custkey AS key, o_orderkey AS fact_id "
-            f"FROM read_parquet('{src_o}') "
-            f"WHERE {_FACT_PRED} AND o_orderkey % 3 = {k}"
-            f") TO '{p}' (FORMAT PARQUET)"
-        )
-        os.utime(p, (stamp + 1000 * k, stamp + 1000 * k))
-    con.close()
-    os.utime(base, (stamp, stamp))
-    return base
-
-
 def streaming_ri_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The integrity monitor as a REAL streaming pipeline
-    (`streaming/ri_store.py`): the multiplexed feed replayed as three
-    deterministic micro-batches through ``foreachBatch`` with external
-    parquet key/pending stores and a verdict-event sink; the sink
-    collapses to the same per-fact statuses. Same output contract — and
-    the SAME ORACLE — as `incremental_ri_verdicts`."""
-    import tempfile
-
+    (`streaming/ri_store.py`): a multiplexed dim+fact feed replayed as
+    three deterministic load windows through ``foreachBatch`` with
+    external parquet key/pending stores and a verdict-event sink. Each
+    window carries its customer-key arrivals (``kind='dim'``) and its
+    order facts (``kind='fact'``) in one schema ``(kind, key, fact_id)``
+    — the single-CDC-topic shape. The sink collapses to the same per-fact
+    statuses. Same output contract — and the SAME ORACLE — as
+    `incremental_ri_verdicts`."""
     from pyspark.sql import types as T
 
-    from onetl_spark.file.format.parquet import Parquet
-    from onetl_spark.streaming.reader import StreamDFReader
     from onetl_spark.streaming.ri_store import ri_monitor_batch_fn
-    from onetl_spark.streaming.writer import StreamDFWriter, StreamWriteOptions
 
     ensure_views(spark, sf_dir)
-    source = _stage_feed_batches(sf_dir)
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.path.join(repo, ".scratch")
-    os.makedirs(scratch, exist_ok=True)
-    work = tempfile.mkdtemp(prefix="ri_monitor_stream_", dir=scratch)
-
+    source = stage_batches(
+        "ri",
+        sf_dir,
+        ["orders", "customer"],
+        [
+            f"SELECT 'dim' AS kind, c_custkey AS key, "
+            f"       CAST(NULL AS BIGINT) AS fact_id "
+            f"FROM customer WHERE c_custkey % 4 = {k} "
+            f"UNION ALL "
+            f"SELECT 'fact' AS kind, o_custkey AS key, o_orderkey AS fact_id "
+            f"FROM orders "
+            f"WHERE {_FACT_PRED} AND o_orderkey % 3 = {k}"
+            for k in range(_N_BATCHES)
+        ],
+    )
     schema = T.StructType(
         [
             T.StructField("kind", T.StringType()),
@@ -228,22 +193,15 @@ def streaming_ri_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("fact_id", T.LongType()),
         ]
     )
-    stream = StreamDFReader(
-        spark=spark,
-        format=Parquet(),
-        source_path=source,
-        df_schema=schema,
-        options={"maxFilesPerTrigger": "1"},
-    ).run()
-    query = StreamDFWriter(
-        foreach_batch=ri_monitor_batch_fn(
-            os.path.join(work, "keys"),
-            os.path.join(work, "pending"),
-            os.path.join(work, "events"),
+    work = run_foreach_batch(
+        "streaming_ri_monitor",
+        batch_stream(spark, source, schema),
+        lambda work_dir: ri_monitor_batch_fn(
+            os.path.join(work_dir, "keys"),
+            os.path.join(work_dir, "pending"),
+            os.path.join(work_dir, "events"),
         ),
-        options=StreamWriteOptions(trigger={"availableNow": True}),
-    ).run(stream)
-    query.awaitTermination()
+    )
     events = spark.read.parquet(os.path.join(work, "events"))
     return _status_out(ri_final_status(events))
 

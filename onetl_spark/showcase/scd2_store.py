@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.cdc import scd2_apply_batch, scd2_batch_audit
+from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views
 
 SPARK_QUERIES: dict = {}
@@ -188,77 +189,40 @@ ORDER BY batch_id, verdict
 """
 
 
-def _stage_change_batches(sf_dir: str) -> str:
-    """Stage the sampled change feed as THREE parquet files (the Jan 11 /
-    Jan 21 time split, mtime-ordered) in one stream-source directory, so
-    the file stream replays the three load windows deterministically.
-    ``ts`` is staged as epoch microseconds (BIGINT) and rebuilt with
-    ``timestamp_micros`` on the Spark side — timezone-proof and
-    sidesteps the INT64-nanos parquet footgun."""
-    import hashlib
+def streaming_scd2_store(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dimension-maintenance loop as a REAL streaming pipeline
+    (`streaming/cdc_store.py`): the sampled change feed replayed as the
+    three load windows (the Jan 11 / Jan 21 time split) through
+    ``foreachBatch`` with an external parquet SCD2 store — batch 0
+    bootstraps, later batches fold in. ``ts`` is staged as epoch
+    microseconds (BIGINT) and rebuilt with ``timestamp_micros`` on the
+    Spark side — timezone-proof and sidesteps the INT64-nanos parquet
+    footgun. Same output contract — and the SAME ORACLE — as
+    `incremental_scd2_state`: the streaming store must reproduce the
+    full-history build exactly."""
+    from pyspark.sql import types as T
 
-    import duckdb
+    from onetl_spark.streaming.cdc_store import scd2_store_batch_fn
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    src = os.path.join(sf_dir, "events.parquet")
-    src_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:10]
-    base = os.path.join(
-        repo,
-        ".scratch",
-        "stream_src_scd2",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{src_key}",
-    )
-    names = [os.path.join(base, f"{k}_window.parquet") for k in range(3)]
+    ensure_views(spark, sf_dir)
     preds = [
         f"ts_c < TIMESTAMP '{_CUT1}'",
         f"ts_c >= TIMESTAMP '{_CUT1}' AND ts_c < TIMESTAMP '{_CUT2}'",
         f"ts_c >= TIMESTAMP '{_CUT2}'",
     ]
-    stamp = os.path.getmtime(src)
-    if all(os.path.exists(p) for p in names) and os.path.getmtime(base) >= stamp:
-        return base
-    os.makedirs(base, exist_ok=True)
-    con = duckdb.connect()
-    for k, (p, pred) in enumerate(zip(names, preds)):
-        con.execute(
-            f"COPY (SELECT user_id, event_id, event_type, "
+    source = stage_batches(
+        "scd2",
+        sf_dir,
+        ["events"],
+        [
+            f"SELECT user_id, event_id, event_type, "
             f"CAST(epoch_us(ts_c) AS BIGINT) AS ts_us "
             f"FROM (SELECT *, CAST(ts AS TIMESTAMP) AS ts_c "
-            f"      FROM read_parquet('{src}') WHERE {_USER_PRED}) t "
-            f"WHERE {pred}) "
-            f"TO '{p}' (FORMAT PARQUET)"
-        )
-        os.utime(p, (stamp + 1000 * k, stamp + 1000 * k))
-    con.close()
-    os.utime(base, (stamp, stamp))
-    return base
-
-
-def streaming_scd2_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dimension-maintenance loop as a REAL streaming pipeline
-    (`streaming/cdc_store.py`): the change feed replayed as three
-    deterministic micro-batches through ``foreachBatch`` with an
-    external parquet SCD2 store — batch 0 bootstraps, later batches fold
-    in. Same output contract — and the SAME ORACLE — as
-    `incremental_scd2_state`: the streaming store must reproduce the
-    full-history build exactly."""
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from onetl_spark.file.format.parquet import Parquet
-    from onetl_spark.streaming.cdc_store import scd2_store_batch_fn
-    from onetl_spark.streaming.reader import StreamDFReader
-    from onetl_spark.streaming.writer import StreamDFWriter, StreamWriteOptions
-
-    ensure_views(spark, sf_dir)
-    source = _stage_change_batches(sf_dir)
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.path.join(repo, ".scratch")
-    os.makedirs(scratch, exist_ok=True)
-    work = tempfile.mkdtemp(prefix="scd2_store_stream_", dir=scratch)
-    store_dir = os.path.join(work, "store")
-
+            f"      FROM events WHERE {_USER_PRED}) t "
+            f"WHERE {pred}"
+            for pred in preds
+        ],
+    )
     schema = T.StructType(
         [
             T.StructField("user_id", T.LongType()),
@@ -267,22 +231,18 @@ def streaming_scd2_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("ts_us", T.LongType()),
         ]
     )
-    stream = StreamDFReader(
-        spark=spark,
-        format=Parquet(),
-        source_path=source,
-        df_schema=schema,
-        options={"maxFilesPerTrigger": "1"},
-    ).run()
+    stream = batch_stream(spark, source, schema)
     stream = stream.withColumn("ts", F.timestamp_micros(F.col("ts_us"))).drop(
         "ts_us"
     )
-    query = StreamDFWriter(
-        foreach_batch=scd2_store_batch_fn(store_dir, _KEYS, _TS, _VALUE, _TIE),
-        options=StreamWriteOptions(trigger={"availableNow": True}),
-    ).run(stream)
-    query.awaitTermination()
-    return _store_out(spark.read.parquet(store_dir))
+    work = run_foreach_batch(
+        "streaming_scd2_store",
+        stream,
+        lambda work_dir: scd2_store_batch_fn(
+            os.path.join(work_dir, "store"), _KEYS, _TS, _VALUE, _TIE
+        ),
+    )
+    return _store_out(spark.read.parquet(os.path.join(work, "store")))
 
 
 def el_scd2_dimension_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,13 @@ to make streaming semantics batch-verifiable: AvailableNow terminates,
 and complete/append output modes below are chosen so the final table is
 independent of micro-batch boundaries.
 
+Sink lifecycle: each memory sink is a temp view named after its query,
+so a re-run replaces the view and the previous sink's driver-held rows
+become garbage; its checkpoint is Spark's temporary one, deleted when
+the query stops. The ``foreachBatch`` queries (CDC apply, rollup
+maintenance) run through `showcase/replay.py`, whose per-query work dir
+is cleared on every run.
+
 Scale notes (the operators themselves, not this harness, are the product):
 watermarked state is bounded per key/window; the memory sink is only the
 test harness — production sinks are files/Kafka via the same writer.
@@ -16,7 +23,6 @@ test harness — production sinks are files/Kafka via the same writer.
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from onetl_spark.file.format.parquet import Parquet
+from onetl_spark.showcase.replay import run_foreach_batch, staging_dir
 from onetl_spark.showcase.sessions import SESSION_GAP_MIN
 from onetl_spark.showcase.util import dsum, sql_dsum, sql_fsig
 from onetl_spark.streaming.ops import (
@@ -35,8 +42,6 @@ from onetl_spark.streaming.ops import (
 )
 from onetl_spark.streaming.reader import StreamDFReader
 from onetl_spark.streaming.writer import StreamDFWriter, StreamWriteOptions
-
-_SINK_COUNTER = itertools.count()
 
 _SCHEMA_CACHE: dict[tuple[str, float], T.StructType] = {}
 
@@ -63,29 +68,19 @@ def _stage_source_dir(sf_dir: str) -> str:
     """The file-stream source requires a DIRECTORY; stage the events
     parquet into a scratch dir (symlink — no data copy).
 
-    Three hard-won rules (a RELATIVE ``--sf .scratch/testdata/sf1`` made
-    13 streaming queries fail their sf1 sweep with dangling links):
-    the symlink target must be ABSOLUTE (a relative target resolves
-    against the link's own directory, not the caller's CWD); the cache
-    dir is keyed by a hash of the absolute source path, not just the sf
-    basename (two roots sharing a basename must not alias — the
-    `_stage_doc_batches` lesson); and a dangling link is healed, since
-    ``os.path.exists`` is False for it but the link inode still blocks
-    ``os.symlink``."""
-    import hashlib
-
+    Two hard-won rules (a RELATIVE ``--sf .scratch/testdata/sf1`` made
+    13 streaming queries fail their sf1 sweep with dangling links): the
+    symlink target must be ABSOLUTE (a relative target resolves against
+    the link's own directory, not the caller's CWD); and a dangling link
+    is healed, since ``os.path.exists`` is False for it but the link
+    inode still blocks ``os.symlink``. The dir is keyed like every staged
+    stream source (`replay.staging_dir`)."""
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    src_key = hashlib.md5(src.encode()).hexdigest()[:10]
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_src",
-        f"{os.path.basename(os.path.normpath(sf_dir))}_{src_key}",
-    )
+    base = staging_dir("events", sf_dir, ["events"])
     os.makedirs(base, exist_ok=True)
     link = os.path.join(base, "events.parquet")
     if os.path.lexists(link) and not os.path.exists(link):
-        os.remove(link)  # dangling leftover from a pre-fix run
+        os.remove(link)
     if not os.path.exists(link):
         try:
             os.symlink(src, link)
@@ -112,11 +107,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def _run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
+def _run_to_table(name: str, stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Execute a streaming frame to completion (AvailableNow) into a
-    memory sink and return the materialized sink table."""
-    spark = stream_df.sparkSession
-    name = f"stream_sink_{os.getpid()}_{next(_SINK_COUNTER)}"
+    memory sink named after the query ``name`` and return the sink table.
+    A re-run replaces the temp view ``name``, so the previous run's sink
+    and its driver-held rows become garbage instead of piling up."""
     query = StreamDFWriter(
         format="memory",
         options=StreamWriteOptions(
@@ -126,7 +121,7 @@ def _run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
         ),
     ).run(stream_df)
     query.awaitTermination()
-    return spark.table(name)
+    return stream_df.sparkSession.table(name)
 
 
 def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,7 +140,7 @@ def streaming_windowed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="30 minutes",
         group_by=("event_type",),
     )
-    return _run_to_table(out, "complete")
+    return _run_to_table("streaming_windowed_agg", out, "complete")
 
 
 STREAMING_WINDOWED_AGG_SQL = f"""
@@ -176,7 +171,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="30 minutes",
     )
     out = out.select("user_id", F.col("session_start"), "n_events", "total_value")
-    return _run_to_table(out, "complete")
+    return _run_to_table("streaming_sessionize", out, "complete")
 
 
 STREAMING_SESSIONIZE_SQL = f"""
@@ -214,7 +209,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="36500 days",
     )
     out = deduped.select("user_id", "event_type")
-    return _run_to_table(out, "append")
+    return _run_to_table("streaming_dedup_keys", out, "append")
 
 
 STREAMING_DEDUP_SQL = """
@@ -233,7 +228,7 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.round(F.col("value") * 100).alias("cents"),
     )
     updates = stateful_running_agg(cents, key_cols=["event_type"], value_col="cents")
-    sink = _run_to_table(updates, "update")
+    sink = _run_to_table("streaming_stateful_totals", updates, "update")
     return (
         sink.groupBy("event_type")
         .agg(
@@ -272,7 +267,7 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("value").alias("total_value"),
         )
     )
-    return _run_to_table(out, "complete")
+    return _run_to_table("streaming_enriched_counts", out, "complete")
 
 
 STREAMING_ENRICHED_SQL = f"""
@@ -319,7 +314,7 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select(
         F.col("c_user").alias("user_id"), "click_id", "purchase_id",
     )
-    return _run_to_table(joined, "append")
+    return _run_to_table("streaming_click_purchase_join", joined, "append")
 
 
 STREAMING_CLICK_PURCHASE_SQL = """
@@ -360,8 +355,6 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative and commutative across micro-batches, so the final state
     is identical however AvailableNow splits the input; deletes filter at
     read time. Same oracle as the batch cdc_latest_state query."""
-    import uuid
-
     from onetl_spark.operators.cdc import cdc_latest_snapshot
     from onetl_spark.streaming.ops import (
         idempotent_batch_sink,
@@ -369,33 +362,21 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_state,
     )
 
-    events = _events_stream(spark, sf_dir)
-    run_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "cdc_apply",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex[:8]}",
+    def make_batch_fn(work_dir: str):
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            prev, _last = load_published_state(spark, work_dir)
+            state = batch_df if prev is None else prev.unionByName(batch_df)
+            snap = cdc_latest_snapshot(state, ["user_id"], ["ts", "event_id"])
+            # crash-atomic versioned publish: a delete-then-swap window would
+            # lose the accumulated target on a crash between the two calls
+            publish_state(snap, work_dir, batch_id)
+
+        return idempotent_batch_sink(merge_batch, os.path.join(work_dir, "ledger"))
+
+    work = run_foreach_batch(
+        "streaming_cdc_apply", _events_stream(spark, sf_dir), make_batch_fn
     )
-    os.makedirs(run_dir, exist_ok=True)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        prev, _last = load_published_state(spark, run_dir)
-        state = batch_df if prev is None else prev.unionByName(batch_df)
-        snap = cdc_latest_snapshot(state, ["user_id"], ["ts", "event_id"])
-        # crash-atomic versioned publish: a delete-then-swap window would
-        # lose the accumulated target on a crash between the two calls
-        publish_state(snap, run_dir, batch_id)
-
-    query = StreamDFWriter(
-        foreach_batch=idempotent_batch_sink(merge_batch, os.path.join(run_dir, "ledger")),
-        options=StreamWriteOptions(
-            output_mode="append",
-            trigger={"availableNow": True},
-            checkpoint_location=os.path.join(run_dir, "ckpt"),
-        ),
-    ).run(events)
-    query.awaitTermination()
-    final, _ = load_published_state(spark, run_dir)
+    final, _ = load_published_state(spark, work)
     return (
         final
         .filter("event_type <> 'error'")
@@ -427,7 +408,7 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="30 minutes",
         group_by=("event_type",),
     )
-    return _run_to_table(out, "complete")
+    return _run_to_table("streaming_sliding_window", out, "complete")
 
 
 # every event belongs to exactly the two 30-minute-grid starts within
@@ -491,7 +472,7 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     ).select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
-    return _run_to_table(joined, "append")
+    return _run_to_table("streaming_left_outer_join", joined, "append")
 
 
 STREAMING_LEFT_OUTER_SQL = """
@@ -533,8 +514,6 @@ def streaming_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     data and must hash-match. This is the production pattern for keeping
     a 100-TB rollup current: the stream touches each event once; history
     is never re-scanned."""
-    import uuid
-
     from onetl_spark.operators.maintenance import (
         aggregate_state,
         merge_aggregate_state,
@@ -545,37 +524,25 @@ def streaming_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_state,
     )
 
-    events = _events_stream(spark, sf_dir)
-    run_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "rollup_maint",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex[:8]}",
+    def make_batch_fn(work_dir: str):
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            prev, last_batch = load_published_state(spark, work_dir)
+            if last_batch >= batch_id:
+                return  # this epoch is already folded into the published state
+            state = aggregate_state(batch_df, ["event_type"], "value")
+            if prev is not None:
+                state = merge_aggregate_state(prev, state, ["event_type"])
+            # crash-atomic: versioned dir + pointer flip (never delete-then-swap
+            # — the additive merge is NOT idempotent, so a lost state directory
+            # would silently rebuild from one batch)
+            publish_state(state, work_dir, batch_id)
+
+        return idempotent_batch_sink(merge_batch, os.path.join(work_dir, "ledger"))
+
+    work = run_foreach_batch(
+        "streaming_rollup_maintenance", _events_stream(spark, sf_dir), make_batch_fn
     )
-    os.makedirs(run_dir, exist_ok=True)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        prev, last_batch = load_published_state(spark, run_dir)
-        if last_batch >= batch_id:
-            return  # this epoch is already folded into the published state
-        state = aggregate_state(batch_df, ["event_type"], "value")
-        if prev is not None:
-            state = merge_aggregate_state(prev, state, ["event_type"])
-        # crash-atomic: versioned dir + pointer flip (never delete-then-swap
-        # — the additive merge is NOT idempotent, so a lost state directory
-        # would silently rebuild from one batch)
-        publish_state(state, run_dir, batch_id)
-
-    query = StreamDFWriter(
-        foreach_batch=idempotent_batch_sink(merge_batch, os.path.join(run_dir, "ledger")),
-        options=StreamWriteOptions(
-            output_mode="append",
-            trigger={"availableNow": True},
-            checkpoint_location=os.path.join(run_dir, "ckpt"),
-        ),
-    ).run(events)
-    query.awaitTermination()
-    final, _ = load_published_state(spark, run_dir)
+    final, _ = load_published_state(spark, work)
     return (
         final
         .select(
@@ -618,7 +585,7 @@ def streaming_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value",
         edges=_HIST_EDGES,
     )
-    sink = _run_to_table(updates, "update")
+    sink = _run_to_table("streaming_value_histogram", updates, "update")
     final = sink.groupBy("event_type").agg(
         F.max_by("bin_counts", "n_total").alias("_bc")
     )
@@ -670,7 +637,7 @@ def streaming_type_topk_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value",
         k=3,
     )
-    sink = _run_to_table(updates, "update")
+    sink = _run_to_table("streaming_type_topk_values", updates, "update")
     final = sink.groupBy("event_type").agg(
         F.max_by("topk_values", "n_seen").alias("_tv")
     )
@@ -720,7 +687,7 @@ def streaming_rolling_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = stateful_daily_stats(
         prepped, key_cols=["event_type"], max_days=_DRIFT_MAX_DAYS
     )
-    sink = _run_to_table(updates, "update")
+    sink = _run_to_table("streaming_rolling_drift", updates, "update")
     final = sink.groupBy("event_type").agg(
         F.max_by(
             F.struct("days", "day_n", "day_sum_micro", "day_sq_micro"), "n_total"

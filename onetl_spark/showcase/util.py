@@ -12,6 +12,7 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.connections.catalog import register_parquet_views
+from onetl_spark.spark_utils import fsig, sql_fsig  # noqa: F401  (re-exported)
 
 # current sf_dir per live session — NOT a seen-set: a (spark, dir) pair
 # being "seen before" says nothing about what the views point at NOW.
@@ -41,29 +42,6 @@ def davg(col: Column | str, scale: int = 6) -> Column:
     """Deterministic average = decimal sum / count, evaluated in double."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(38,{scale})")).cast("double") / F.count(F.lit(1))
-
-
-def fsig(col: Column | str) -> Column:
-    """Magnitude-robust engine-stable rounding:
-    ``round(float32(x), 9) + 0.0``.
-
-    The float32 round-trip handles LARGE magnitudes: ``round(x, 9)`` is a
-    NO-OP above ~1e6 (a 1.4e7 double has no 9th decimal place inside
-    double precision), so cross-engine last-ULP arithmetic differences
-    survive it — the `events_value_changepoint` r10 driver red. IEEE
-    double→float32 conversion (round-to-nearest-even) is bit-identical in
-    every engine and keeps ~7 significant digits at ANY magnitude. But it
-    is RELATIVE, so alone it cannot canonicalize NEAR-ZERO cancellation
-    (0.0 in one engine vs ~2e-12 in another survive float32 distinctly);
-    the composed absolute 9-dp rounding maps that band onto one grid, and
-    the + 0.0 kills a -0.0/0.0 split. Mirror in DuckDB with
-    :func:`sql_fsig`."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast("float").cast("double"), 9) + F.lit(0.0)
-
-
-def sql_fsig(expr: str) -> str:
-    return f"(round(CAST(CAST({expr} AS FLOAT) AS DOUBLE), 9) + 0.0)"
 
 
 def sql_dsum(expr: str, scale: int = 6) -> str:

@@ -28,13 +28,13 @@ from pyspark.sql import functions as F
 
 from onetl_spark.llm.ann_store import (
     _K,
-    _fsig,
     _pts,
     assign_to_centroids,
     centroid_seed_store,
     fold_into_store,
     store_centroids,
 )
+from onetl_spark.spark_utils import fsig
 from onetl_spark.streaming.incremental import _store_exists
 
 __all__ = ["ann_index_batch_fn"]
@@ -74,7 +74,7 @@ def ann_index_batch_fn(
             F.lit(int(batch_id)).cast("int").alias("batch_id"),
             F.col("_id").alias(id_col),
             "cluster",
-            _fsig(F.col("_d")).alias("dist"),
+            fsig(F.col("_d")).alias("dist"),
         ).write.mode("append").parquet(verdict_dir)
         merged = fold_into_store(a, stored).localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(moments_path)

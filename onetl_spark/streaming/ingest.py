@@ -31,8 +31,9 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from onetl_spark.operators.sketch_store import _fsig, hll_grid_estimate
+from onetl_spark.operators.sketch_store import hll_grid_estimate
 from onetl_spark.operators.sketches import hll_registers_by
+from onetl_spark.spark_utils import fsig
 from onetl_spark.streaming.incremental import _store_exists
 
 __all__ = ["ingest_monitor_batch_fn"]
@@ -122,7 +123,7 @@ def ingest_monitor_batch_fn(
             *group_cols,
             "batch_rows",
             "cum_distinct",
-            _fsig(
+            fsig(
                 F.col("cum_distinct") - F.coalesce(F.col("_prior"), F.lit(0.0))
             ).alias("new_distinct"),
         )
@@ -139,7 +140,7 @@ def ingest_monitor_batch_fn(
             "batch_rows",
             "cum_distinct",
             "new_distinct",
-            F.when(F.col("batch_rows") > 0, _fsig(rate)).alias("returning_rate"),
+            F.when(F.col("batch_rows") > 0, fsig(rate)).alias("returning_rate"),
         )
         series.write.mode("append").parquet(series_dir)
         merged.write.mode("overwrite").parquet(reg_path)

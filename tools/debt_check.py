@@ -22,11 +22,8 @@ Run: python tools/debt_check.py   (exit 1 on violation)
 
 from __future__ import annotations
 
-import glob
-import json
 import math
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,32 +33,11 @@ WINDOW = 50
 SLACK = 1  # rounds of grace for freshly-added never-green entries
 
 
-def last_green_rounds() -> tuple[dict[str, int], int]:
-    """name -> newest round with a hash_match green row; plus newest round."""
-    last: dict[str, int] = {}
-    newest = 0
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        newest = max(newest, rnd)
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                last[name] = max(last.get(name, 0), rnd)
-    return last, newest
-
-
 def check() -> list[str]:
-    from onetl_spark.showcase import all_queries
+    from onetl_spark.showcase import all_queries, correctness_history
 
     names = list(all_queries())
-    last, newest = last_green_rounds()
+    last, newest = correctness_history()
     current = newest + 1  # the round about to run
     max_age = math.ceil(len(names) / WINDOW) + SLACK
 

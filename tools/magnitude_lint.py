@@ -8,7 +8,7 @@ output (r10: `events_value_changepoint`, the registry's only driver-red
 row). This lint runs every query's DuckDB oracle at sf0.01 and flags any
 REAL-valued output column whose max |value| ≥ THRESHOLD — exactly the
 rows where the 9-dp rule is inert and a significant-digit discipline
-(`showcase/util.fsig`, the float32 round-trip) or a magnitude-bounded
+(`spark_utils.fsig`, the float32 round-trip) or a magnitude-bounded
 reformulation (per-point MSE, ratios) is required.
 
 Adjudication notes recorded per flag:
