@@ -18,379 +18,56 @@ import os
 import sys
 import time
 
+from onetl_spark.connections.catalog import TESTDATA_TABLES
 from onetl_spark.metrics import SparkCommandMetrics, SparkMetricsRecorder
 from onetl_spark.session import build_session
+from onetl_spark.showcase import registered
 
-HEADLINE = [
-    "brand_bradley_terry",
-    "brand_bt_upset_rate",
-    "doc_preference_pairs",
-    "source_fightin_words",
-    "orders_price_date_skyline",
-    "events_revenue_bridge",
-    "orders_price_ending_audit",
-    "q10_returned_items",
-    "events_scd2_point_in_time",
-    "events_time_decay_attribution",
-    "supplier_personalized_pagerank",
-    "events_value_anderson_darling",
-    "events_value_energy_distance",
-    "events_value_cvm",
-    "source_loo_lm_value",
-    "events_piecewise_trend",
-    "events_purchase_auc_delong",
-    "events_time_grouping_sets",
-    "region_nation_revenue_share",
-    "order_linenumber_gaps",
-    "q18_large_volume_customer",
-    "events_value_wasserstein",
-    "bpe_fertility_by_lang",
-    "dedup_savings_report",
-    "fk_candidate_profile",
-    "surrogate_key_audit",
-    "user_rate_eb_shrinkage",
-    "events_did_estimate",
-    "user_uplift_by_band",
-    "events_conformal_coverage",
-    "events_bootstrap_mean_ci",
-    "events_value_permutation_test",
-    "kmeans_cluster_profile",
-    "user_state_scd2",
-    "order_brand_triples",
-    "user_golden_record",
-    "events_holt_trend",
-    "orders_cube_priority_status",
-    "embedding_kmeans_clusters",
-    "brand_ranking_ndcg",
-    "orders_backlog_curve",
-    "doc_length_qq_sources",
-    "embedding_centroid_silhouette",
-    "purchase_rate_by_value_bin",
-    "events_weekly_psi_trajectory",
-    "interarrival_ks_exponential",
-    "events_value_qq_normal",
-    "streaming_type_topk_values",
-    "events_ses_level",
-    "orders_month_seasonality",
-    "events_type_kruskal_wallis",
-    "events_value_cliffs_delta",
-    "events_value_jarque_bera",
-    "events_type_levene",
-    "events_type_tukey_hsd",
-    "user_click_purchase_mcnemar",
-    "lang_id_kappa",
-    "events_daily_durbin_watson",
-    "events_daily_runs_test",
-    "events_value_hellinger",
-    "user_activity_dispersion",
-    "events_type_share_bh",
-    "events_purchase_pr_auc",
-    "events_purchase_calibration",
-    "part_adamic_adar",
-    "supplier_nation_modularity",
-    "events_purchase_info_gain",
-    "orders_priority_trend",
-    "events_type_friedman",
-    "source_token_diversity",
-    "segment_mh_odds_ratio",
-    "user_engagement_cronbach",
-    "event_markov_stationary",
-    "orders_systematic_sample",
-    "events_hourly_interpolation",
-    "order_to_ship_latency",
-    "priority_region_residuals",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "window_top_order_per_customer",
-    "window_running_total",
-    "topk_expensive_orders",
-    "agg_rollup_status_priority",
-    "setops_high_value_not_building",
-    "semi_anti_join_customers",
-    "events_daily_stats",
-    "dbreader_projection_filter",
-    "partitioned_scan_hash",
-    "text_token_stats",
-    "text_quality",
-    "text_lang_id",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_cosine_topk",
-    "embedding_near_dup_pairs",
-    "multimodal_features",
-    "asof_join_events",
-    "range_join_events",
-    "dedup_survivors",
-    "text_tfidf_top_terms",
-    "events_sessionization",
-    "ann_ivf_topk",
-    "training_corpus_pipeline",
-    "ann_ivf_nprobe",
-    "ann_topk_per_query",
-    "streaming_windowed_agg",
-    "streaming_sessionize",
-    "q7_nation_volume",
-    "q21_last_shipper",
-    "events_pivot_by_type",
-    "ann_quantized_topk",
-    "dedup_minhash_by_lang",
-    "q2_min_cost_supplier",
-    "sequence_packing",
-    "doc_repetition_stats",
-    "pii_redaction",
-    "cdc_latest_state",
-    "merge_upsert_orders",
-    "benchmark_decontamination",
-    "corpus_stats_by_lang",
-    "document_chunks",
-    "segment_dedup_clean",
-    "domain_reweight_sample",
-    "top_terms_by_lang",
-    "salted_join_order_volume",
-    "incremental_daily_rollup",
-    "semantic_near_dup",
-    "simhash_near_dup",
-    "multimodal_ahash",
-    "hybrid_search_topk",
-    "rolling_24h_user_value",
-    "funnel_signup_view_purchase",
-    "customer_rfm_segments",
-    "dedup_components_star",
-    "snapshot_diff_orders",
-    "user_retention_cohorts",
-    "last_touch_attribution",
-    "daily_value_anomalies",
-    "events_json_props",
-    "supplier_triangle_counts",
-    "supplier_pagerank",
-    "user_purchase_daily_ffill",
-    "leakage_safe_split_counts",
-    "corpus_budget_trim",
-    "encoding_quality_stats",
-    "training_shuffle_shards",
-    "asof_join_tolerance",
-    "ann_two_stage_rerank",
-    "ann_projected_topk",
-    "gopher_rules_filter",
-    "dedup_normalized",
-    "quality_quantile_filter",
-    "length_bucket_stats",
-    "unigram_logprob_quality",
-    "knn_label_vote",
-    "dedup_incremental_batch",
-    "streaming_sliding_window",
-    "temperature_mix_sample",
-    "dedup_keep_longest",
-    "duplicate_ngram_coverage",
-    "supplier_bfs_hops",
-    "minhash_calibration",
-    "supplier_fuzzy_linkage",
-    "span_corruption_stats",
-    "doc_lang_mix",
-    "events_ewma_daily",
-    "events_user_overlap_kmv",
-    "markov_next_event_eval",
-    "doc_readability",
-    "lineitem_skew_profile",
-    "seasonal_forecast_eval",
-    "ab_value_ttest",
-    "customer_l_diversity",
-    "bpe_merge_candidates",
-    "embedding_decontamination",
-    "multimodal_audio_energy",
-    "streaming_left_outer_join",
-    "ann_pq_topk",
-    "supplier_random_walks",
-    "corpus_curation_funnel",
-    "orders_global_row_index",
-    "events_value_deciles",
-    "supplier_communities",
-    "bigram_logprob_quality",
-    "events_theilsen_trend",
-    "events_type_correlations",
-    "events_lag_correlation",
-    "multimodal_scene_changes",
-    "orders_percent_rank",
-    "events_value_cume_dist",
-    "events_value_psi",
-    "bpe_token_encode",
-    "pq_encode_codes",
-    "hard_negative_mining",
-    "mmr_diversified_topk",
-    "lineitem_orders_integrity",
-    "events_stats_drift",
-    "session_top_paths",
-    "orders_zorder_cells",
-    "supplier_degree_assortativity",
-    "label_centroid_separability",
-    "doc_char_entropy",
-    "rake_top_keywords",
-    "incremental_rollup_merge",
-    "bigram_pmi_collocations",
-    "streaming_rollup_maintenance",
-    "user_value_gini",
-    "position_attribution_by_type",
-    "embedding_top_component",
-    "embedding_debias_residuals",
-    "events_value_winsorized",
-    "events_value_ks_drift",
-    "events_value_mannwhitney",
-    "events_type_segment_cramers_v",
-    "orders_benford_audit",
-    "event_type_lift",
-    "supplier_kcore",
-    "events_user_cms_counts",
-    "events_user_hll_distinct",
-    "user_activity_spearman",
-    "corpus_zipf_fit",
-    "embedding_dim_health",
-    "lang_id_confusion",
-    "events_type_twap",
-    "ab_conversion_ztest",
-    "source_distinct_ngrams",
-    "events_hll_partition_merge",
-    "part_cooccurrence_assortativity",
-    "png_roundtrip_ahash",
-    "jpeg_roundtrip_ahash",
-    "customer_bloom_prefilter",
-    "events_type_ols_trend",
-    "doc_lang_source_mi",
-    "lineitem_weighted_median_price",
-    "events_daily_mad_outliers",
-    "doc_source_woe_iv",
-    "events_daily_ohlc",
-    "user_interarrival_burstiness",
-    "markov_calibration",
-    "events_value_quantile_sketch",
-    "wav_roundtrip_energy",
-    "part_ktruss",
-    "part_harmonic_centrality",
-    "events_purchase_auc",
-    "events_purchase_gains",
-    "events_daily_acf",
-    "doc_winnow_overlap",
-    "frequent_event_sequences",
-    "corpus_textrank_keywords",
-    "user_churn_kaplan_meier",
-    "part_weighted_sssp",
-    "funnel_time_to_convert",
-    "corpus_bm25_topk",
-    "customer_supplier_hits",
-    "events_value_anova",
-    "lineitem_qty_line_kendall",
-    "blocklist_phrase_hits",
-    "part_copurchase_topk",
-    "embedding_geometric_median",
-    "corpus_heaps_law",
-    "source_js_divergence",
-    "supplier_link_prediction",
-    "user_churn_nelson_aalen",
-    "source_burrows_delta",
-    "supplier_rich_club",
-    "term_burstiness",
-    "event_type_target_encoding",
-    "ann_ivf_recall",
-    "events_hour_circular_stats",
-    "events_extreme_value_fit",
-    "segment_purchase_wilson_ci",
-    "embedding_second_component",
-    "ab_value_cuped",
-    "event_entropy_rate",
-    "user_activity_negbinom_fit",
-    "supplier_degree_powerlaw",
-    "part_abc_classification",
-    "churn_logrank_test",
-    "part_price_index",
-    "ab_stratified_adjustment",
-    "source_lm_transfer_matrix",
-    "streaming_value_histogram",
-    "supplier_pagerank_weighted",
-    "events_partial_correlation",
-    "supplier_diameter_sweep",
-    "bigram_llr_collocations",
-    "part_return_rate_shrunk",
-    "corpus_novelty_decay",
-    "session_similarity_pairs",
-    "order_basket_lift_rules",
-    "conversion_sprt_trajectory",
-    "events_daily_value_bands",
-    "events_hurst_exponent",
-    "user_value_theil_decomposition",
-    "user_spend_lorenz",
-    "user_capture_recapture",
-    # r10 additions: retrieval-eval + unicode-hygiene classes
-    # (auto-included per the BENCH_NOTES inclusion rule)
-    "ann_recall_by_label",
-    "ann_mrr",
-    "ivf_quantization_ledger",
-    "ivf_probe_sweep",
-    "doc_script_mix_profile",
-    "doc_unicode_hygiene_audit",
-    "doc_confusable_screen",
-    "doc_nfc_normalization_delta",
-    "semantic_near_dup_banded",
-    "doc_sanitize_report",
-    "banded_near_dup_recall",
-    # r10 additions: DSIR importance-resampling class (auto-included)
-    "dsir_importance_scores",
-    "dsir_selection_report",
-    "dsir_composition_shift",
-    # r10 additions: changepoint/drift-monitoring class (auto-included)
-    "events_cusum_drift",
-    "events_value_changepoint",
-    "streaming_rolling_drift",
-    # r11 additions: model-eval calibration class (auto-included)
-    "events_score_reliability",
-    "events_score_calibration_report",
-    "events_calibration_drift_weekly",
-    # r11 additions: cross-batch incremental dedup class (auto-included)
-    "incremental_dedup_verdicts",
-    "incremental_dedup_report",
-    "streaming_incremental_dedup",
-    "events_calibration_drift_cusum",
-    # r12 additions: incremental decontamination, sketch-store ingest
-    # monitoring, EL+dedup composition (auto-included)
-    "incremental_decon_verdicts",
-    "incremental_decon_report",
-    "el_incremental_dedup_pipeline",
-    "ingest_hll_series",
-    "ingest_monitor_cusum",
-    "streaming_ingest_monitor",
-    # r12 additions: differentially-private release class (auto-included)
-    "dp_active_users_by_type",
-    "dp_value_sum_by_type",
-    "dp_release_audit",
-    # r12 additions: incremental ANN index maintenance (auto-included)
-    "incremental_ann_verdicts",
-    "incremental_ann_drift_report",
-    "streaming_ann_index",
-    # r12 additions: incremental SCD2 dimension store, incremental
-    # referential-integrity monitoring (auto-included)
-    "incremental_scd2_state",
-    "incremental_scd2_audit",
-    "streaming_scd2_store",
-    "incremental_ri_verdicts",
-    "incremental_ri_report",
-    "streaming_ri_monitor",
-    "el_scd2_dimension_pipeline",
-]
+_PLUMBING = "plumbing probe: its wall-clock is API dispatch, not data"
+_VARIANT = "early or duplicate variant of a headline entry of the same shape"
+_UTILITY = "sub-second utility op that its headline family times at a heavier setting"
 
-# Methodology (round 2+): fixed query order (list above), one untimed
-# warm-up per major input path (TPC-H parquet, documents, embeddings)
-# PLUS one streaming query (state-store / checkpoint / micro-batch
-# machinery costs ~6s one-time — measured 8.9s cold vs 2.7s warm), so
-# JVM/codegen/parquet-footer warm-up doesn't land in the first timed
-# queries; cache cleared between queries. Round-1 drift (~13%) traced to
-# warm-up ordering: only q1 was warmed, so the first documents/embeddings
-# queries paid one-time costs.
-WARMUP = [
-    "q1_pricing_summary",
-    "text_token_stats",
-    "ann_cosine_topk",
-    "streaming_dedup_keys",
-]
+# The registry queries the bench leaves out, each with its reason
+# (BENCH_NOTES.md "HEADLINE inclusion rule"). Every other registered
+# query is benched, so a new query is headlined unless it is named here.
+EXCLUDED = {
+    **dict.fromkeys([
+        "dbreader_window_predicate", "dbreader_minmax_probe", "snapshot_batch_union",
+        "incremental_batch_union", "incremental_resume", "partitioned_scan_mod",
+        "write_roundtrip_modes", "filedf_csv_roundtrip", "dbreader_has_data",
+        "jdbc_live_roundtrip", "jdbc_live_incremental", "bucketed_write_roundtrip",
+        "corpus_split_counts", "file_transfer_plan", "file_upload_move_result",
+    ], _PLUMBING),
+    **dict.fromkeys([
+        # classic TPC-H forms whose analytics-extended versions are headlined
+        "q6_forecast_revenue", "q14_promo_revenue", "q18_large_volume_customers",
+        "q4_order_priority", "q12_priority_shipping", "q13_customer_order_distribution",
+        "q15_top_supplier", "q17_small_quantity_revenue", "q19_disjunctive_revenue",
+        "q22_inactive_customers", "q8_market_share", "q9_profit_by_nation_year",
+        "q16_supplier_part_counts", "q20_bulk_suppliers", "q11_important_parts",
+        "q10_returned_item_reporting",
+        # the headlined drift/stats family times the same scan
+        "events_value_percentiles", "events_value_histogram", "event_value_mad",
+        "events_unpivot_counts",
+    ], _VARIANT),
+    **dict.fromkeys([
+        "events_distinct_users_kmv", "events_multires_rollup", "orders_dq_profile",
+        "customer_k_anonymity", "orders_expectations", "event_transition_matrix",
+        "chi2_type_by_segment", "topk_orders_with_ties", "events_seasonal_decomposition",
+        "events_cusum_changepoint", "streaming_enriched_counts",
+        "streaming_click_purchase_join", "streaming_dedup_keys",
+        "streaming_stateful_totals", "streaming_cdc_apply", "stratified_sample_counts",
+        "weighted_doc_sample", "scd2_purchase_history", "text_fingerprints",
+        "dedup_ngram_jaccard", "ann_lsh_topk", "multimodal_resize",
+        "multimodal_frame_sample", "ngram_containment", "embedding_outliers",
+        "coreset_kcenter", "label_noise_screen",
+    ], _UTILITY),
+}
+
+# Registry order (showcase module order, then registration order): fixed
+# from run to run, unlike the verification-debt order of all_queries().
+_REGISTRY = registered()
+HEADLINE = [name for name in _REGISTRY if name not in EXCLUDED]
 
 
 # Deployment settings of the bench session; its confs are
@@ -433,26 +110,9 @@ def _current_round() -> int:
     return correctness_history()[1] + 1
 
 
-_FAMILY_PREFIXES = [
-    ("streaming", "streaming_"),
-    ("dedup", "dedup_"),
-    ("ann", "ann_"),
-    ("text", "text_"),
-    ("multimodal", "multimodal_"),
-    ("events", "events_"),
-    ("cdc", ("cdc_", "merge_", "snapshot_diff", "incremental_daily", "scd2_")),
-    ("graph", ("supplier_triangle", "supplier_pagerank", "dedup_components", "supplier_bfs", "supplier_random")),
-    ("tpch", tuple(f"q{i}_" for i in range(1, 23))),
-]
-
-
 def _family(name: str) -> str:
-    for fam, prefixes in _FAMILY_PREFIXES:
-        if isinstance(prefixes, str):
-            prefixes = (prefixes,)
-        if any(name.startswith(p) for p in prefixes):
-            return fam
-    return "other"
+    """A query's bench family: the showcase module that registers it."""
+    return _REGISTRY[name].module.rsplit(".", 1)[-1]
 
 
 def _testdata_fingerprint(sf_dir: str) -> dict:
@@ -466,9 +126,7 @@ def _testdata_fingerprint(sf_dir: str) -> dict:
     fp: dict = {}
     con = duckdb.connect()
     try:
-        for name in (
-            "region nation customer supplier part orders lineitem events documents embeddings"
-        ).split():
+        for name in TESTDATA_TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if not os.path.exists(path):
                 continue
@@ -511,17 +169,8 @@ def main() -> None:
 
     spark = build_session(cpus, DRIVER_MEMORY, "onetl_spark-bench", WAREHOUSE)
 
-    from onetl_spark.showcase import all_queries
-
-    queries = all_queries()
-    names = [n for n in HEADLINE if n in queries]
     timings: dict[str, float] = {}
     records: dict[str, dict] = {}
-
-    # JVM/codegen/footer warm-up per input path (not timed)
-    for name in WARMUP:
-        execute_fully(queries[name](spark, sf_dir))
-    spark.catalog.clearCache()
 
     # Per-query JVM-warm median of three timed runs (time_query). A fixed
     # CANARY query is re-timed every 25 queries; its trajectory is recorded
@@ -530,21 +179,25 @@ def main() -> None:
     # Guarded lookup: a registry rename/removal of the canary must degrade
     # to "no canary track", not KeyError-crash the whole bench (ADVICE r8).
     CANARY = "q1_pricing_summary"
-    if CANARY not in queries:
-        CANARY = names[0] if names else None
+    if CANARY not in _REGISTRY:
+        CANARY = HEADLINE[0] if HEADLINE else None
     canary_track: list[float] = []
 
     def _run_canary():
         if CANARY is None:
             return
+        if not canary_track:
+            # one untimed compile run, as time_query gives every query, so
+            # the first reading is not the JVM's cold start
+            execute_fully(_REGISTRY[CANARY].fn(spark, sf_dir))
         start = time.perf_counter()
-        execute_fully(queries[CANARY](spark, sf_dir))
+        execute_fully(_REGISTRY[CANARY].fn(spark, sf_dir))
         canary_track.append(round(time.perf_counter() - start, 3))
         spark.catalog.clearCache()
 
     _run_canary()
-    for qi, name in enumerate(names):
-        seconds, record = time_query(spark, queries[name], sf_dir)
+    for qi, name in enumerate(HEADLINE):
+        seconds, record = time_query(spark, _REGISTRY[name].fn, sf_dir)
         timings[name] = round(seconds, 3)
         records[name] = record.as_dict()
         print(f"  {name}: {timings[name]:.3f}s", file=sys.stderr)
@@ -588,7 +241,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cpus": cpus,
-                "methodology": "fixed order; per-query JVM-warm median-of-3 (one untimed compile run); cache cleared between runs; canary re-timed every 25 queries for session-drift normalization",
+                "methodology": "registry order (showcase module order, then registration order), minus bench.EXCLUDED; per-query JVM-warm median-of-3 (one untimed compile run); cache cleared between runs; canary re-timed every 25 queries for session-drift normalization",
                 "closes_round": _current_round(),
                 "naming_note": "BENCH_close_r{N}_full.json is named for the round it CLOSES (newest committed CORRECTNESS round + 1) and is never overwritten (an existing file gets a letter-suffixed sibling); the driver's stdout-captured BENCH_r{N}.json for the same run may carry a different round number",
                 "canary": {"query": CANARY, "timings": canary_track},

@@ -28,6 +28,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -142,10 +143,10 @@ class SparkSQLConnection(BaseDBConnection):
         opts = options or SparkSQLWriteOptions()
         if isinstance(opts, dict):
             opts = SparkSQLWriteOptions(**opts)
-        exists = self._target_exists(target)
+        table_columns = self._table_columns(target)
         mode = opts.if_exists
 
-        if not exists:
+        if table_columns is None:
             self._save_as_table(df, target, opts, overwrite=False)
             return
 
@@ -158,22 +159,28 @@ class SparkSQLConnection(BaseDBConnection):
             self._save_as_table(df, target, opts, overwrite=True)
             return
         if mode == "append":
-            self._insert_into(df, target, overwrite=False)
+            self._insert_into(df, target, table_columns, overwrite=False)
             return
         if mode == "replace_overlapping_partitions":
-            self._insert_into(df, target, overwrite=True)
+            self._insert_into(df, target, table_columns, overwrite=True)
             return
         raise ValueError(f"Unknown if_exists mode: {mode!r}")
 
     # --- internals -----------------------------------------------------------
 
-    def _target_exists(self, target: str) -> bool:
-        return self.spark.catalog.tableExists(target)
+    def _table_columns(self, target: str) -> list[str] | None:
+        """The target table's column names from one catalog lookup, or None
+        when it does not exist. Any other analysis error is raised."""
+        try:
+            return self.spark.table(target).columns
+        except AnalysisException as e:
+            if e.getCondition() == "TABLE_OR_VIEW_NOT_FOUND":
+                return None
+            raise
 
-    def _sort_df_columns_like_table(self, df: DataFrame, target: str) -> DataFrame:
+    def _insert_into(self, df: DataFrame, target: str, table_columns: list[str], overwrite: bool) -> None:
         """insertInto is positional: reorder df columns to the table layout
-        (hive/connection.py:418-462)."""
-        table_columns = [f.name for f in self.spark.table(target).schema.fields]
+        first (hive/connection.py:418-462)."""
         df_columns = {c.lower(): c for c in df.columns}
         missing = [c for c in table_columns if c.lower() not in df_columns]
         extra = [c for c in df.columns if c.lower() not in {t.lower() for t in table_columns}]
@@ -181,10 +188,7 @@ class SparkSQLConnection(BaseDBConnection):
             raise ValueError(
                 f"DataFrame columns do not match table {target}: missing={missing}, extra={extra}",
             )
-        return df.select([df_columns[c.lower()] for c in table_columns])
-
-    def _insert_into(self, df: DataFrame, target: str, overwrite: bool) -> None:
-        df = self._sort_df_columns_like_table(df, target)
+        df = df.select([df_columns[c.lower()] for c in table_columns])
         with inject_spark_param(self.spark.conf, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             df.write.insertInto(target, overwrite=overwrite)
 

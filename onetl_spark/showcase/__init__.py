@@ -1,8 +1,8 @@
 """Showcase queries — the driver-facing correctness surface.
 
-Each module exposes ``SPARK_QUERIES: dict[str, Callable[(spark, sf_dir), DataFrame]]``
-and ``ORACLE_SQL: dict[str, str]`` (DuckDB-runnable ANSI SQL on the same
-parquet views). ``__spark_entry__.py`` merges them.
+Each module registers its queries with ``registry.register(fn, oracle_sql)``
+(the oracle is DuckDB-runnable ANSI SQL on the same parquet views).
+``__spark_entry__.py`` and ``bench.py`` read them back from here.
 """
 
 from onetl_spark.showcase import (
@@ -11,6 +11,7 @@ from onetl_spark.showcase import (
     file_transfer,
     graphs,
     operators,
+    registry,
     sampling,
     sessions,
     streaming,
@@ -20,24 +21,14 @@ from onetl_spark.showcase import (
 )
 
 
+def registered() -> dict[str, registry.Query]:
+    """Every registered query, in ``_modules()`` order and then in
+    registration order within each module."""
+    return registry.registered([mod.__name__ for mod in _modules()])
+
+
 def all_queries():
-    out = {}
-    for mod in _modules():
-        _merge_unique(out, mod.SPARK_QUERIES, mod.__name__, "SPARK_QUERIES")
-    return _debt_ordered(out)
-
-
-def _merge_unique(out, new, mod_name, kind):
-    """dict.update silently shadowed q10_returned_items across modules in
-    round 7 (358 declared, 357 reachable) — duplicate keys are now a hard
-    error at registry-build time."""
-    dup = out.keys() & new.keys()
-    if dup:
-        raise ValueError(
-            f"duplicate {kind} keys from {mod_name}: {sorted(dup)} — "
-            "rename the new entry; registry keys must be globally unique"
-        )
-    out.update(new)
+    return _debt_ordered({name: q.fn for name, q in registered().items()})
 
 
 def _debt_ordered(queries):
@@ -90,10 +81,7 @@ def correctness_history() -> tuple[dict[str, int], int]:
 
 
 def all_oracles():
-    out = {}
-    for mod in _modules():
-        _merge_unique(out, mod.ORACLE_SQL, mod.__name__, "ORACLE_SQL")
-    return out
+    return {name: q.oracle_sql for name, q in registered().items()}
 
 
 def _modules():

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from onetl_spark.llm.text import mix31_sql
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import dsum, ensure_views, sql_dec, sql_dsum, sql_round_hu
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -73,15 +74,8 @@ GROUP BY event_type
 """
 
 
-SPARK_QUERIES = {
-    "events_pivot_by_type": events_pivot_by_type,
-    "events_value_percentiles": events_value_percentiles,
-}
-
-ORACLE_SQL = {
-    "events_pivot_by_type": PIVOT_SQL,
-    "events_value_percentiles": PERCENTILES_SQL,
-}
+register(events_pivot_by_type, PIVOT_SQL)
+register(events_value_percentiles, PERCENTILES_SQL)
 
 
 def events_distinct_users_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -148,15 +142,8 @@ GROUP BY GROUPING SETS (
 """
 
 
-SPARK_QUERIES.update({
-    "events_distinct_users_kmv": events_distinct_users_kmv,
-    "events_multires_rollup": events_multires_rollup,
-})
-
-ORACLE_SQL.update({
-    "events_distinct_users_kmv": _kmv_sql(),
-    "events_multires_rollup": MULTIRES_SQL,
-})
+register(events_distinct_users_kmv, _kmv_sql())
+register(events_multires_rollup, MULTIRES_SQL)
 
 
 def rolling_24h_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,8 +177,7 @@ WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(CAST(ts AS TIMESTAMP))
 """
 
 
-SPARK_QUERIES["rolling_24h_user_value"] = rolling_24h_user_value
-ORACLE_SQL["rolling_24h_user_value"] = ROLLING_24H_SQL
+register(rolling_24h_user_value, ROLLING_24H_SQL)
 
 
 def funnel_signup_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,8 +214,7 @@ LEFT JOIN s3 ON s1.user_id = s3.user_id
 """
 
 
-SPARK_QUERIES["funnel_signup_view_purchase"] = funnel_signup_view_purchase
-ORACLE_SQL["funnel_signup_view_purchase"] = FUNNEL_SQL
+register(funnel_signup_view_purchase, FUNNEL_SQL)
 
 
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,8 +289,7 @@ FROM per_cust, b
 """
 
 
-SPARK_QUERIES["customer_rfm_segments"] = customer_rfm_segments
-ORACLE_SQL["customer_rfm_segments"] = RFM_SQL
+register(customer_rfm_segments, RFM_SQL)
 
 
 def orders_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,8 +330,7 @@ DQ_PROFILE_SQL = " UNION ALL ".join(
     ]
 )
 
-SPARK_QUERIES["orders_dq_profile"] = orders_dq_profile
-ORACLE_SQL["orders_dq_profile"] = DQ_PROFILE_SQL
+register(orders_dq_profile, DQ_PROFILE_SQL)
 
 
 def customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,8 +349,7 @@ FROM customer
 GROUP BY c_nationkey, c_mktsegment
 """
 
-SPARK_QUERIES["customer_k_anonymity"] = customer_k_anonymity
-ORACLE_SQL["customer_k_anonymity"] = K_ANON_SQL
+register(customer_k_anonymity, K_ANON_SQL)
 
 
 def orders_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,8 +386,7 @@ FROM t, LATERAL (VALUES
 ) AS e(expectation, f)
 """
 
-SPARK_QUERIES["orders_expectations"] = orders_expectations
-ORACLE_SQL["orders_expectations"] = EXPECT_SQL
+register(orders_expectations, EXPECT_SQL)
 
 
 def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,8 +426,7 @@ FROM events e JOIN f USING (user_id)
 GROUP BY 1, 2
 """
 
-SPARK_QUERIES["user_retention_cohorts"] = user_retention_cohorts
-ORACLE_SQL["user_retention_cohorts"] = RETENTION_SQL
+register(user_retention_cohorts, RETENTION_SQL)
 
 
 def daily_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,8 +484,7 @@ SELECT day, v,
 FROM vv
 """
 
-SPARK_QUERIES["daily_value_anomalies"] = daily_value_anomalies
-ORACLE_SQL["daily_value_anomalies"] = ANOMALY_SQL
+register(daily_value_anomalies, ANOMALY_SQL)
 
 
 def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -562,8 +541,7 @@ JOIN best ON p.event_id = best.event_id
 LEFT JOIN c ON c.user_id = p.user_id AND c.ts = best.click_ts
 """
 
-SPARK_QUERIES["last_touch_attribution"] = last_touch_attribution
-ORACLE_SQL["last_touch_attribution"] = ATTRIBUTION_SQL
+register(last_touch_attribution, ATTRIBUTION_SQL)
 
 
 def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,8 +575,7 @@ FROM events
 GROUP BY event_type
 """
 
-SPARK_QUERIES["events_json_props"] = events_json_props
-ORACLE_SQL["events_json_props"] = JSON_PROPS_SQL
+register(events_json_props, JSON_PROPS_SQL)
 
 
 def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,8 +605,7 @@ FROM events
 GROUP BY 1
 """
 
-SPARK_QUERIES["events_value_histogram"] = events_value_histogram
-ORACLE_SQL["events_value_histogram"] = HISTOGRAM_SQL
+register(events_value_histogram, HISTOGRAM_SQL)
 
 
 def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -671,8 +647,7 @@ SELECT event_type, next_type, n,
 FROM counts
 """
 
-SPARK_QUERIES["event_transition_matrix"] = event_transition_matrix
-ORACLE_SQL["event_transition_matrix"] = TRANSITION_SQL
+register(event_transition_matrix, TRANSITION_SQL)
 
 
 def chi2_type_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,8 +702,7 @@ SELECT c_mktsegment, event_type, n,
 FROM cells
 """
 
-SPARK_QUERIES["chi2_type_by_segment"] = chi2_type_by_segment
-ORACLE_SQL["chi2_type_by_segment"] = CHI2_SQL
+register(chi2_type_by_segment, CHI2_SQL)
 
 
 def event_value_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,8 +734,7 @@ FROM events e JOIN m USING (event_type)
 GROUP BY e.event_type
 """
 
-SPARK_QUERIES["event_value_mad"] = event_value_mad
-ORACLE_SQL["event_value_mad"] = MAD_SQL
+register(event_value_mad, MAD_SQL)
 
 
 def events_unpivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -789,8 +762,7 @@ FROM events
 GROUP BY user_id, event_type
 """
 
-SPARK_QUERIES["events_unpivot_counts"] = events_unpivot_counts
-ORACLE_SQL["events_unpivot_counts"] = UNPIVOT_SQL
+register(events_unpivot_counts, UNPIVOT_SQL)
 
 
 def topk_orders_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,8 +794,7 @@ FROM (
 WHERE rnk <= 5
 """
 
-SPARK_QUERIES["topk_orders_with_ties"] = topk_orders_with_ties
-ORACLE_SQL["topk_orders_with_ties"] = TOPK_TIES_SQL
+register(topk_orders_with_ties, TOPK_TIES_SQL)
 
 
 def user_purchase_daily_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,8 +855,7 @@ SELECT c.user_id, c.day,
 FROM cal c LEFT JOIN daily d ON d.user_id = c.user_id AND d.day = c.day
 """
 
-SPARK_QUERIES["user_purchase_daily_ffill"] = user_purchase_daily_ffill
-ORACLE_SQL["user_purchase_daily_ffill"] = FFILL_SQL
+register(user_purchase_daily_ffill, FFILL_SQL)
 
 
 _EWMA_K = 7  # trailing terms; halving weights 1, 1/2, ... 1/64
@@ -939,8 +909,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day)
 """
 
 
-SPARK_QUERIES["events_ewma_daily"] = events_ewma_daily
-ORACLE_SQL["events_ewma_daily"] = _ewma_sql()
+register(events_ewma_daily, _ewma_sql())
 
 
 def events_user_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -975,8 +944,7 @@ def _kmv_overlap_sql() -> str:
     )
 
 
-SPARK_QUERIES["events_user_overlap_kmv"] = events_user_overlap_kmv
-ORACLE_SQL["events_user_overlap_kmv"] = _kmv_overlap_sql()
+register(events_user_overlap_kmv, _kmv_overlap_sql())
 
 
 def markov_next_event_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,8 +1023,7 @@ WHERE NOT is_train
 GROUP BY 1, 2, 3
 """
 
-SPARK_QUERIES["markov_next_event_eval"] = markov_next_event_eval
-ORACLE_SQL["markov_next_event_eval"] = MARKOV_EVAL_SQL
+register(markov_next_event_eval, MARKOV_EVAL_SQL)
 
 
 def lineitem_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1090,8 +1057,7 @@ SELECT n_keys, n_rows, max_key_rows, median_key_rows, p99_key_rows,
 FROM stats, topn
 """
 
-SPARK_QUERIES["lineitem_skew_profile"] = lineitem_skew_profile
-ORACLE_SQL["lineitem_skew_profile"] = LINEITEM_SKEW_SQL
+register(lineitem_skew_profile, LINEITEM_SKEW_SQL)
 
 
 def seasonal_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1141,8 +1107,7 @@ FROM scored WHERE f IS NOT NULL
 GROUP BY event_type
 """
 
-SPARK_QUERIES["seasonal_forecast_eval"] = seasonal_forecast_eval
-ORACLE_SQL["seasonal_forecast_eval"] = SEASONAL_FORECAST_SQL
+register(seasonal_forecast_eval, SEASONAL_FORECAST_SQL)
 
 
 def ab_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1221,8 +1186,7 @@ SELECT event_type, n_a, n_b,
 FROM d
 """
 
-SPARK_QUERIES["ab_value_ttest"] = ab_value_ttest
-ORACLE_SQL["ab_value_ttest"] = AB_TTEST_SQL
+register(ab_value_ttest, AB_TTEST_SQL)
 
 
 def customer_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,8 +1218,7 @@ SELECT sizes.c_nationkey, sizes.c_mktsegment, class_size, distinct_sensitive,
 FROM sizes JOIN div USING (c_nationkey, c_mktsegment)
 """
 
-SPARK_QUERIES["customer_l_diversity"] = customer_l_diversity
-ORACLE_SQL["customer_l_diversity"] = L_DIVERSITY_SQL
+register(customer_l_diversity, L_DIVERSITY_SQL)
 
 
 def events_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1333,8 +1296,7 @@ SELECT event_type, day, v, trend, seasonal,
 FROM s
 """
 
-SPARK_QUERIES["events_seasonal_decomposition"] = events_seasonal_decomposition
-ORACLE_SQL["events_seasonal_decomposition"] = SEASONAL_DECOMP_SQL
+register(events_seasonal_decomposition, SEASONAL_DECOMP_SQL)
 
 
 def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1402,8 +1364,7 @@ QUALIFY ROW_NUMBER() OVER (PARTITION BY event_type
                            ORDER BY round(abs(cusum), 9) DESC, day ASC) = 1
 """
 
-SPARK_QUERIES["events_cusum_changepoint"] = events_cusum_changepoint
-ORACLE_SQL["events_cusum_changepoint"] = CUSUM_SQL
+register(events_cusum_changepoint, CUSUM_SQL)
 
 
 def events_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1496,8 +1457,7 @@ WHERE _rn = (_n + 1) // 2
 ORDER BY event_type
 """
 
-SPARK_QUERIES["events_theilsen_trend"] = events_theilsen_trend
-ORACLE_SQL["events_theilsen_trend"] = THEILSEN_SQL
+register(events_theilsen_trend, THEILSEN_SQL)
 
 
 def _micro_units(col):
@@ -1589,8 +1549,7 @@ SELECT type_a, type_b, n_days,
 FROM m ORDER BY type_a, type_b
 """
 
-SPARK_QUERIES["events_type_correlations"] = events_type_correlations
-ORACLE_SQL["events_type_correlations"] = TYPE_CORR_SQL
+register(events_type_correlations, TYPE_CORR_SQL)
 
 
 def events_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1652,8 +1611,7 @@ SELECT CAST(lag AS INTEGER) AS lag, n_days,
 FROM m ORDER BY lag
 """
 
-SPARK_QUERIES["events_lag_correlation"] = events_lag_correlation
-ORACLE_SQL["events_lag_correlation"] = LAG_CORR_SQL
+register(events_lag_correlation, LAG_CORR_SQL)
 
 
 def position_attribution_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1723,8 +1681,7 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_touches,
 FROM credited GROUP BY event_type ORDER BY event_type
 """
 
-SPARK_QUERIES["position_attribution_by_type"] = position_attribution_by_type
-ORACLE_SQL["position_attribution_by_type"] = POSITION_ATTRIBUTION_SQL
+register(position_attribution_by_type, POSITION_ATTRIBUTION_SQL)
 
 
 def event_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1766,8 +1723,7 @@ JOIN totals tb ON tb.it = pairs.item_b
 CROSS JOIN nb
 """
 
-SPARK_QUERIES["event_type_lift"] = event_type_lift
-ORACLE_SQL["event_type_lift"] = EVENT_LIFT_SQL
+register(event_type_lift, EVENT_LIFT_SQL)
 
 
 _CMS_W, _CMS_D = 64, 4
@@ -1833,8 +1789,7 @@ FROM est JOIN exact USING (user_id)
 """
 
 
-SPARK_QUERIES["events_user_cms_counts"] = events_user_cms_counts
-ORACLE_SQL["events_user_cms_counts"] = _cms_sql()
+register(events_user_cms_counts, _cms_sql())
 
 
 _BLOOM_M, _BLOOM_K = 16384, 5
@@ -1903,8 +1858,7 @@ FROM hit LEFT JOIN actual USING (custkey)
 """
 
 
-SPARK_QUERIES["customer_bloom_prefilter"] = customer_bloom_prefilter
-ORACLE_SQL["customer_bloom_prefilter"] = _bloom_sql()
+register(customer_bloom_prefilter, _bloom_sql())
 
 
 def events_type_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1981,8 +1935,7 @@ FROM ext
 ORDER BY event_type
 """
 
-SPARK_QUERIES["events_type_ols_trend"] = events_type_ols_trend
-ORACLE_SQL["events_type_ols_trend"] = OLS_TREND_SQL
+register(events_type_ols_trend, OLS_TREND_SQL)
 
 
 def doc_lang_source_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2032,8 +1985,7 @@ SELECT CAST(tot.n_i AS BIGINT) AS n,
 FROM mi CROSS JOIN hx CROSS JOIN hy CROSS JOIN tot
 """
 
-SPARK_QUERIES["doc_lang_source_mi"] = doc_lang_source_mi
-ORACLE_SQL["doc_lang_source_mi"] = DOC_MI_SQL
+register(doc_lang_source_mi, DOC_MI_SQL)
 
 
 def lineitem_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2075,8 +2027,7 @@ GROUP BY g
 ORDER BY l_returnflag
 """
 
-SPARK_QUERIES["lineitem_weighted_median_price"] = lineitem_weighted_median_price
-ORACLE_SQL["lineitem_weighted_median_price"] = WMEDIAN_SQL
+register(lineitem_weighted_median_price, WMEDIAN_SQL)
 
 
 def events_daily_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2134,8 +2085,7 @@ GROUP BY g
 ORDER BY event_type
 """
 
-SPARK_QUERIES["events_daily_mad_outliers"] = events_daily_mad_outliers
-ORACLE_SQL["events_daily_mad_outliers"] = MAD_SQL
+register(events_daily_mad_outliers, MAD_SQL)
 
 
 def doc_source_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2181,8 +2131,7 @@ FROM scored CROSS JOIN iv
 ORDER BY category
 """
 
-SPARK_QUERIES["doc_source_woe_iv"] = doc_source_woe_iv
-ORACLE_SQL["doc_source_woe_iv"] = WOE_SQL
+register(doc_source_woe_iv, WOE_SQL)
 
 
 def events_daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2221,8 +2170,7 @@ FROM b GROUP BY g, day
 ORDER BY event_type, day
 """
 
-SPARK_QUERIES["events_daily_ohlc"] = events_daily_ohlc
-ORACLE_SQL["events_daily_ohlc"] = OHLC_SQL
+register(events_daily_ohlc, OHLC_SQL)
 
 
 def user_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2267,8 +2215,7 @@ SELECT user_id,
 FROM e
 """
 
-SPARK_QUERIES["user_interarrival_burstiness"] = user_interarrival_burstiness
-ORACLE_SQL["user_interarrival_burstiness"] = BURSTINESS_SQL
+register(user_interarrival_burstiness, BURSTINESS_SQL)
 
 
 def markov_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2370,8 +2317,7 @@ FROM sc CROSS JOIN ece
 ORDER BY bin
 """
 
-SPARK_QUERIES["markov_calibration"] = markov_calibration
-ORACLE_SQL["markov_calibration"] = MARKOV_CAL_SQL
+register(markov_calibration, MARKOV_CAL_SQL)
 
 
 _HIST_LO, _HIST_HI, _HIST_BINS = 0.0, 500.0, 50
@@ -2442,8 +2388,7 @@ ORDER BY q
 """
 
 
-SPARK_QUERIES["events_value_quantile_sketch"] = events_value_quantile_sketch
-ORACLE_SQL["events_value_quantile_sketch"] = _hist_quantile_sql()
+register(events_value_quantile_sketch, _hist_quantile_sql())
 
 
 def events_user_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2516,8 +2461,7 @@ SELECT CAST(256 AS BIGINT) AS m, z AS n_zero,
 FROM est
 """
 
-SPARK_QUERIES["events_user_hll_distinct"] = events_user_hll_distinct
-ORACLE_SQL["events_user_hll_distinct"] = EVENTS_HLL_SQL
+register(events_user_hll_distinct, EVENTS_HLL_SQL)
 
 
 def events_hll_partition_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2564,8 +2508,7 @@ SELECT allb.bucket, CAST(COALESCE(reg.rho, 0) AS INTEGER) AS rho
 FROM allb LEFT JOIN reg USING (bucket)
 """
 
-SPARK_QUERIES["events_hll_partition_merge"] = events_hll_partition_merge
-ORACLE_SQL["events_hll_partition_merge"] = HLL_PARTITION_MERGE_SQL
+register(events_hll_partition_merge, HLL_PARTITION_MERGE_SQL)
 
 
 def user_activity_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2623,8 +2566,7 @@ SELECT CAST(n AS BIGINT) AS n,
 FROM m
 """
 
-SPARK_QUERIES["user_activity_spearman"] = user_activity_spearman
-ORACLE_SQL["user_activity_spearman"] = USER_SPEARMAN_SQL
+register(user_activity_spearman, USER_SPEARMAN_SQL)
 
 
 def events_type_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2684,8 +2626,7 @@ FROM held WHERE held_us IS NOT NULL
 GROUP BY event_type ORDER BY event_type
 """
 
-SPARK_QUERIES["events_type_twap"] = events_type_twap
-ORACLE_SQL["events_type_twap"] = EVENTS_TWAP_SQL
+register(events_type_twap, EVENTS_TWAP_SQL)
 
 
 def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2760,8 +2701,7 @@ SELECT na AS n_a, nb AS n_b, ca AS conv_a, cb AS conv_b,
 FROM j
 """
 
-SPARK_QUERIES["ab_conversion_ztest"] = ab_conversion_ztest
-ORACLE_SQL["ab_conversion_ztest"] = AB_ZTEST_SQL
+register(ab_conversion_ztest, AB_ZTEST_SQL)
 
 
 _ACF_MAX_LAG = 7
@@ -2826,8 +2766,7 @@ SELECT lag, n_pairs, round(r_raw, 9) AS acf,
 FROM r ORDER BY lag
 """
 
-SPARK_QUERIES["events_daily_acf"] = events_daily_acf
-ORACLE_SQL["events_daily_acf"] = EVENTS_ACF_SQL
+register(events_daily_acf, EVENTS_ACF_SQL)
 
 
 _SEQ_K, _SEQ_SUPPORT, _SEQ_CAP = 3, 30, 30
@@ -2875,8 +2814,7 @@ FROM p GROUP BY pattern
 HAVING COUNT(*) >= {_SEQ_SUPPORT}
 """
 
-SPARK_QUERIES["frequent_event_sequences"] = frequent_event_sequences
-ORACLE_SQL["frequent_event_sequences"] = FREQ_SEQ_SQL
+register(frequent_event_sequences, FREQ_SEQ_SQL)
 
 
 def user_churn_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2949,8 +2887,7 @@ WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 ORDER BY duration
 """
 
-SPARK_QUERIES["user_churn_kaplan_meier"] = user_churn_kaplan_meier
-ORACLE_SQL["user_churn_kaplan_meier"] = KAPLAN_MEIER_SQL
+register(user_churn_kaplan_meier, KAPLAN_MEIER_SQL)
 
 
 _TTC_QUANTILES = (0.5, 0.9)
@@ -3025,8 +2962,7 @@ WHERE cum * den >= num * tot
 GROUP BY transition, quantile
 """
 
-SPARK_QUERIES["funnel_time_to_convert"] = funnel_time_to_convert
-ORACLE_SQL["funnel_time_to_convert"] = TIME_TO_CONVERT_SQL
+register(funnel_time_to_convert, TIME_TO_CONVERT_SQL)
 
 
 def events_value_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3100,8 +3036,7 @@ SELECT k, n_total,
 FROM tot
 """
 
-SPARK_QUERIES["events_value_anova"] = events_value_anova
-ORACLE_SQL["events_value_anova"] = ANOVA_SQL
+register(events_value_anova, ANOVA_SQL)
 
 
 def lineitem_qty_line_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3145,8 +3080,7 @@ SELECT n, p AS concordant, q AS discordant,
 FROM nt CROSS JOIN cp CROSS JOIN cq CROSS JOIN tx CROSS JOIN ty
 """
 
-SPARK_QUERIES["lineitem_qty_line_kendall"] = lineitem_qty_line_kendall
-ORACLE_SQL["lineitem_qty_line_kendall"] = KENDALL_SQL
+register(lineitem_qty_line_kendall, KENDALL_SQL)
 
 
 _COP_MIN, _COP_K = 3, 3
@@ -3245,8 +3179,7 @@ FROM scored
 QUALIFY rank <= {_COP_K}
 """
 
-SPARK_QUERIES["part_copurchase_topk"] = part_copurchase_topk
-ORACLE_SQL["part_copurchase_topk"] = COPURCHASE_SQL
+register(part_copurchase_topk, COPURCHASE_SQL)
 
 
 def user_churn_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3312,8 +3245,7 @@ WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 ORDER BY duration
 """
 
-SPARK_QUERIES["user_churn_nelson_aalen"] = user_churn_nelson_aalen
-ORACLE_SQL["user_churn_nelson_aalen"] = NELSON_AALEN_SQL
+register(user_churn_nelson_aalen, NELSON_AALEN_SQL)
 
 
 _TE_M = 100
@@ -3367,8 +3299,7 @@ SELECT event_type, n,
 FROM per_type CROSS JOIN prior
 """
 
-SPARK_QUERIES["event_type_target_encoding"] = event_type_target_encoding
-ORACLE_SQL["event_type_target_encoding"] = TARGET_ENC_SQL
+register(event_type_target_encoding, TARGET_ENC_SQL)
 
 
 def events_hour_circular_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3432,8 +3363,7 @@ SELECT event_type, n,
 FROM g
 """
 
-SPARK_QUERIES["events_hour_circular_stats"] = events_hour_circular_stats
-ORACLE_SQL["events_hour_circular_stats"] = CIRCULAR_SQL
+register(events_hour_circular_stats, CIRCULAR_SQL)
 
 
 def events_extreme_value_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3502,8 +3432,7 @@ SELECT n_days,
 FROM g WHERE n_days > 1
 """
 
-SPARK_QUERIES["events_extreme_value_fit"] = events_extreme_value_fit
-ORACLE_SQL["events_extreme_value_fit"] = GUMBEL_SQL
+register(events_extreme_value_fit, GUMBEL_SQL)
 
 
 def segment_purchase_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3573,8 +3502,7 @@ SELECT segment, n, successes,
 FROM g ORDER BY segment
 """
 
-SPARK_QUERIES["segment_purchase_wilson_ci"] = segment_purchase_wilson_ci
-ORACLE_SQL["segment_purchase_wilson_ci"] = WILSON_SQL
+register(segment_purchase_wilson_ci, WILSON_SQL)
 
 
 def ab_value_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3702,8 +3630,7 @@ FROM cohorts CROSS JOIN th
 ORDER BY grp
 """
 
-SPARK_QUERIES["ab_value_cuped"] = ab_value_cuped
-ORACLE_SQL["ab_value_cuped"] = CUPED_SQL
+register(ab_value_cuped, CUPED_SQL)
 
 
 def event_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3787,8 +3714,7 @@ FROM ent CROSS JOIN tot
 ORDER BY event_type
 """
 
-SPARK_QUERIES["event_entropy_rate"] = event_entropy_rate
-ORACLE_SQL["event_entropy_rate"] = ENTROPY_RATE_SQL
+register(event_entropy_rate, ENTROPY_RATE_SQL)
 
 
 def user_activity_negbinom_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3847,8 +3773,7 @@ SELECT n_users,
 FROM g WHERE n_users > 1
 """
 
-SPARK_QUERIES["user_activity_negbinom_fit"] = user_activity_negbinom_fit
-ORACLE_SQL["user_activity_negbinom_fit"] = NEGBINOM_SQL
+register(user_activity_negbinom_fit, NEGBINOM_SQL)
 
 
 def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3932,8 +3857,7 @@ GROUP BY 1, tot.t
 ORDER BY abc_class
 """
 
-SPARK_QUERIES["part_abc_classification"] = part_abc_classification
-ORACLE_SQL["part_abc_classification"] = ABC_SQL
+register(part_abc_classification, ABC_SQL)
 
 
 def churn_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4021,8 +3945,7 @@ SELECT n1, n2, observed_1, expected_1, variance,
 FROM agg
 """
 
-SPARK_QUERIES["churn_logrank_test"] = churn_logrank_test
-ORACLE_SQL["churn_logrank_test"] = LOGRANK_SQL
+register(churn_logrank_test, LOGRANK_SQL)
 
 
 _PI_BASE, _PI_CUR = 1995, 1996
@@ -4106,8 +4029,7 @@ SELECT n_parts,
 FROM agg WHERE n_parts > 0
 """
 
-SPARK_QUERIES["part_price_index"] = part_price_index
-ORACLE_SQL["part_price_index"] = PRICE_INDEX_SQL
+register(part_price_index, PRICE_INDEX_SQL)
 
 
 def ab_stratified_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4184,8 +4106,7 @@ GROUP BY grp
 ORDER BY grp
 """
 
-SPARK_QUERIES["ab_stratified_adjustment"] = ab_stratified_adjustment
-ORACLE_SQL["ab_stratified_adjustment"] = STRAT_ADJ_SQL
+register(ab_stratified_adjustment, STRAT_ADJ_SQL)
 
 
 def events_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4280,8 +4201,7 @@ SELECT n AS n_days,
 FROM r
 """
 
-SPARK_QUERIES["events_partial_correlation"] = events_partial_correlation
-ORACLE_SQL["events_partial_correlation"] = PARTIAL_CORR_SQL
+register(events_partial_correlation, PARTIAL_CORR_SQL)
 
 
 _EB_MIN_N, _EB_TOP = 3, 10
@@ -4372,8 +4292,7 @@ ORDER BY shrunk_rate DESC, part ASC
 LIMIT {_EB_TOP}
 """
 
-SPARK_QUERIES["part_return_rate_shrunk"] = part_return_rate_shrunk
-ORACLE_SQL["part_return_rate_shrunk"] = EB_SHRINK_SQL
+register(part_return_rate_shrunk, EB_SHRINK_SQL)
 
 
 _SESS_MAX_BUCKET, _SESS_MAX_DIST = 200, 3
@@ -4456,8 +4375,7 @@ FROM pairs WHERE distance <= {_SESS_MAX_DIST}
 GROUP BY 1 ORDER BY distance
 """
 
-SPARK_QUERIES["session_similarity_pairs"] = session_similarity_pairs
-ORACLE_SQL["session_similarity_pairs"] = SESSION_SIM_SQL
+register(session_similarity_pairs, SESSION_SIM_SQL)
 
 
 _SKU_TOP = 15
@@ -4545,8 +4463,7 @@ ORDER BY conviction DESC, antecedent ASC, consequent ASC
 LIMIT {_SKU_TOP}
 """
 
-SPARK_QUERIES["order_basket_lift_rules"] = order_basket_lift_rules
-ORACLE_SQL["order_basket_lift_rules"] = BASKET_RULES_SQL
+register(order_basket_lift_rules, BASKET_RULES_SQL)
 
 
 def conversion_sprt_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4628,8 +4545,7 @@ FROM cum CROSS JOIN p
 ORDER BY day
 """
 
-SPARK_QUERIES["conversion_sprt_trajectory"] = conversion_sprt_trajectory
-ORACLE_SQL["conversion_sprt_trajectory"] = SPRT_SQL
+register(conversion_sprt_trajectory, SPRT_SQL)
 
 
 def events_daily_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4690,8 +4606,7 @@ SELECT day, CAST(MAX(tot) AS BIGINT) AS n_values,
 FROM staged GROUP BY day ORDER BY day
 """
 
-SPARK_QUERIES["events_daily_value_bands"] = events_daily_value_bands
-ORACLE_SQL["events_daily_value_bands"] = DAILY_BANDS_SQL
+register(events_daily_value_bands, DAILY_BANDS_SQL)
 
 
 _HURST_SIZES = [4, 8, 16]
@@ -4847,8 +4762,7 @@ FROM per_size CROSS JOIN fit
 ORDER BY block_size
 """
 
-SPARK_QUERIES["events_hurst_exponent"] = events_hurst_exponent
-ORACLE_SQL["events_hurst_exponent"] = HURST_SQL
+register(events_hurst_exponent, HURST_SQL)
 
 
 def user_value_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4987,8 +4901,7 @@ FROM within_g CROSS JOIN decomp
 ORDER BY segment
 """
 
-SPARK_QUERIES["user_value_theil_decomposition"] = user_value_theil_decomposition
-ORACLE_SQL["user_value_theil_decomposition"] = THEIL_SQL
+register(user_value_theil_decomposition, THEIL_SQL)
 
 
 def user_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5050,8 +4963,7 @@ SELECT n1, n2, m, true_users,
 FROM a
 """
 
-SPARK_QUERIES["user_capture_recapture"] = user_capture_recapture
-ORACLE_SQL["user_capture_recapture"] = CAPTURE_SQL
+register(user_capture_recapture, CAPTURE_SQL)
 
 
 def events_value_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5094,8 +5006,7 @@ SELECT n,
 FROM c
 """
 
-SPARK_QUERIES["events_value_jarque_bera"] = events_value_jarque_bera
-ORACLE_SQL["events_value_jarque_bera"] = JARQUE_BERA_SQL
+register(events_value_jarque_bera, JARQUE_BERA_SQL)
 
 
 def events_type_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5140,8 +5051,7 @@ SELECT k, n_total,
 FROM tot
 """
 
-SPARK_QUERIES["events_type_levene"] = events_type_levene
-ORACLE_SQL["events_type_levene"] = LEVENE_SQL
+register(events_type_levene, LEVENE_SQL)
 
 
 def events_type_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5183,8 +5093,7 @@ FROM g a JOIN g b ON a.gg < b.gg CROSS JOIN tot
 ORDER BY group_a, group_b
 """
 
-SPARK_QUERIES["events_type_tukey_hsd"] = events_type_tukey_hsd
-ORACLE_SQL["events_type_tukey_hsd"] = TUKEY_SQL
+register(events_type_tukey_hsd, TUKEY_SQL)
 
 
 def user_click_purchase_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5231,8 +5140,7 @@ SELECT n, n_a_only, n_b_only,
 FROM m
 """
 
-SPARK_QUERIES["user_click_purchase_mcnemar"] = user_click_purchase_mcnemar
-ORACLE_SQL["user_click_purchase_mcnemar"] = MCNEMAR_SQL
+register(user_click_purchase_mcnemar, MCNEMAR_SQL)
 
 
 def events_daily_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5308,8 +5216,7 @@ SELECT CAST(den.n AS BIGINT) AS n,
 FROM den CROSS JOIN num
 """
 
-SPARK_QUERIES["events_daily_durbin_watson"] = events_daily_durbin_watson
-ORACLE_SQL["events_daily_durbin_watson"] = DW_SQL
+register(events_daily_durbin_watson, DW_SQL)
 
 
 def events_daily_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5373,8 +5280,7 @@ SELECT n_above, n_below, n_runs,
 FROM runs
 """
 
-SPARK_QUERIES["events_daily_runs_test"] = events_daily_runs_test
-ORACLE_SQL["events_daily_runs_test"] = RUNS_SQL
+register(events_daily_runs_test, RUNS_SQL)
 
 
 def user_activity_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5413,8 +5319,7 @@ SELECT n,
 FROM m
 """
 
-SPARK_QUERIES["user_activity_dispersion"] = user_activity_dispersion
-ORACLE_SQL["user_activity_dispersion"] = DISPERSION_SQL
+register(user_activity_dispersion, DISPERSION_SQL)
 
 
 def events_type_share_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5520,8 +5425,7 @@ SELECT event_type, n_ref, n_cur, z_score, p_value,
 FROM adj ORDER BY event_type
 """
 
-SPARK_QUERIES["events_type_share_bh"] = events_type_share_bh
-ORACLE_SQL["events_type_share_bh"] = BH_SQL
+register(events_type_share_bh, BH_SQL)
 
 
 def events_type_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5578,8 +5482,7 @@ SELECT nn.n AS n_blocks, kk.k AS k_treatments,
 FROM num CROSS JOIN den CROSS JOIN nn CROSS JOIN kk
 """
 
-SPARK_QUERIES["events_type_friedman"] = events_type_friedman
-ORACLE_SQL["events_type_friedman"] = FRIEDMAN_SQL
+register(events_type_friedman, FRIEDMAN_SQL)
 
 
 def segment_mh_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5640,8 +5543,7 @@ SELECT n, n_strata,
 FROM m
 """
 
-SPARK_QUERIES["segment_mh_odds_ratio"] = segment_mh_odds_ratio
-ORACLE_SQL["segment_mh_odds_ratio"] = MH_OR_SQL
+register(segment_mh_odds_ratio, MH_OR_SQL)
 
 
 _CRONBACH_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -5701,8 +5603,7 @@ FROM m
 """
 
 
-SPARK_QUERIES["user_engagement_cronbach"] = user_engagement_cronbach
-ORACLE_SQL["user_engagement_cronbach"] = _cronbach_sql()
+register(user_engagement_cronbach, _cronbach_sql())
 
 
 _STATIONARY_ITERS = 12
@@ -5812,8 +5713,7 @@ FROM v{_STATIONARY_ITERS} ORDER BY state
 """
 
 
-SPARK_QUERIES["event_markov_stationary"] = event_markov_stationary
-ORACLE_SQL["event_markov_stationary"] = _stationary_sql()
+register(event_markov_stationary, _stationary_sql())
 
 
 _SYS_SAMPLE_STEP = 100
@@ -5857,8 +5757,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_sampled,
 FROM samp
 """
 
-SPARK_QUERIES["orders_systematic_sample"] = orders_systematic_sample
-ORACLE_SQL["orders_systematic_sample"] = SYS_SAMPLE_SQL
+register(orders_systematic_sample, SYS_SAMPLE_SQL)
 
 
 def events_hourly_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5960,8 +5859,7 @@ FROM g GROUP BY event_type ORDER BY event_type
 """
 
 
-SPARK_QUERIES["events_hourly_interpolation"] = events_hourly_interpolation
-ORACLE_SQL["events_hourly_interpolation"] = INTERP_SQL
+register(events_hourly_interpolation, INTERP_SQL)
 
 
 def interarrival_ks_exponential(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6065,8 +5963,7 @@ SELECT tot.n AS n_gaps,
 FROM tot
 """
 
-SPARK_QUERIES["interarrival_ks_exponential"] = interarrival_ks_exponential
-ORACLE_SQL["interarrival_ks_exponential"] = KS_EXPON_SQL
+register(interarrival_ks_exponential, KS_EXPON_SQL)
 
 
 _QQ_Z = {
@@ -6180,8 +6077,7 @@ FROM emp JOIN z USING (p10) CROSS JOIN m
 ORDER BY pct
 """
 
-SPARK_QUERIES["events_value_qq_normal"] = events_value_qq_normal
-ORACLE_SQL["events_value_qq_normal"] = QQ_NORMAL_SQL
+register(events_value_qq_normal, QQ_NORMAL_SQL)
 
 
 _SES_ALPHA = 0.3
@@ -6292,8 +6188,7 @@ FROM s
 """
 
 
-SPARK_QUERIES["events_ses_level"] = events_ses_level
-ORACLE_SQL["events_ses_level"] = _ses_sql()
+register(events_ses_level, _ses_sql())
 
 
 def orders_month_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6339,8 +6234,7 @@ SELECT month, n AS n_orders,
 FROM g CROSS JOIN tot ORDER BY month
 """
 
-SPARK_QUERIES["orders_month_seasonality"] = orders_month_seasonality
-ORACLE_SQL["orders_month_seasonality"] = MONTH_SEASONALITY_SQL
+register(orders_month_seasonality, MONTH_SEASONALITY_SQL)
 
 
 def orders_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6407,8 +6301,7 @@ SELECT CAST(CAST(month AS DATE) AS VARCHAR) AS month,
 FROM m ORDER BY month
 """
 
-SPARK_QUERIES["orders_backlog_curve"] = orders_backlog_curve
-ORACLE_SQL["orders_backlog_curve"] = BACKLOG_SQL
+register(orders_backlog_curve, BACKLOG_SQL)
 
 
 def order_brand_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6506,8 +6399,7 @@ ORDER BY n_orders_with DESC, b1, b2, b3
 LIMIT 150
 """
 
-SPARK_QUERIES["order_brand_triples"] = order_brand_triples
-ORACLE_SQL["order_brand_triples"] = BRAND_TRIPLES_SQL
+register(order_brand_triples, BRAND_TRIPLES_SQL)
 
 
 def user_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6573,8 +6465,7 @@ SELECT base.*, modal.modal_type
 FROM base JOIN modal USING (user_id) ORDER BY user_id
 """
 
-SPARK_QUERIES["user_golden_record"] = user_golden_record
-ORACLE_SQL["user_golden_record"] = GOLDEN_RECORD_SQL
+register(user_golden_record, GOLDEN_RECORD_SQL)
 
 
 _PERM_B = 200
@@ -6700,8 +6591,7 @@ SELECT obs.n_purchase, obs.n_click,
 FROM tail CROSS JOIN obs
 """
 
-SPARK_QUERIES["events_value_permutation_test"] = events_value_permutation_test
-ORACLE_SQL["events_value_permutation_test"] = PERMUTATION_SQL
+register(events_value_permutation_test, PERMUTATION_SQL)
 
 
 _HOLT_A, _HOLT_B = 0.3, 0.1
@@ -6790,8 +6680,7 @@ FROM rec ORDER BY i DESC LIMIT 1
 """
 
 
-SPARK_QUERIES["events_holt_trend"] = events_holt_trend
-ORACLE_SQL["events_holt_trend"] = _holt_sql()
+register(events_holt_trend, _holt_sql())
 
 
 def orders_cube_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6833,8 +6722,7 @@ GROUP BY CUBE (o_orderpriority, o_orderstatus)
 ORDER BY gid, priority, status
 """
 
-SPARK_QUERIES["orders_cube_priority_status"] = orders_cube_priority_status
-ORACLE_SQL["orders_cube_priority_status"] = CUBE_SQL
+register(orders_cube_priority_status, CUBE_SQL)
 
 
 def brand_ranking_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6931,8 +6819,7 @@ SELECT p_brand AS brand,
 FROM agg ORDER BY brand
 """
 
-SPARK_QUERIES["brand_ranking_ndcg"] = brand_ranking_ndcg
-ORACLE_SQL["brand_ranking_ndcg"] = NDCG_SQL
+register(brand_ranking_ndcg, NDCG_SQL)
 
 
 def events_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7043,8 +6930,7 @@ FROM ev JOIN means USING (event_type) CROSS JOIN qh
 WHERE s = 9
 """
 
-SPARK_QUERIES["events_conformal_coverage"] = events_conformal_coverage
-ORACLE_SQL["events_conformal_coverage"] = CONFORMAL_SQL
+register(events_conformal_coverage, CONFORMAL_SQL)
 
 
 _POIS_T = (
@@ -7166,8 +7052,7 @@ FROM obs CROSS JOIN ci
 """
 
 
-SPARK_QUERIES["events_bootstrap_mean_ci"] = events_bootstrap_mean_ci
-ORACLE_SQL["events_bootstrap_mean_ci"] = _bootstrap_sql()
+register(events_bootstrap_mean_ci, _bootstrap_sql())
 
 
 def user_rate_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7270,8 +7155,7 @@ ORDER BY shift DESC, user_id ASC
 LIMIT 10
 """
 
-SPARK_QUERIES["user_rate_eb_shrinkage"] = user_rate_eb_shrinkage
-ORACLE_SQL["user_rate_eb_shrinkage"] = EB_SHRINK_SQL
+register(user_rate_eb_shrinkage, EB_SHRINK_SQL)
 
 
 _DID_SPLIT_DAY = "2024-01-16"
@@ -7354,8 +7238,7 @@ SELECT round(t_pre, 6) AS t_pre, round(t_post, 6) AS t_post,
 FROM agg
 """
 
-SPARK_QUERIES["events_did_estimate"] = events_did_estimate
-ORACLE_SQL["events_did_estimate"] = DID_SQL
+register(events_did_estimate, DID_SQL)
 
 
 def user_uplift_by_band(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7467,8 +7350,7 @@ SELECT band,
 FROM agg ORDER BY band
 """
 
-SPARK_QUERIES["user_uplift_by_band"] = user_uplift_by_band
-ORACLE_SQL["user_uplift_by_band"] = UPLIFT_SQL
+register(user_uplift_by_band, UPLIFT_SQL)
 
 
 def events_time_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7537,8 +7419,7 @@ GROUP BY GROUPING SETS ((day), (week), (month))
 ORDER BY grain, bucket
 """
 
-SPARK_QUERIES["events_time_grouping_sets"] = events_time_grouping_sets
-ORACLE_SQL["events_time_grouping_sets"] = TIME_GROUPING_SETS_SQL
+register(events_time_grouping_sets, TIME_GROUPING_SETS_SQL)
 
 
 def region_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7616,8 +7497,7 @@ FROM rev JOIN reg USING (region) CROSS JOIN tot
 ORDER BY region, nation
 """
 
-SPARK_QUERIES["region_nation_revenue_share"] = region_nation_revenue_share
-ORACLE_SQL["region_nation_revenue_share"] = REGION_SHARE_SQL
+register(region_nation_revenue_share, REGION_SHARE_SQL)
 
 
 _PW_KNOT = 15  # day index of the pinned trend knot
@@ -7778,8 +7658,7 @@ SELECT CAST(n AS BIGINT) AS n_days,
 FROM mo
 """
 
-SPARK_QUERIES["events_piecewise_trend"] = events_piecewise_trend
-ORACLE_SQL["events_piecewise_trend"] = PIECEWISE_SQL
+register(events_piecewise_trend, PIECEWISE_SQL)
 
 
 def events_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7856,8 +7735,7 @@ FROM paired JOIN denom USING (conv_id)
 GROUP BY touch_type ORDER BY touch_type
 """
 
-SPARK_QUERIES["events_time_decay_attribution"] = events_time_decay_attribution
-ORACLE_SQL["events_time_decay_attribution"] = TIME_DECAY_SQL
+register(events_time_decay_attribution, TIME_DECAY_SQL)
 
 
 def events_revenue_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7937,8 +7815,7 @@ SELECT event_type,
 FROM g ORDER BY event_type
 """
 
-SPARK_QUERIES["events_revenue_bridge"] = events_revenue_bridge
-ORACLE_SQL["events_revenue_bridge"] = REVENUE_BRIDGE_SQL
+register(events_revenue_bridge, REVENUE_BRIDGE_SQL)
 
 
 def orders_price_ending_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7988,5 +7865,4 @@ ORDER BY excess_share DESC, cents ASC
 LIMIT 10
 """
 
-SPARK_QUERIES["orders_price_ending_audit"] = orders_price_ending_audit
-ORACLE_SQL["orders_price_ending_audit"] = PRICE_ENDING_SQL
+register(orders_price_ending_audit, PRICE_ENDING_SQL)

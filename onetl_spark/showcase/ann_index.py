@@ -27,11 +27,10 @@ from onetl_spark.llm.ann_store import (
     incremental_ann_assign,
     incremental_ann_report,
 )
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views, sql_fsig
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _N_BATCHES = 3
 _K = 4
@@ -176,9 +175,6 @@ def streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(work, "verdicts"))
 
 
-SPARK_QUERIES["incremental_ann_verdicts"] = incremental_ann_verdicts
-ORACLE_SQL["incremental_ann_verdicts"] = VERDICTS_SQL
-SPARK_QUERIES["incremental_ann_drift_report"] = incremental_ann_drift_report
-ORACLE_SQL["incremental_ann_drift_report"] = REPORT_SQL
-SPARK_QUERIES["streaming_ann_index"] = streaming_ann_index
-ORACLE_SQL["streaming_ann_index"] = VERDICTS_SQL
+register(incremental_ann_verdicts, VERDICTS_SQL)
+register(incremental_ann_drift_report, REPORT_SQL)
+register(streaming_ann_index, VERDICTS_SQL)

@@ -26,10 +26,9 @@ from onetl_spark.operators.calibration import (
     calibration_report,
     reliability_bins,
 )
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views, sql_fsig
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _N_BINS = 10
 
@@ -67,7 +66,7 @@ bins AS (
 )"""
 
 
-def events_purchase_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_score_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram of normalized event value as a purchase
     probability: per score decile the mean prediction, the empirical
     purchase rate, and the calibration gap."""
@@ -84,7 +83,7 @@ FROM bins
 """
 
 
-def events_purchase_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_score_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row calibration report: ECE, MCE, Brier and its Murphy
     decomposition (reliability − resolution + uncertainty) for the
     value-predicts-purchase score."""
@@ -260,11 +259,7 @@ WINDOW w AS (PARTITION BY segment ORDER BY week
 """
 
 
-SPARK_QUERIES["events_score_reliability"] = events_purchase_reliability
-ORACLE_SQL["events_score_reliability"] = RELIABILITY_SQL
-SPARK_QUERIES["events_calibration_drift_cusum"] = events_calibration_drift_cusum
-ORACLE_SQL["events_calibration_drift_cusum"] = DRIFT_CUSUM_SQL
-SPARK_QUERIES["events_score_calibration_report"] = events_purchase_calibration
-ORACLE_SQL["events_score_calibration_report"] = CALIBRATION_SQL
-SPARK_QUERIES["events_calibration_drift_weekly"] = events_calibration_drift_weekly
-ORACLE_SQL["events_calibration_drift_weekly"] = WEEKLY_SQL
+register(events_score_reliability, RELIABILITY_SQL)
+register(events_calibration_drift_cusum, DRIFT_CUSUM_SQL)
+register(events_score_calibration_report, CALIBRATION_SQL)
+register(events_calibration_drift_weekly, WEEKLY_SQL)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.cdc import cdc_latest_snapshot, merge_upsert, scd2_history
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views
 
 _ORDER_COLS = "o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate, o_orderpriority"
@@ -92,17 +93,9 @@ SELECT {_ORDER_COLS} FROM src WHERE NOT is_delete
 """
 
 
-SPARK_QUERIES = {
-    "cdc_latest_state": cdc_latest_state,
-    "scd2_purchase_history": scd2_purchase_history,
-    "merge_upsert_orders": merge_upsert_orders,
-}
-
-ORACLE_SQL = {
-    "cdc_latest_state": CDC_LATEST_SQL,
-    "scd2_purchase_history": SCD2_SQL,
-    "merge_upsert_orders": MERGE_SQL,
-}
+register(cdc_latest_state, CDC_LATEST_SQL)
+register(scd2_purchase_history, SCD2_SQL)
+register(merge_upsert_orders, MERGE_SQL)
 
 
 def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,8 +151,7 @@ GROUP BY CAST(ts AS DATE)
 """
 
 
-SPARK_QUERIES["incremental_daily_rollup"] = incremental_daily_rollup
-ORACLE_SQL["incremental_daily_rollup"] = ROLLUP_SQL
+register(incremental_daily_rollup, ROLLUP_SQL)
 
 
 def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,5 +213,4 @@ WHERE CASE WHEN old.o_orderkey IS NULL THEN 'added'
       END IS NOT NULL
 """
 
-SPARK_QUERIES["snapshot_diff_orders"] = snapshot_diff_orders
-ORACLE_SQL["snapshot_diff_orders"] = SNAPSHOT_DIFF_SQL
+register(snapshot_diff_orders, SNAPSHOT_DIFF_SQL)

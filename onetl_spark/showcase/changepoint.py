@@ -21,10 +21,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from onetl_spark.operators.changepoint import cusum_excursions, single_changepoint
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import dsum, ensure_views, sql_dsum, sql_fsig
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _K_SIGMA = 0.5
 _ALARM_SIGMA = 4.0
@@ -176,7 +175,5 @@ FROM best
 """
 
 
-SPARK_QUERIES["events_cusum_drift"] = events_cusum_drift
-ORACLE_SQL["events_cusum_drift"] = CUSUM_SQL
-SPARK_QUERIES["events_value_changepoint"] = events_value_changepoint
-ORACLE_SQL["events_value_changepoint"] = CHANGEPOINT_SQL
+register(events_cusum_drift, CUSUM_SQL)
+register(events_value_changepoint, CHANGEPOINT_SQL)

@@ -29,6 +29,7 @@ from onetl_spark.file.transfer.connection import LocalFileConnection
 from onetl_spark.file.transfer.downloader import FileDownloader
 from onetl_spark.file.transfer.filters import ExcludeDir, FileSizeRange, Glob
 from onetl_spark.file.transfer.limits import MaxFilesCount
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import scratch_path
 from onetl_spark.showcase.util import ensure_views
 
@@ -101,8 +102,7 @@ LIMIT {_MAX_FILES}
 """
 
 
-SPARK_QUERIES = {"file_transfer_plan": file_transfer_plan}
-ORACLE_SQL = {"file_transfer_plan": FILE_TRANSFER_PLAN_SQL}
+register(file_transfer_plan, FILE_TRANSFER_PLAN_SQL)
 
 
 _MV_MIN_BYTES = 300
@@ -177,5 +177,4 @@ SELECT rel_path, size_bytes,
 FROM f
 """
 
-SPARK_QUERIES["file_upload_move_result"] = file_upload_move_result
-ORACLE_SQL["file_upload_move_result"] = FILE_UPLOAD_MOVE_SQL
+register(file_upload_move_result, FILE_UPLOAD_MOVE_SQL)

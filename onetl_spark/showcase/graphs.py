@@ -21,10 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.graph import degree_assortativity, kcore_nodes, pagerank_fixed_point, triangle_count
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views
 
-SPARK_QUERIES = {}
-ORACLE_SQL = {}
 
 _PR_SCALE = 10**12
 
@@ -80,8 +79,7 @@ SELECT nodes.node, COALESCE(pn.triangles, 0) AS triangles
 FROM nodes LEFT JOIN pn USING (node)
 """
 
-SPARK_QUERIES["supplier_triangle_counts"] = supplier_triangle_counts
-ORACLE_SQL["supplier_triangle_counts"] = TRIANGLES_SQL
+register(supplier_triangle_counts, TRIANGLES_SQL)
 
 
 def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,8 +121,7 @@ r0 AS MATERIALIZED (SELECT node, {_PR_SCALE} // nn.n AS r FROM nodes, nn),
 SELECT node, CAST(r AS BIGINT) AS rank_fp FROM r3
 """
 
-SPARK_QUERIES["supplier_pagerank"] = supplier_pagerank
-ORACLE_SQL["supplier_pagerank"] = PAGERANK_SQL
+register(supplier_pagerank, PAGERANK_SQL)
 
 
 _BFS_SEEDS = 3
@@ -168,8 +165,7 @@ walk(node, d) AS (
 SELECT node, CAST(MIN(d) AS BIGINT) AS hops FROM walk GROUP BY node
 """
 
-SPARK_QUERIES["supplier_bfs_hops"] = supplier_bfs_hops
-ORACLE_SQL["supplier_bfs_hops"] = BFS_HOPS_SQL
+register(supplier_bfs_hops, BFS_HOPS_SQL)
 
 
 _WALK_LEN = 4
@@ -219,8 +215,7 @@ walk(walk_id, step, node) AS (
 SELECT walk_id, step, node FROM walk
 """
 
-SPARK_QUERIES["supplier_random_walks"] = supplier_random_walks
-ORACLE_SQL["supplier_random_walks"] = RANDOM_WALKS_SQL
+register(supplier_random_walks, RANDOM_WALKS_SQL)
 
 
 def supplier_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -264,8 +259,7 @@ SELECT community, COUNT(*) AS size, MIN(node) AS min_member
 FROM l3 GROUP BY community ORDER BY community
 """
 
-SPARK_QUERIES["supplier_communities"] = supplier_communities
-ORACLE_SQL["supplier_communities"] = COMMUNITIES_SQL
+register(supplier_communities, COMMUNITIES_SQL)
 
 
 def supplier_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,8 +294,7 @@ SELECT CAST(n / 2 AS BIGINT) AS n_edges,
 FROM m
 """
 
-SPARK_QUERIES["supplier_degree_assortativity"] = supplier_degree_assortativity
-ORACLE_SQL["supplier_degree_assortativity"] = ASSORT_SQL
+register(supplier_degree_assortativity, ASSORT_SQL)
 
 
 _PART_MIN_COOCCUR = 2
@@ -367,8 +360,7 @@ SELECT CAST(n / 2 AS BIGINT) AS n_edges,
 FROM m
 """
 
-SPARK_QUERIES["part_cooccurrence_assortativity"] = part_cooccurrence_assortativity
-ORACLE_SQL["part_cooccurrence_assortativity"] = PART_ASSORT_SQL
+register(part_cooccurrence_assortativity, PART_ASSORT_SQL)
 
 
 _KCORE_K, _KCORE_ITER = 3, 6
@@ -405,8 +397,7 @@ def _kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ITER) -> str:
     )
 
 
-SPARK_QUERIES["supplier_kcore"] = supplier_kcore
-ORACLE_SQL["supplier_kcore"] = _kcore_sql()
+register(supplier_kcore, _kcore_sql())
 
 
 _PART_EDGES_SQL = f"""
@@ -476,8 +467,7 @@ FROM {last} LEFT JOIN s{rounds + 1} USING (u, v)
     )
 
 
-SPARK_QUERIES["part_ktruss"] = part_ktruss
-ORACLE_SQL["part_ktruss"] = _ktruss_sql()
+register(part_ktruss, _ktruss_sql())
 
 
 _HARM_SEEDS, _HARM_HOPS, _HARM_SCALE = 6, 4, 10**12
@@ -525,8 +515,7 @@ SELECT node,
 FROM dist WHERE d > 0 GROUP BY node
 """
 
-SPARK_QUERIES["part_harmonic_centrality"] = part_harmonic_centrality
-ORACLE_SQL["part_harmonic_centrality"] = HARMONIC_SQL
+register(part_harmonic_centrality, HARMONIC_SQL)
 
 
 _SSSP_SEEDS, _SSSP_ROUNDS = 3, 14
@@ -606,8 +595,7 @@ d0 AS MATERIALIZED (SELECT node, CAST(0 AS BIGINT) AS d FROM seeds)"""
     )
 
 
-SPARK_QUERIES["part_weighted_sssp"] = part_weighted_sssp
-ORACLE_SQL["part_weighted_sssp"] = _sssp_sql()
+register(part_weighted_sssp, _sssp_sql())
 
 
 _HITS_MIN, _HITS_SCALE, _HITS_ITER = 2, 10**9, 3
@@ -683,8 +671,7 @@ LEFT JOIN h3 ON h3.node = nodes.node
 LEFT JOIN a3 ON a3.node = nodes.node
 """
 
-SPARK_QUERIES["customer_supplier_hits"] = customer_supplier_hits
-ORACLE_SQL["customer_supplier_hits"] = HITS_SQL
+register(customer_supplier_hits, HITS_SQL)
 
 
 _LP_TOPK = 20
@@ -762,8 +749,7 @@ ORDER BY jaccard DESC, a ASC, b ASC
 LIMIT {_LP_TOPK}
 """
 
-SPARK_QUERIES["supplier_link_prediction"] = supplier_link_prediction
-ORACLE_SQL["supplier_link_prediction"] = LINKPRED_SQL
+register(supplier_link_prediction, LINKPRED_SQL)
 
 
 def supplier_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,8 +831,7 @@ FROM nk LEFT JOIN ek USING (k)
 WHERE nk.n_nodes >= 2
 """
 
-SPARK_QUERIES["supplier_rich_club"] = supplier_rich_club
-ORACLE_SQL["supplier_rich_club"] = RICH_CLUB_SQL
+register(supplier_rich_club, RICH_CLUB_SQL)
 
 
 def supplier_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,8 +885,7 @@ SELECT n_nodes, max_degree,
 FROM g WHERE n_nodes > 0
 """
 
-SPARK_QUERIES["supplier_degree_powerlaw"] = supplier_degree_powerlaw
-ORACLE_SQL["supplier_degree_powerlaw"] = POWERLAW_SQL
+register(supplier_degree_powerlaw, POWERLAW_SQL)
 
 
 def supplier_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -965,8 +949,7 @@ r0 AS MATERIALIZED (SELECT node, {_PR_SCALE} // nn.n AS r FROM nodes, nn),
 SELECT node, CAST(r AS BIGINT) AS rank_fp FROM r3
 """
 
-SPARK_QUERIES["supplier_pagerank_weighted"] = supplier_pagerank_weighted
-ORACLE_SQL["supplier_pagerank_weighted"] = PAGERANK_W_SQL
+register(supplier_pagerank_weighted, PAGERANK_W_SQL)
 
 
 _DIA_MAX_HOPS = 20
@@ -1035,8 +1018,7 @@ SELECT (SELECT node FROM seed) AS seed,
 FROM d2
 """
 
-SPARK_QUERIES["supplier_diameter_sweep"] = supplier_diameter_sweep
-ORACLE_SQL["supplier_diameter_sweep"] = DIAMETER_SQL
+register(supplier_diameter_sweep, DIAMETER_SQL)
 
 
 def part_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1076,8 +1058,7 @@ ORDER BY adamic_adar DESC, src ASC, dst ASC
 LIMIT {_LP_TOPK}
 """
 
-SPARK_QUERIES["part_adamic_adar"] = part_adamic_adar
-ORACLE_SQL["part_adamic_adar"] = ADAMIC_ADAR_SQL
+register(part_adamic_adar, ADAMIC_ADAR_SQL)
 
 
 def supplier_nation_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1135,8 +1116,7 @@ FROM per_c LEFT JOIN internal USING (c) CROSS JOIN m
 ORDER BY community
 """
 
-SPARK_QUERIES["supplier_nation_modularity"] = supplier_nation_modularity
-ORACLE_SQL["supplier_nation_modularity"] = NATION_MODULARITY_SQL
+register(supplier_nation_modularity, NATION_MODULARITY_SQL)
 
 
 def supplier_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,5 +1179,4 @@ pr0 AS MATERIALIZED (SELECT node, CASE WHEN is_seed = 1 THEN {_PR_SCALE} // ns.n
 SELECT node, CAST(r AS BIGINT) AS rank_fp FROM pr3
 """
 
-SPARK_QUERIES["supplier_personalized_pagerank"] = supplier_personalized_pagerank
-ORACLE_SQL["supplier_personalized_pagerank"] = PPR_SQL
+register(supplier_personalized_pagerank, PPR_SQL)

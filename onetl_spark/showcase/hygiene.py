@@ -25,10 +25,9 @@ from onetl_spark.llm.hygiene import (
     nfc_normalize_latin1,
     script_profile,
 )
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 # Decoration alphabet (all BMP, so Spark/DuckDB length() agree);
 # spelled as \\u escapes so this source stays printable.
@@ -168,7 +167,7 @@ def doc_script_mix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SQL["doc_script_mix_profile"] = f"""
+register(doc_script_mix_profile, f"""
 WITH {_DECO_SQL.strip().rstrip()}
 , prof AS (
   SELECT lang,
@@ -190,9 +189,7 @@ SELECT lang,
 FROM prof
 GROUP BY lang
 ORDER BY lang
-"""
-
-SPARK_QUERIES["doc_script_mix_profile"] = doc_script_mix_profile
+""")
 
 
 def doc_unicode_hygiene_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,7 +212,7 @@ def doc_unicode_hygiene_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SQL["doc_unicode_hygiene_audit"] = f"""
+register(doc_unicode_hygiene_audit, f"""
 WITH {_DECO_SQL.strip().rstrip()}
 , audit AS (
   SELECT source,
@@ -233,9 +230,7 @@ SELECT source,
 FROM audit
 GROUP BY source
 ORDER BY source
-"""
-
-SPARK_QUERIES["doc_unicode_hygiene_audit"] = doc_unicode_hygiene_audit
+""")
 
 
 def doc_confusable_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +253,7 @@ def doc_confusable_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SQL["doc_confusable_screen"] = f"""
+register(doc_confusable_screen, f"""
 WITH {_DECO_SQL.strip().rstrip()}
 , scr AS (
   SELECT doc_id, lang,
@@ -272,9 +267,7 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
 FROM scr
 WHERE n_seams > 0
 ORDER BY doc_id
-"""
-
-SPARK_QUERIES["doc_confusable_screen"] = doc_confusable_screen
+""")
 
 
 def doc_nfc_normalization_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,7 +314,7 @@ def _nfc_replace_sql(col: str) -> str:
     return out
 
 
-ORACLE_SQL["doc_nfc_normalization_delta"] = f"""
+register(doc_nfc_normalization_delta, f"""
 WITH {_DECO_SQL.strip().rstrip()}
 , audit AS (
   SELECT lang,
@@ -340,9 +333,7 @@ SELECT lang,
 FROM audit
 GROUP BY lang
 ORDER BY lang
-"""
-
-SPARK_QUERIES["doc_nfc_normalization_delta"] = doc_nfc_normalization_delta
+""")
 
 
 def doc_sanitize_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,7 +386,7 @@ def _sanitize_sql(col: str) -> str:
     return _nfc_replace_sql(out)
 
 
-ORACLE_SQL["doc_sanitize_report"] = f"""
+register(doc_sanitize_report, f"""
 WITH {_DECO_SQL.strip().rstrip()}
 , cleaned AS (
   SELECT doc_id, lang, length(text) AS len0,
@@ -418,6 +409,4 @@ SELECT lang,
 FROM audited
 GROUP BY lang
 ORDER BY lang
-"""
-
-SPARK_QUERIES["doc_sanitize_report"] = doc_sanitize_report
+""")

@@ -34,11 +34,10 @@ from onetl_spark.llm.dedup import (
     minhash_signature_store,
 )
 from onetl_spark.showcase.llm import _sql_sig_entries, SQL_MD5LONG, SQL_SHINGLES, SQL_TOKENS
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _THRESHOLD = 0.5
 
@@ -328,15 +327,9 @@ def el_incremental_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     return DBReader(conn, source=target).run()
 
 
-SPARK_QUERIES["incremental_dedup_verdicts"] = incremental_dedup_verdicts
-ORACLE_SQL["incremental_dedup_verdicts"] = VERDICTS_SQL
-SPARK_QUERIES["incremental_dedup_report"] = incremental_dedup_report
-ORACLE_SQL["incremental_dedup_report"] = REPORT_SQL
-SPARK_QUERIES["streaming_incremental_dedup"] = streaming_incremental_dedup
-ORACLE_SQL["streaming_incremental_dedup"] = VERDICTS_SQL
-SPARK_QUERIES["incremental_decon_verdicts"] = incremental_decon_verdicts
-ORACLE_SQL["incremental_decon_verdicts"] = DECON_VERDICTS_SQL
-SPARK_QUERIES["incremental_decon_report"] = incremental_decon_report
-ORACLE_SQL["incremental_decon_report"] = DECON_REPORT_SQL
-SPARK_QUERIES["el_incremental_dedup_pipeline"] = el_incremental_dedup_pipeline
-ORACLE_SQL["el_incremental_dedup_pipeline"] = VERDICTS_SQL
+register(incremental_dedup_verdicts, VERDICTS_SQL)
+register(incremental_dedup_report, REPORT_SQL)
+register(streaming_incremental_dedup, VERDICTS_SQL)
+register(incremental_decon_verdicts, DECON_VERDICTS_SQL)
+register(incremental_decon_report, DECON_REPORT_SQL)
+register(el_incremental_dedup_pipeline, VERDICTS_SQL)

@@ -24,11 +24,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.sketch_store import hll_ingest_series
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views, sql_fsig
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _K_SIGMA = 0.5
 
@@ -229,9 +228,6 @@ def streaming_ingest_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAMING_INGEST_SQL = _series_sql("CAST(event_id % 3 AS INTEGER)", "batch_id")
 
 
-SPARK_QUERIES["ingest_hll_series"] = ingest_hll_series
-ORACLE_SQL["ingest_hll_series"] = SERIES_SQL
-SPARK_QUERIES["ingest_monitor_cusum"] = ingest_monitor_cusum
-ORACLE_SQL["ingest_monitor_cusum"] = INGEST_CUSUM_SQL
-SPARK_QUERIES["streaming_ingest_monitor"] = streaming_ingest_monitor
-ORACLE_SQL["streaming_ingest_monitor"] = STREAMING_INGEST_SQL
+register(ingest_hll_series, SERIES_SQL)
+register(ingest_monitor_cusum, INGEST_CUSUM_SQL)
+register(streaming_ingest_monitor, STREAMING_INGEST_SQL)

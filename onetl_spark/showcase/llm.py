@@ -20,6 +20,7 @@ from onetl_spark.llm.dedup import (
     SIMHASH_BITS,
     perm_constants,
 )
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views, sql_round_hu
 
 # ---------------------------------------------------------------------------
@@ -393,35 +394,18 @@ FROM h, unnest(range(0, CAST(ceil(length(hx) / 512.0) AS BIGINT), 2)) t(i)
 """
 
 
-SPARK_QUERIES = {
-    "text_token_stats": text_token_stats,
-    "text_quality": text_quality,
-    "text_lang_id": text_lang_id,
-    "text_fingerprints": text_fingerprints,
-    "dedup_exact": dedup_exact,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_simhash": dedup_simhash,
-    "ann_cosine_topk": ann_cosine_topk,
-    "ann_lsh_topk": ann_lsh_topk,
-    "embedding_near_dup_pairs": embedding_near_dup_pairs,
-    "multimodal_features": multimodal_features,
-}
-
-ORACLE_SQL = {
-    "text_token_stats": TOKEN_STATS_SQL,
-    "text_quality": QUALITY_SQL,
-    "text_lang_id": _lang_sql(),
-    "text_fingerprints": FINGERPRINT_SQL,
-    "dedup_exact": DEDUP_EXACT_SQL,
-    "dedup_minhash_lsh": _minhash_sql(),
-    "dedup_ngram_jaccard": NGRAM_JACCARD_SQL,
-    "dedup_simhash": _simhash_sql(),
-    "ann_cosine_topk": ANN_TOPK_SQL,
-    "ann_lsh_topk": _lsh_topk_sql(),
-    "embedding_near_dup_pairs": NEAR_DUP_SQL,
-    "multimodal_features": MULTIMODAL_SQL,
-}
+register(text_token_stats, TOKEN_STATS_SQL)
+register(text_quality, QUALITY_SQL)
+register(text_lang_id, _lang_sql())
+register(text_fingerprints, FINGERPRINT_SQL)
+register(dedup_exact, DEDUP_EXACT_SQL)
+register(dedup_minhash_lsh, _minhash_sql())
+register(dedup_ngram_jaccard, NGRAM_JACCARD_SQL)
+register(dedup_simhash, _simhash_sql())
+register(ann_cosine_topk, ANN_TOPK_SQL)
+register(ann_lsh_topk, _lsh_topk_sql())
+register(embedding_near_dup_pairs, NEAR_DUP_SQL)
+register(multimodal_features, MULTIMODAL_SQL)
 
 
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,8 +433,7 @@ WITH words AS (
 SELECT doc_id, term, tf, tfidf, rank FROM ranked WHERE rank <= 3
 """
 
-SPARK_QUERIES["text_tfidf_top_terms"] = text_tfidf_top_terms
-ORACLE_SQL["text_tfidf_top_terms"] = TFIDF_SQL
+register(text_tfidf_top_terms, TFIDF_SQL)
 
 
 def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,8 +464,7 @@ FROM documents d LEFT JOIN reach ON reach.node = d.doc_id
 GROUP BY d.doc_id
 """
 
-SPARK_QUERIES["dedup_survivors"] = dedup_survivors
-ORACLE_SQL["dedup_survivors"] = _survivors_sql()
+register(dedup_survivors, _survivors_sql())
 
 
 def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,8 +480,7 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_survivors(docs, pairs, collect_threshold=0)
 
 
-SPARK_QUERIES["dedup_components_star"] = dedup_components_star
-ORACLE_SQL["dedup_components_star"] = _survivors_sql()
+register(dedup_components_star, _survivors_sql())
 
 
 def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,8 +575,7 @@ LEFT JOIN reps ON reps.node = k.doc_id
 WHERE coalesce(reps.rep, k.doc_id) = k.doc_id
 """
 
-SPARK_QUERIES["training_corpus_pipeline"] = training_corpus_pipeline
-ORACLE_SQL["training_corpus_pipeline"] = _corpus_pipeline_sql()
+register(training_corpus_pipeline, _corpus_pipeline_sql())
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -645,8 +625,7 @@ ORDER BY cos_sim DESC, v.vec_id ASC
 LIMIT 10
 """
 
-SPARK_QUERIES["ann_ivf_topk"] = ann_ivf_topk
-ORACLE_SQL["ann_ivf_topk"] = ANN_IVF_SQL
+register(ann_ivf_topk, ANN_IVF_SQL)
 
 
 def ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,8 +708,7 @@ LIMIT {k}
 """
 
 
-SPARK_QUERIES["ann_ivf_nprobe"] = ann_ivf_nprobe
-ORACLE_SQL["ann_ivf_nprobe"] = _ivf_nprobe_sql()
+register(ann_ivf_nprobe, _ivf_nprobe_sql())
 
 
 def ann_topk_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -764,8 +742,7 @@ WITH q AS (
 SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5
 """
 
-SPARK_QUERIES["ann_topk_per_query"] = ann_topk_per_query
-ORACLE_SQL["ann_topk_per_query"] = ANN_TOPK_PER_QUERY_SQL
+register(ann_topk_per_query, ANN_TOPK_PER_QUERY_SQL)
 
 
 def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,8 +778,7 @@ ORDER BY qcos_sim DESC, b.vec_id ASC
 LIMIT 10
 """
 
-SPARK_QUERIES["ann_quantized_topk"] = ann_quantized_topk
-ORACLE_SQL["ann_quantized_topk"] = ANN_QUANTIZED_SQL
+register(ann_quantized_topk, ANN_QUANTIZED_SQL)
 
 
 def dedup_minhash_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,14 +827,11 @@ SELECT a_id, b_id, jaccard FROM ver WHERE jaccard >= 0.5
 """
 
 
-SPARK_QUERIES["dedup_minhash_by_lang"] = dedup_minhash_by_lang
-ORACLE_SQL["dedup_minhash_by_lang"] = _minhash_by_lang_sql()
+register(dedup_minhash_by_lang, _minhash_by_lang_sql())
 
-SPARK_QUERIES["multimodal_resize"] = multimodal_resize
-ORACLE_SQL["multimodal_resize"] = RESIZE_SQL
+register(multimodal_resize, RESIZE_SQL)
 
-SPARK_QUERIES["multimodal_frame_sample"] = multimodal_frame_sample
-ORACLE_SQL["multimodal_frame_sample"] = FRAME_SAMPLE_SQL
+register(multimodal_frame_sample, FRAME_SAMPLE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -941,14 +914,11 @@ FROM s
 """
 
 
-SPARK_QUERIES["benchmark_decontamination"] = benchmark_decontamination
-ORACLE_SQL["benchmark_decontamination"] = DECONTAM_SQL
+register(benchmark_decontamination, DECONTAM_SQL)
 
-SPARK_QUERIES["corpus_stats_by_lang"] = corpus_stats_by_lang
-ORACLE_SQL["corpus_stats_by_lang"] = CORPUS_STATS_SQL
+register(corpus_stats_by_lang, CORPUS_STATS_SQL)
 
-SPARK_QUERIES["document_chunks"] = document_chunks
-ORACLE_SQL["document_chunks"] = CHUNKS_SQL
+register(document_chunks, CHUNKS_SQL)
 
 
 def segment_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1072,15 +1042,12 @@ FROM d
 """
 )
 
-SPARK_QUERIES["encoding_quality_stats"] = encoding_quality_stats
-ORACLE_SQL["encoding_quality_stats"] = ENCODING_SQL
+register(encoding_quality_stats, ENCODING_SQL)
 
 
-SPARK_QUERIES["segment_dedup_clean"] = segment_dedup_clean
-ORACLE_SQL["segment_dedup_clean"] = SEGMENT_DEDUP_SQL
+register(segment_dedup_clean, SEGMENT_DEDUP_SQL)
 
-SPARK_QUERIES["domain_reweight_sample"] = domain_reweight_sample
-ORACLE_SQL["domain_reweight_sample"] = DOMAIN_REWEIGHT_SQL
+register(domain_reweight_sample, DOMAIN_REWEIGHT_SQL)
 
 
 def top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,8 +1069,7 @@ SELECT lang, term, n_occurrences, rank FROM (
 """
 
 
-SPARK_QUERIES["top_terms_by_lang"] = top_terms_by_lang
-ORACLE_SQL["top_terms_by_lang"] = TOP_TERMS_SQL
+register(top_terms_by_lang, TOP_TERMS_SQL)
 
 
 def semantic_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1139,8 +1105,7 @@ WHERE round({_COS_SQL}, 9) >= 0.3
 """
 
 
-SPARK_QUERIES["semantic_near_dup"] = semantic_near_dup
-ORACLE_SQL["semantic_near_dup"] = SEMANTIC_NEAR_DUP_SQL
+register(semantic_near_dup, SEMANTIC_NEAR_DUP_SQL)
 
 
 _CONTAINMENT_MAX_DF = 64
@@ -1188,8 +1153,7 @@ WHERE containment >= 0.6
 """
 
 
-SPARK_QUERIES["ngram_containment"] = ngram_containment
-ORACLE_SQL["ngram_containment"] = NGRAM_CONTAINMENT_SQL
+register(ngram_containment, NGRAM_CONTAINMENT_SQL)
 
 
 def multimodal_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,8 +1193,7 @@ SELECT doc_id, 0 AS ahash FROM documents WHERE length(text) = 0
 """
 
 
-SPARK_QUERIES["multimodal_ahash"] = multimodal_ahash
-ORACLE_SQL["multimodal_ahash"] = _ahash_sql()
+register(multimodal_ahash, _ahash_sql())
 
 
 _PNG_W, _PNG_H, _PNG_DOCS = 16, 16, 48
@@ -1299,8 +1262,7 @@ SELECT doc_id, CAST({terms} AS BIGINT) AS ahash FROM t
 """
 
 
-SPARK_QUERIES["png_roundtrip_ahash"] = png_roundtrip_ahash
-ORACLE_SQL["png_roundtrip_ahash"] = _png_roundtrip_sql()
+register(png_roundtrip_ahash, _png_roundtrip_sql())
 
 
 _JPEG_W, _JPEG_H, _JPEG_DOCS, _JPEG_Q = 16, 16, 12, 90
@@ -1371,8 +1333,7 @@ FROM documents d JOIN expected e ON e.doc_id = d.doc_id
 """
 
 
-SPARK_QUERIES["jpeg_roundtrip_ahash"] = jpeg_roundtrip_ahash
-ORACLE_SQL["jpeg_roundtrip_ahash"] = _jpeg_roundtrip_sql()
+register(jpeg_roundtrip_ahash, _jpeg_roundtrip_sql())
 
 
 _WAV_N, _WAV_DOCS, _WAV_FRAME, _WAV_HOP, _WAV_THRESH = 120, 24, 16, 8, 60_000
@@ -1451,8 +1412,7 @@ FROM base JOIN act USING (doc_id)
 """
 
 
-SPARK_QUERIES["wav_roundtrip_energy"] = wav_roundtrip_energy
-ORACLE_SQL["wav_roundtrip_energy"] = _wav_roundtrip_sql()
+register(wav_roundtrip_energy, _wav_roundtrip_sql())
 
 
 _SIMHASH_MAX_DIST = 3  # shared by the Spark query AND its oracle banding
@@ -1498,8 +1458,7 @@ SELECT a_id, b_id, hamming FROM cand WHERE hamming <= {max_dist}
 """
 
 
-SPARK_QUERIES["simhash_near_dup"] = simhash_near_dup
-ORACLE_SQL["simhash_near_dup"] = _simhash_near_dup_sql()
+register(simhash_near_dup, _simhash_near_dup_sql())
 
 
 def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1546,11 +1505,9 @@ LIMIT 10
 """
 
 
-SPARK_QUERIES["embedding_outliers"] = embedding_outliers
-ORACLE_SQL["embedding_outliers"] = EMBEDDING_OUTLIERS_SQL
+register(embedding_outliers, EMBEDDING_OUTLIERS_SQL)
 
-SPARK_QUERIES["hybrid_search_topk"] = hybrid_search_topk
-ORACLE_SQL["hybrid_search_topk"] = HYBRID_SEARCH_SQL
+register(hybrid_search_topk, HYBRID_SEARCH_SQL)
 
 
 def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1599,8 +1556,7 @@ ORDER BY cos_sim DESC, b.vec_id ASC
 LIMIT 10
 """
 
-SPARK_QUERIES["ann_two_stage_rerank"] = ann_two_stage_rerank
-ORACLE_SQL["ann_two_stage_rerank"] = ANN_TWO_STAGE_SQL
+register(ann_two_stage_rerank, ANN_TWO_STAGE_SQL)
 
 
 def ann_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1643,8 +1599,7 @@ LIMIT {k}
 """
 
 
-SPARK_QUERIES["ann_projected_topk"] = ann_projected_topk
-ORACLE_SQL["ann_projected_topk"] = _projected_topk_sql()
+register(ann_projected_topk, _projected_topk_sql())
 
 
 def gopher_rules_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1696,8 +1651,7 @@ SELECT source,
 FROM r GROUP BY source
 """
 
-SPARK_QUERIES["gopher_rules_filter"] = gopher_rules_filter
-ORACLE_SQL["gopher_rules_filter"] = GOPHER_RULES_SQL
+register(gopher_rules_filter, GOPHER_RULES_SQL)
 
 
 def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1718,8 +1672,7 @@ FROM documents
 GROUP BY fp
 """
 
-SPARK_QUERIES["dedup_normalized"] = dedup_normalized
-ORACLE_SQL["dedup_normalized"] = DEDUP_NORMALIZED_SQL
+register(dedup_normalized, DEDUP_NORMALIZED_SQL)
 
 
 def quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1750,8 +1703,7 @@ SELECT source, COUNT(*) AS n_keep, CAST(SUM(n_bpe) AS BIGINT) AS kept_tokens, MI
 FROM s, thr WHERE n_bpe >= thr.t GROUP BY source
 """
 
-SPARK_QUERIES["quality_quantile_filter"] = quality_quantile_filter
-ORACLE_SQL["quality_quantile_filter"] = QUALITY_QUANTILE_SQL
+register(quality_quantile_filter, QUALITY_QUANTILE_SQL)
 
 
 def length_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1781,8 +1733,7 @@ SELECT bucket, COUNT(*) AS n_docs, CAST(SUM(n_bpe) AS BIGINT) AS actual_tokens,
 FROM b GROUP BY bucket
 """
 
-SPARK_QUERIES["length_bucket_stats"] = length_bucket_stats
-ORACLE_SQL["length_bucket_stats"] = LENGTH_BUCKET_SQL
+register(length_bucket_stats, LENGTH_BUCKET_SQL)
 
 
 def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1810,8 +1761,7 @@ SELECT _id AS doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
 FROM scored GROUP BY _id
 """
 
-SPARK_QUERIES["unigram_logprob_quality"] = unigram_logprob_quality
-ORACLE_SQL["unigram_logprob_quality"] = UNIGRAM_LOGPROB_SQL
+register(unigram_logprob_quality, UNIGRAM_LOGPROB_SQL)
 
 
 def knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1845,8 +1795,7 @@ WITH q AS (
 SELECT qid AS vec_id, label AS knn_label, votes FROM best WHERE vr = 1
 """
 
-SPARK_QUERIES["knn_label_vote"] = knn_label_vote
-ORACLE_SQL["knn_label_vote"] = KNN_VOTE_SQL
+register(knn_label_vote, KNN_VOTE_SQL)
 
 
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1880,8 +1829,7 @@ SELECT f.doc_id, f.source
 FROM fresh f JOIN surv s ON f.fp = s.fp AND f.doc_id = s.m
 """
 
-SPARK_QUERIES["dedup_incremental_batch"] = dedup_incremental_batch
-ORACLE_SQL["dedup_incremental_batch"] = DEDUP_INCREMENTAL_SQL
+register(dedup_incremental_batch, DEDUP_INCREMENTAL_SQL)
 
 
 def dedup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1908,8 +1856,7 @@ SELECT doc_id, score AS best_score, CAST(n_copies AS BIGINT) AS n_copies
 FROM ranked WHERE rk = 1
 """
 
-SPARK_QUERIES["dedup_keep_longest"] = dedup_keep_longest
-ORACLE_SQL["dedup_keep_longest"] = DEDUP_KEEP_LONGEST_SQL
+register(dedup_keep_longest, DEDUP_KEEP_LONGEST_SQL)
 
 
 def temperature_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1957,8 +1904,7 @@ SELECT r.source, r.n_tokens, r.share, r.rate,
 FROM rates r LEFT JOIN kept k ON r.source = k.source
 """
 
-SPARK_QUERIES["temperature_mix_sample"] = temperature_mix_sample
-ORACLE_SQL["temperature_mix_sample"] = TEMPERATURE_MIX_SQL
+register(temperature_mix_sample, TEMPERATURE_MIX_SQL)
 
 
 def duplicate_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1987,8 +1933,7 @@ FROM inv JOIN dfq USING (s)
 GROUP BY inv.doc_id
 """
 
-SPARK_QUERIES["duplicate_ngram_coverage"] = duplicate_ngram_coverage
-ORACLE_SQL["duplicate_ngram_coverage"] = DUP_NGRAM_COVERAGE_SQL
+register(duplicate_ngram_coverage, DUP_NGRAM_COVERAGE_SQL)
 
 
 def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2040,8 +1985,7 @@ FROM p
 GROUP BY 1
 """
 
-SPARK_QUERIES["minhash_calibration"] = minhash_calibration
-ORACLE_SQL["minhash_calibration"] = MINHASH_CALIBRATION_SQL
+register(minhash_calibration, MINHASH_CALIBRATION_SQL)
 
 
 def doc_lang_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2090,8 +2034,7 @@ FROM b2
 """
 
 
-SPARK_QUERIES["doc_lang_mix"] = doc_lang_mix
-ORACLE_SQL["doc_lang_mix"] = _lang_mix_sql()
+register(doc_lang_mix, _lang_mix_sql())
 
 
 def doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2124,8 +2067,7 @@ SELECT doc_id, n_words, n_sentences, n_syllables,
 FROM t
 """
 
-SPARK_QUERIES["doc_readability"] = doc_readability
-ORACLE_SQL["doc_readability"] = READABILITY_SQL
+register(doc_readability, READABILITY_SQL)
 
 
 _PQ_M = 4
@@ -2203,8 +2145,7 @@ LIMIT {_PQ_K}
 """
 
 
-SPARK_QUERIES["ann_pq_topk"] = ann_pq_topk
-ORACLE_SQL["ann_pq_topk"] = _pq_sql()
+register(ann_pq_topk, _pq_sql())
 
 
 _AE_FRAME, _AE_HOP, _AE_THR = 16, 8, 60_000
@@ -2256,8 +2197,7 @@ SELECT doc_id,
 FROM f
 """
 
-SPARK_QUERIES["multimodal_audio_energy"] = multimodal_audio_energy
-ORACLE_SQL["multimodal_audio_energy"] = AUDIO_ENERGY_SQL
+register(multimodal_audio_energy, AUDIO_ENERGY_SQL)
 
 
 _EMB_DECON_THR = 0.5
@@ -2294,8 +2234,7 @@ SELECT vec_id, MAX(cos_sim) AS max_bench_cos,
 FROM scored GROUP BY vec_id
 """
 
-SPARK_QUERIES["embedding_decontamination"] = embedding_decontamination
-ORACLE_SQL["embedding_decontamination"] = EMB_DECON_SQL
+register(embedding_decontamination, EMB_DECON_SQL)
 
 
 def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2319,8 +2258,7 @@ ORDER BY n DESC, pair ASC
 LIMIT 10
 """
 
-SPARK_QUERIES["bpe_merge_candidates"] = bpe_merge_candidates
-ORACLE_SQL["bpe_merge_candidates"] = BPE_MERGE_SQL
+register(bpe_merge_candidates, BPE_MERGE_SQL)
 
 
 _FUNNEL_DUP_MAX = 0.5
@@ -2431,8 +2369,7 @@ SELECT source,
 FROM flags GROUP BY source
 """
 
-SPARK_QUERIES["corpus_curation_funnel"] = corpus_curation_funnel
-ORACLE_SQL["corpus_curation_funnel"] = CURATION_FUNNEL_SQL
+register(corpus_curation_funnel, CURATION_FUNNEL_SQL)
 
 
 _KC_K = 6
@@ -2482,8 +2419,7 @@ def _kcenter_sql(k: int = _KC_K) -> str:
     return ",\n".join(parts) + "\n" + "\nUNION ALL ".join(picked_union)
 
 
-SPARK_QUERIES["coreset_kcenter"] = coreset_kcenter
-ORACLE_SQL["coreset_kcenter"] = _kcenter_sql()
+register(coreset_kcenter, _kcenter_sql())
 
 
 _NOISE_SAMPLE = "vec_id % 10 = 0"
@@ -2528,8 +2464,7 @@ FROM best WHERE vr = 1
 GROUP BY own
 """
 
-SPARK_QUERIES["label_noise_screen"] = label_noise_screen
-ORACLE_SQL["label_noise_screen"] = LABEL_NOISE_SQL
+register(label_noise_screen, LABEL_NOISE_SQL)
 
 
 def bigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2569,8 +2504,7 @@ SELECT _id AS doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
 FROM scored GROUP BY _id
 """
 
-SPARK_QUERIES["bigram_logprob_quality"] = bigram_logprob_quality
-ORACLE_SQL["bigram_logprob_quality"] = BIGRAM_LOGPROB_SQL
+register(bigram_logprob_quality, BIGRAM_LOGPROB_SQL)
 
 
 def multimodal_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2625,8 +2559,7 @@ FROM d GROUP BY doc_id
 """
 
 
-SPARK_QUERIES["multimodal_scene_changes"] = multimodal_scene_changes
-ORACLE_SQL["multimodal_scene_changes"] = _scene_change_sql()
+register(multimodal_scene_changes, _scene_change_sql())
 
 
 def bpe_token_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2672,8 +2605,7 @@ FROM documents d LEFT JOIN cost ON cost.doc_id = d.doc_id
 GROUP BY d.doc_id
 """
 
-SPARK_QUERIES["bpe_token_encode"] = bpe_token_encode
-ORACLE_SQL["bpe_token_encode"] = BPE_ENCODE_SQL
+register(bpe_token_encode, BPE_ENCODE_SQL)
 
 
 def pq_encode_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2734,8 +2666,7 @@ FROM codes ORDER BY vec_id, m
 """
 
 
-SPARK_QUERIES["pq_encode_codes"] = pq_encode_codes
-ORACLE_SQL["pq_encode_codes"] = _pq_encode_sql()
+register(pq_encode_codes, _pq_encode_sql())
 
 
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2767,8 +2698,7 @@ FROM (
 WHERE rk <= 10
 """
 
-SPARK_QUERIES["hard_negative_mining"] = hard_negative_mining
-ORACLE_SQL["hard_negative_mining"] = HARD_NEG_SQL
+register(hard_negative_mining, HARD_NEG_SQL)
 
 
 _MMR_QUERY, _MMR_K, _MMR_C = 23, 5, 12
@@ -2826,8 +2756,7 @@ def _mmr_sql(qid: int = _MMR_QUERY, k: int = _MMR_K, c: int = _MMR_C) -> str:
     )
 
 
-SPARK_QUERIES["mmr_diversified_topk"] = mmr_diversified_topk
-ORACLE_SQL["mmr_diversified_topk"] = _mmr_sql()
+register(mmr_diversified_topk, _mmr_sql())
 
 
 def label_centroid_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2857,8 +2786,7 @@ SELECT a.lbl AS label_a, b.lbl AS label_b, a.cnt AS n_a, b.cnt AS n_b,
 FROM vecs a JOIN vecs b ON a.lbl < b.lbl
 """
 
-SPARK_QUERIES["label_centroid_separability"] = label_centroid_separability
-ORACLE_SQL["label_centroid_separability"] = CENTROID_SEP_SQL
+register(label_centroid_separability, CENTROID_SEP_SQL)
 
 
 def doc_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2889,8 +2817,7 @@ SELECT d.doc_id, length(d.text) AS n_chars,
 FROM documents d LEFT JOIN ent ON ent.doc_id = d.doc_id
 """
 
-SPARK_QUERIES["doc_char_entropy"] = doc_char_entropy
-ORACLE_SQL["doc_char_entropy"] = CHAR_ENTROPY_SQL
+register(doc_char_entropy, CHAR_ENTROPY_SQL)
 
 
 def rake_top_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2942,8 +2869,7 @@ SELECT doc_id, phrase, score, CAST(rk AS BIGINT) AS rank FROM (
 WHERE rk <= 5
 """
 
-SPARK_QUERIES["rake_top_keywords"] = rake_top_keywords
-ORACLE_SQL["rake_top_keywords"] = RAKE_SQL
+register(rake_top_keywords, RAKE_SQL)
 
 
 def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2981,8 +2907,7 @@ ORDER BY pmi DESC, a ASC, b ASC
 LIMIT 20
 """
 
-SPARK_QUERIES["bigram_pmi_collocations"] = bigram_pmi_collocations
-ORACLE_SQL["bigram_pmi_collocations"] = PMI_SQL
+register(bigram_pmi_collocations, PMI_SQL)
 
 
 _PC_ITER = 3
@@ -3076,8 +3001,7 @@ FROM p{iters} CROSS JOIN nn CROSS JOIN ssF, range(1, {d} + 1) r(i)
     )
 
 
-SPARK_QUERIES["embedding_top_component"] = embedding_top_component
-ORACLE_SQL["embedding_top_component"] = _top_component_sql()
+register(embedding_top_component, _top_component_sql())
 
 
 def embedding_debias_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3145,8 +3069,7 @@ FROM deb
     )
 
 
-SPARK_QUERIES["embedding_debias_residuals"] = embedding_debias_residuals
-ORACLE_SQL["embedding_debias_residuals"] = _debias_sql()
+register(embedding_debias_residuals, _debias_sql())
 
 
 def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3184,8 +3107,7 @@ SELECT CAST(n AS BIGINT) AS n_terms,
 FROM m
 """
 
-SPARK_QUERIES["corpus_zipf_fit"] = corpus_zipf_fit
-ORACLE_SQL["corpus_zipf_fit"] = ZIPF_SQL
+register(corpus_zipf_fit, ZIPF_SQL)
 
 
 def embedding_dim_health(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3239,8 +3161,7 @@ SELECT CAST(dim AS INTEGER) AS dim, n,
 FROM agg
 """
 
-SPARK_QUERIES["embedding_dim_health"] = embedding_dim_health
-ORACLE_SQL["embedding_dim_health"] = DIM_HEALTH_SQL
+register(embedding_dim_health, DIM_HEALTH_SQL)
 
 
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3303,8 +3224,7 @@ FROM cells JOIN totals USING (labeled)
 """
 
 
-SPARK_QUERIES["lang_id_confusion"] = lang_id_confusion
-ORACLE_SQL["lang_id_confusion"] = _lang_confusion_sql()
+register(lang_id_confusion, _lang_confusion_sql())
 
 
 def source_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3380,8 +3300,7 @@ FROM u LEFT JOIN b USING (source)
 ORDER BY u.source
 """
 
-SPARK_QUERIES["source_distinct_ngrams"] = source_distinct_ngrams
-ORACLE_SQL["source_distinct_ngrams"] = DISTINCT_N_SQL
+register(source_distinct_ngrams, DISTINCT_N_SQL)
 
 
 _WIN_K, _WIN_W, _WIN_SHARED, _WIN_BUCKET = 12, 8, 5, 50
@@ -3448,8 +3367,7 @@ JOIN sizes sa ON sa.doc_id = a_id
 JOIN sizes sb ON sb.doc_id = b_id
 """
 
-SPARK_QUERIES["doc_winnow_overlap"] = doc_winnow_overlap
-ORACLE_SQL["doc_winnow_overlap"] = WINNOW_SQL
+register(doc_winnow_overlap, WINNOW_SQL)
 
 
 _TR_MIN_COOCCUR, _TR_ITER, _TR_TOPK = 5, 3, 20
@@ -3503,8 +3421,7 @@ ORDER BY rank_fp DESC, word LIMIT {_TR_TOPK}
 """
 
 
-SPARK_QUERIES["corpus_textrank_keywords"] = corpus_textrank_keywords
-ORACLE_SQL["corpus_textrank_keywords"] = _textrank_sql()
+register(corpus_textrank_keywords, _textrank_sql())
 
 
 _BM25_TERMS = ("hash", "join", "window", "skew")
@@ -3561,8 +3478,7 @@ ORDER BY SUM(ts) DESC, doc_id LIMIT {_BM25_TOPK}
 """
 
 
-SPARK_QUERIES["corpus_bm25_topk"] = corpus_bm25_topk
-ORACLE_SQL["corpus_bm25_topk"] = _bm25_sql()
+register(corpus_bm25_topk, _bm25_sql())
 
 
 _BLOCKLIST = [
@@ -3623,8 +3539,7 @@ SELECT p.phrase, COALESCE(agg.n_docs, 0) AS n_docs, COALESCE(agg.n_hits, 0) AS n
 FROM (SELECT DISTINCT phrase FROM phr) p LEFT JOIN agg USING (phrase)
 """.replace("{values}", _blocklist_values_sql())
 
-SPARK_QUERIES["blocklist_phrase_hits"] = blocklist_phrase_hits
-ORACLE_SQL["blocklist_phrase_hits"] = BLOCKLIST_SQL
+register(blocklist_phrase_hits, BLOCKLIST_SQL)
 
 
 _GM_ITER = 3
@@ -3690,8 +3605,7 @@ FROM y0 CROSS JOIN y{iters}, range(1, {d} + 1) r(i)
     )
 
 
-SPARK_QUERIES["embedding_geometric_median"] = embedding_geometric_median
-ORACLE_SQL["embedding_geometric_median"] = _geo_median_sql()
+register(embedding_geometric_median, _geo_median_sql())
 
 
 _HEAPS_POINTS = 20
@@ -3835,8 +3749,7 @@ SELECT m AS points,
 FROM agg
 """
 
-SPARK_QUERIES["corpus_heaps_law"] = corpus_heaps_law
-ORACLE_SQL["corpus_heaps_law"] = HEAPS_SQL
+register(corpus_heaps_law, HEAPS_SQL)
 
 
 def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3931,8 +3844,7 @@ SELECT src_a, src_b, round(CAST(SUM(w) AS DOUBLE) / 2, 9) AS jsd_bits
 FROM terms GROUP BY src_a, src_b
 """
 
-SPARK_QUERIES["source_js_divergence"] = source_js_divergence
-ORACLE_SQL["source_js_divergence"] = JSD_SQL
+register(source_js_divergence, JSD_SQL)
 
 
 _BD_TOP = 50
@@ -4055,8 +3967,7 @@ FROM z a JOIN z b ON a.tk = b.tk AND a.source < b.source
 GROUP BY 1, 2
 """
 
-SPARK_QUERIES["source_burrows_delta"] = source_burrows_delta
-ORACLE_SQL["source_burrows_delta"] = BURROWS_SQL
+register(source_burrows_delta, BURROWS_SQL)
 
 
 _TB_MIN, _TB_TOP = 50, 20
@@ -4127,8 +4038,7 @@ ORDER BY vmr DESC, term ASC
 LIMIT {_TB_TOP}
 """
 
-SPARK_QUERIES["term_burstiness"] = term_burstiness
-ORACLE_SQL["term_burstiness"] = BURSTINESS_SQL
+register(term_burstiness, BURSTINESS_SQL)
 
 
 _RECALL_PANEL = [0, 1, 2, 3, 4, 5, 6, 7]
@@ -4202,8 +4112,7 @@ SELECT q.query_id, COALESCE(hits.n, 0) AS n_hits,
 FROM q LEFT JOIN hits USING (query_id)
 """
 
-SPARK_QUERIES["ann_ivf_recall"] = ann_ivf_recall
-ORACLE_SQL["ann_ivf_recall"] = ANN_RECALL_SQL
+register(ann_ivf_recall, ANN_RECALL_SQL)
 
 
 def embedding_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4333,8 +4242,7 @@ FROM p{iters} CROSS JOIN nn CROSS JOIN ssF, range(1, {d} + 1) r(i)
     )
 
 
-SPARK_QUERIES["embedding_second_component"] = embedding_second_component
-ORACLE_SQL["embedding_second_component"] = _second_component_sql()
+register(embedding_second_component, _second_component_sql())
 
 
 def source_lm_transfer_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4442,8 +4350,7 @@ FROM terms GROUP BY train_src, eval_src, nev
 ORDER BY train_src, eval_src
 """
 
-SPARK_QUERIES["source_lm_transfer_matrix"] = source_lm_transfer_matrix
-ORACLE_SQL["source_lm_transfer_matrix"] = LM_TRANSFER_SQL
+register(source_lm_transfer_matrix, LM_TRANSFER_SQL)
 
 
 _LLR_MIN, _LLR_TOP = 5, 20
@@ -4545,8 +4452,7 @@ ORDER BY llr DESC, w1 ASC, w2 ASC
 LIMIT {_LLR_TOP}
 """
 
-SPARK_QUERIES["bigram_llr_collocations"] = bigram_llr_collocations
-ORACLE_SQL["bigram_llr_collocations"] = LLR_SQL
+register(bigram_llr_collocations, LLR_SQL)
 
 
 _NOV_K, _NOV_BUCKETS = 8, 10
@@ -4658,8 +4564,7 @@ FROM per_doc CROSS JOIN bounds
 GROUP BY 1 ORDER BY decile
 """
 
-SPARK_QUERIES["corpus_novelty_decay"] = corpus_novelty_decay
-ORACLE_SQL["corpus_novelty_decay"] = NOVELTY_SQL
+register(corpus_novelty_decay, NOVELTY_SQL)
 
 
 def lang_id_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4704,8 +4609,7 @@ FROM m
 """
 
 
-SPARK_QUERIES["lang_id_kappa"] = lang_id_kappa
-ORACLE_SQL["lang_id_kappa"] = _lang_kappa_sql()
+register(lang_id_kappa, _lang_kappa_sql())
 
 
 def source_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4771,8 +4675,7 @@ SELECT source, n AS n_tokens, v AS vocab, h AS hapax,
 FROM g ORDER BY source
 """
 
-SPARK_QUERIES["source_token_diversity"] = source_token_diversity
-ORACLE_SQL["source_token_diversity"] = TOKEN_DIVERSITY_SQL
+register(source_token_diversity, TOKEN_DIVERSITY_SQL)
 
 
 def embedding_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4824,8 +4727,7 @@ SELECT lbl AS label, CAST(COUNT(*) AS BIGINT) AS n,
 FROM per_pt GROUP BY lbl ORDER BY lbl
 """
 
-SPARK_QUERIES["embedding_centroid_silhouette"] = embedding_centroid_silhouette
-ORACLE_SQL["embedding_centroid_silhouette"] = SILHOUETTE_SQL
+register(embedding_centroid_silhouette, SILHOUETTE_SQL)
 
 
 _QQ_SRC_A, _QQ_SRC_B = "src0", "src1"
@@ -4910,8 +4812,7 @@ ORDER BY pct
 """
 
 
-SPARK_QUERIES["doc_length_qq_sources"] = doc_length_qq_sources
-ORACLE_SQL["doc_length_qq_sources"] = _qq_sources_sql()
+register(doc_length_qq_sources, _qq_sources_sql())
 
 
 _KM_K, _KM_ITERS = 4, 3
@@ -4980,8 +4881,7 @@ FROM fin GROUP BY 1 ORDER BY cluster
     )
 
 
-SPARK_QUERIES["embedding_kmeans_clusters"] = embedding_kmeans_clusters
-ORACLE_SQL["embedding_kmeans_clusters"] = _kmeans_sql(_KM_K, _KM_ITERS)
+register(embedding_kmeans_clusters, _kmeans_sql(_KM_K, _KM_ITERS))
 
 
 def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5022,8 +4922,7 @@ GROUP BY 1, 2 ORDER BY cluster, lang
 """
 )
 
-SPARK_QUERIES["kmeans_cluster_profile"] = kmeans_cluster_profile
-ORACLE_SQL["kmeans_cluster_profile"] = KMEANS_PROFILE_SQL
+register(kmeans_cluster_profile, KMEANS_PROFILE_SQL)
 
 
 def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5099,8 +4998,7 @@ GROUP BY lang ORDER BY lang
     )
 
 
-SPARK_QUERIES["bpe_fertility_by_lang"] = bpe_fertility_by_lang
-ORACLE_SQL["bpe_fertility_by_lang"] = _bpe_fertility_sql()
+register(bpe_fertility_by_lang, _bpe_fertility_sql())
 
 
 def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5161,8 +5059,7 @@ FROM clusters GROUP BY size ORDER BY cluster_size
     )
 
 
-SPARK_QUERIES["dedup_savings_report"] = dedup_savings_report
-ORACLE_SQL["dedup_savings_report"] = _dedup_savings_sql()
+register(dedup_savings_report, _dedup_savings_sql())
 
 
 def source_loo_lm_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5318,8 +5215,7 @@ SELECT source, CAST(ns AS BIGINT) AS n_tokens_removed,
 FROM loo CROSS JOIN fullm ORDER BY source
 """
 
-SPARK_QUERIES["source_loo_lm_value"] = source_loo_lm_value
-ORACLE_SQL["source_loo_lm_value"] = LOO_LM_SQL
+register(source_loo_lm_value, LOO_LM_SQL)
 
 
 _FW_SRC_A, _FW_SRC_B = "src0", "src1"
@@ -5410,5 +5306,4 @@ SELECT * FROM (SELECT * FROM ta UNION ALL SELECT * FROM tb)
 ORDER BY zscore DESC, w ASC
 """
 
-SPARK_QUERIES["source_fightin_words"] = source_fightin_words
-ORACLE_SQL["source_fightin_words"] = FIGHTIN_WORDS_SQL
+register(source_fightin_words, FIGHTIN_WORDS_SQL)

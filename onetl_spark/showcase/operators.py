@@ -17,6 +17,7 @@ from onetl_spark.connections import SparkSQLConnection
 from onetl_spark.db import DBReader
 from onetl_spark.hwm.types import ColumnIntHWM
 from onetl_spark.hwm.window import Edge, Window
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import scratch_path
 from onetl_spark.showcase.util import dsum, ensure_views, sql_dsum
 from onetl_spark.strategy import IncrementalBatchStrategy, SnapshotBatchStrategy
@@ -315,31 +316,16 @@ SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
 """
 
 
-SPARK_QUERIES = {
-    "dbreader_projection_filter": dbreader_projection_filter,
-    "dbreader_window_predicate": dbreader_window_predicate,
-    "dbreader_minmax_probe": dbreader_minmax_probe,
-    "snapshot_batch_union": snapshot_batch_union,
-    "incremental_batch_union": incremental_batch_union,
-    "incremental_resume": incremental_resume,
-    "partitioned_scan_hash": partitioned_scan_hash,
-    "partitioned_scan_mod": partitioned_scan_mod,
-    "write_roundtrip_modes": write_roundtrip_modes,
-    "filedf_csv_roundtrip": filedf_csv_roundtrip,
-}
-
-ORACLE_SQL = {
-    "dbreader_projection_filter": DBREADER_PROJ_SQL,
-    "dbreader_window_predicate": DBREADER_WINDOW_SQL,
-    "dbreader_minmax_probe": DBREADER_MINMAX_SQL,
-    "snapshot_batch_union": SNAPSHOT_BATCH_SQL,
-    "incremental_batch_union": INCREMENTAL_BATCH_SQL,
-    "incremental_resume": INCREMENTAL_RESUME_SQL,
-    "partitioned_scan_hash": PARTITIONED_HASH_SQL,
-    "partitioned_scan_mod": PARTITIONED_MOD_SQL,
-    "write_roundtrip_modes": WRITE_ROUNDTRIP_SQL,
-    "filedf_csv_roundtrip": FILEDF_CSV_SQL,
-}
+register(dbreader_projection_filter, DBREADER_PROJ_SQL)
+register(dbreader_window_predicate, DBREADER_WINDOW_SQL)
+register(dbreader_minmax_probe, DBREADER_MINMAX_SQL)
+register(snapshot_batch_union, SNAPSHOT_BATCH_SQL)
+register(incremental_batch_union, INCREMENTAL_BATCH_SQL)
+register(incremental_resume, INCREMENTAL_RESUME_SQL)
+register(partitioned_scan_hash, PARTITIONED_HASH_SQL)
+register(partitioned_scan_mod, PARTITIONED_MOD_SQL)
+register(write_roundtrip_modes, WRITE_ROUNDTRIP_SQL)
+register(filedf_csv_roundtrip, FILEDF_CSV_SQL)
 
 
 def dbreader_has_data(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -359,8 +345,7 @@ SELECT (SELECT COUNT(*) FROM orders WHERE o_totalprice > 0) > 0 AS has_rows,
        (SELECT COUNT(*) FROM orders WHERE o_totalprice < 0) > 0 AS has_rows_empty
 """
 
-SPARK_QUERIES["dbreader_has_data"] = dbreader_has_data
-ORACLE_SQL["dbreader_has_data"] = DBREADER_HAS_DATA_SQL
+register(dbreader_has_data, DBREADER_HAS_DATA_SQL)
 
 
 def salted_join_order_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,8 +376,7 @@ GROUP BY c.c_nationkey
 """
 
 
-SPARK_QUERIES["salted_join_order_volume"] = salted_join_order_volume
-ORACLE_SQL["salted_join_order_volume"] = SALTED_JOIN_SQL
+register(salted_join_order_volume, SALTED_JOIN_SQL)
 
 
 def _derby_scratch(sf_dir: str, name: str) -> str:
@@ -450,8 +434,7 @@ WHERE o_orderkey % 10 = 0 AND o_totalprice > 50000
 GROUP BY 1
 """
 
-SPARK_QUERIES["jdbc_live_roundtrip"] = jdbc_live_roundtrip
-ORACLE_SQL["jdbc_live_roundtrip"] = JDBC_LIVE_ROUNDTRIP_SQL
+register(jdbc_live_roundtrip, JDBC_LIVE_ROUNDTRIP_SQL)
 
 
 def jdbc_live_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -510,8 +493,7 @@ WHERE o_orderkey % 2 = 1
   AND o_orderkey > (SELECT MAX(o_orderkey) FROM orders WHERE o_orderkey % 2 = 0)
 """
 
-SPARK_QUERIES["jdbc_live_incremental"] = jdbc_live_incremental
-ORACLE_SQL["jdbc_live_incremental"] = JDBC_LIVE_INCREMENTAL_SQL
+register(jdbc_live_incremental, JDBC_LIVE_INCREMENTAL_SQL)
 
 
 def supplier_fuzzy_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,8 +535,7 @@ FROM clean c JOIN dirty d ON c.blk = d.blk
 WHERE levenshtein(c.nm, d.nm) <= 1
 """
 
-SPARK_QUERIES["supplier_fuzzy_linkage"] = supplier_fuzzy_linkage
-ORACLE_SQL["supplier_fuzzy_linkage"] = SUPPLIER_FUZZY_SQL
+register(supplier_fuzzy_linkage, SUPPLIER_FUZZY_SQL)
 
 
 def orders_global_row_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,8 +567,7 @@ FROM (
 WHERE row_idx % 1000 = 0
 """
 
-SPARK_QUERIES["orders_global_row_index"] = orders_global_row_index
-ORACLE_SQL["orders_global_row_index"] = ORDERS_GLOBAL_ROW_INDEX_SQL
+register(orders_global_row_index, ORDERS_GLOBAL_ROW_INDEX_SQL)
 
 
 def events_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -630,8 +610,7 @@ GROUP BY decile
 ORDER BY decile
 """
 
-SPARK_QUERIES["events_value_deciles"] = events_value_deciles
-ORACLE_SQL["events_value_deciles"] = EVENTS_VALUE_DECILES_SQL
+register(events_value_deciles, EVENTS_VALUE_DECILES_SQL)
 
 
 def orders_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -661,8 +640,7 @@ SELECT o_orderkey, pct_rank FROM (
 WHERE o_orderkey % 100 = 1
 """
 
-SPARK_QUERIES["orders_percent_rank"] = orders_percent_rank
-ORACLE_SQL["orders_percent_rank"] = ORDERS_PERCENT_RANK_SQL
+register(orders_percent_rank, ORDERS_PERCENT_RANK_SQL)
 
 
 def events_value_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,8 +669,7 @@ SELECT event_id, cd FROM (
 WHERE event_id % 137 = 0
 """
 
-SPARK_QUERIES["events_value_cume_dist"] = events_value_cume_dist
-ORACLE_SQL["events_value_cume_dist"] = EVENTS_CUME_DIST_SQL
+register(events_value_cume_dist, EVENTS_CUME_DIST_SQL)
 
 
 _PSI_BOUNDS = [5.0, 10.0, 20.0, 35.0, 60.0, 100.0, 160.0, 250.0]
@@ -759,8 +736,7 @@ SELECT -2, NULL, NULL, 1.0, 1.0, round(SUM(term), 9) FROM scored
 """
 
 
-SPARK_QUERIES["events_value_psi"] = events_value_psi
-ORACLE_SQL["events_value_psi"] = _psi_sql()
+register(events_value_psi, _psi_sql())
 
 
 def lineitem_orders_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,8 +768,7 @@ SELECT (SELECT COUNT(*) FROM c) AS n_child,
        (SELECT COUNT(*) FROM p WHERE pk NOT IN (SELECT DISTINCT ck FROM c)) AS n_unreferenced_parents
 """
 
-SPARK_QUERIES["lineitem_orders_integrity"] = lineitem_orders_integrity
-ORACLE_SQL["lineitem_orders_integrity"] = LINEITEM_INTEGRITY_SQL
+register(lineitem_orders_integrity, LINEITEM_INTEGRITY_SQL)
 
 
 def events_stats_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -852,8 +827,7 @@ SELECT 'user_id', r.n, c.n,
 FROM r CROSS JOIN c
 """
 
-SPARK_QUERIES["events_stats_drift"] = events_stats_drift
-ORACLE_SQL["events_stats_drift"] = EVENTS_STATS_DRIFT_SQL
+register(events_stats_drift, EVENTS_STATS_DRIFT_SQL)
 
 
 _Z_BITS, _Z_CELL_BITS = 16, 4
@@ -894,8 +868,7 @@ FROM keyed GROUP BY cell
 """
 
 
-SPARK_QUERIES["orders_zorder_cells"] = orders_zorder_cells
-ORACLE_SQL["orders_zorder_cells"] = _zorder_sql()
+register(orders_zorder_cells, _zorder_sql())
 
 
 def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -937,8 +910,7 @@ GROUP BY event_type
 ORDER BY event_type
 """
 
-SPARK_QUERIES["incremental_rollup_merge"] = incremental_rollup_merge
-ORACLE_SQL["incremental_rollup_merge"] = INCREMENTAL_ROLLUP_MERGE_SQL
+register(incremental_rollup_merge, INCREMENTAL_ROLLUP_MERGE_SQL)
 
 
 def user_value_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -979,8 +951,7 @@ SELECT n,
 FROM m
 """
 
-SPARK_QUERIES["user_value_gini"] = user_value_gini
-ORACLE_SQL["user_value_gini"] = USER_VALUE_GINI_SQL
+register(user_value_gini, USER_VALUE_GINI_SQL)
 
 
 def events_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1004,8 +975,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n,
 FROM (SELECT CAST(value AS DOUBLE) AS v FROM events WHERE value IS NOT NULL)
 """
 
-SPARK_QUERIES["events_value_winsorized"] = events_value_winsorized
-ORACLE_SQL["events_value_winsorized"] = EVENTS_WINSORIZED_SQL
+register(events_value_winsorized, EVENTS_WINSORIZED_SQL)
 
 
 def events_value_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1054,8 +1024,7 @@ SELECT tot.ta AS n_ref, tot.tb AS n_cur,
 FROM tot
 """
 
-SPARK_QUERIES["events_value_ks_drift"] = events_value_ks_drift
-ORACLE_SQL["events_value_ks_drift"] = EVENTS_KS_SQL
+register(events_value_ks_drift, EVENTS_KS_SQL)
 
 
 def events_value_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1113,8 +1082,7 @@ SELECT tot.ta AS n_ref, tot.tb AS n_cur,
 FROM m CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_value_mannwhitney"] = events_value_mannwhitney
-ORACLE_SQL["events_value_mannwhitney"] = EVENTS_MWU_SQL
+register(events_value_mannwhitney, EVENTS_MWU_SQL)
 
 
 def events_type_segment_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1168,8 +1136,7 @@ SELECT n, ka AS n_a, kb AS n_b, round(chi2, 9) AS chi2,
 FROM m
 """
 
-SPARK_QUERIES["events_type_segment_cramers_v"] = events_type_segment_cramers_v
-ORACLE_SQL["events_type_segment_cramers_v"] = EVENTS_CRAMERS_V_SQL
+register(events_type_segment_cramers_v, EVENTS_CRAMERS_V_SQL)
 
 
 def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1220,8 +1187,7 @@ SELECT digit, n_obs, obs_share, exp_share,
 FROM scored CROSS JOIN chi
 """
 
-SPARK_QUERIES["orders_benford_audit"] = orders_benford_audit
-ORACLE_SQL["orders_benford_audit"] = ORDERS_BENFORD_SQL
+register(orders_benford_audit, ORDERS_BENFORD_SQL)
 
 
 def events_purchase_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1266,8 +1232,7 @@ SELECT np AS n_pos, nn AS n_neg,
 FROM m CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_purchase_auc"] = events_purchase_auc
-ORACLE_SQL["events_purchase_auc"] = EVENTS_AUC_SQL
+register(events_purchase_auc, EVENTS_AUC_SQL)
 
 
 def events_purchase_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1314,8 +1279,7 @@ FROM b CROSS JOIN tot
 ORDER BY bucket
 """
 
-SPARK_QUERIES["events_purchase_gains"] = events_purchase_gains
-ORACLE_SQL["events_purchase_gains"] = EVENTS_GAINS_SQL
+register(events_purchase_gains, EVENTS_GAINS_SQL)
 
 
 def user_spend_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1395,8 +1359,7 @@ SELECT CAST(decile AS INTEGER) AS decile, n_users,
 FROM g ORDER BY decile
 """
 
-SPARK_QUERIES["user_spend_lorenz"] = user_spend_lorenz
-ORACLE_SQL["user_spend_lorenz"] = LORENZ_SQL
+register(user_spend_lorenz, LORENZ_SQL)
 
 
 def events_type_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1456,8 +1419,7 @@ SELECT tot.tn AS n_total, agg.k AS k_groups,
 FROM agg CROSS JOIN s2 CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_type_kruskal_wallis"] = events_type_kruskal_wallis
-ORACLE_SQL["events_type_kruskal_wallis"] = EVENTS_KW_SQL
+register(events_type_kruskal_wallis, EVENTS_KW_SQL)
 
 
 def events_value_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1513,8 +1475,7 @@ SELECT n_ref, n_cur, cliffs_delta,
 FROM d
 """
 
-SPARK_QUERIES["events_value_cliffs_delta"] = events_value_cliffs_delta
-ORACLE_SQL["events_value_cliffs_delta"] = EVENTS_CLIFFS_SQL
+register(events_value_cliffs_delta, EVENTS_CLIFFS_SQL)
 
 
 def events_value_hellinger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1565,8 +1526,7 @@ FROM m CROSS JOIN tot
 """
 
 
-SPARK_QUERIES["events_value_hellinger"] = events_value_hellinger
-ORACLE_SQL["events_value_hellinger"] = _hellinger_sql()
+register(events_value_hellinger, _hellinger_sql())
 
 
 def events_purchase_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1614,8 +1574,7 @@ SELECT tot.np AS n_pos, tot.n - tot.np AS n_neg,
 FROM m CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_purchase_pr_auc"] = events_purchase_pr_auc
-ORACLE_SQL["events_purchase_pr_auc"] = EVENTS_PR_AUC_SQL
+register(events_purchase_pr_auc, EVENTS_PR_AUC_SQL)
 
 
 def events_purchase_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1680,8 +1639,7 @@ ORDER BY bucket
 """
 
 
-SPARK_QUERIES["events_purchase_calibration"] = events_purchase_calibration
-ORACLE_SQL["events_purchase_calibration"] = _calibration_sql()
+register(events_purchase_calibration, _calibration_sql())
 
 
 def events_purchase_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1779,8 +1737,7 @@ SELECT * FROM ({body}) u ORDER BY feature
 """
 
 
-SPARK_QUERIES["events_purchase_info_gain"] = events_purchase_info_gain
-ORACLE_SQL["events_purchase_info_gain"] = _info_gain_sql()
+register(events_purchase_info_gain, _info_gain_sql())
 
 
 def orders_priority_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1827,8 +1784,7 @@ SELECT n, n_pos,
 FROM m
 """
 
-SPARK_QUERIES["orders_priority_trend"] = orders_priority_trend
-ORACLE_SQL["orders_priority_trend"] = CA_TREND_SQL
+register(orders_priority_trend, CA_TREND_SQL)
 
 
 def order_to_ship_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1891,8 +1847,7 @@ FROM (
 GROUP BY decile ORDER BY decile
 """
 
-SPARK_QUERIES["order_to_ship_latency"] = order_to_ship_latency
-ORACLE_SQL["order_to_ship_latency"] = SHIP_LATENCY_SQL
+register(order_to_ship_latency, SHIP_LATENCY_SQL)
 
 
 def priority_region_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1978,8 +1933,7 @@ FROM cells JOIN rm USING (priority) JOIN cm USING (region) CROSS JOIN nn
 ORDER BY priority, region
 """
 
-SPARK_QUERIES["priority_region_residuals"] = priority_region_residuals
-ORACLE_SQL["priority_region_residuals"] = PRIORITY_REGION_RESID_SQL
+register(priority_region_residuals, PRIORITY_REGION_RESID_SQL)
 
 
 _WILSON_Z = 1.959963984540054
@@ -2054,8 +2008,7 @@ FROM g ORDER BY bucket
 """
 
 
-SPARK_QUERIES["purchase_rate_by_value_bin"] = purchase_rate_by_value_bin
-ORACLE_SQL["purchase_rate_by_value_bin"] = _rate_curve_sql()
+register(purchase_rate_by_value_bin, _rate_curve_sql())
 
 
 def events_weekly_psi_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2168,8 +2121,7 @@ FROM j GROUP BY week ORDER BY week
 """
 
 
-SPARK_QUERIES["events_weekly_psi_trajectory"] = events_weekly_psi_trajectory
-ORACLE_SQL["events_weekly_psi_trajectory"] = _weekly_psi_sql()
+register(events_weekly_psi_trajectory, _weekly_psi_sql())
 
 
 _FK_CANDIDATES = (
@@ -2250,8 +2202,7 @@ SELECT '{child_t}.{child_c}' AS child, '{parent_t}.{parent_c}' AS parent,
     return "\nUNION ALL\n".join(parts) + "\nORDER BY child, parent"
 
 
-SPARK_QUERIES["fk_candidate_profile"] = fk_candidate_profile
-ORACLE_SQL["fk_candidate_profile"] = _fk_profile_sql()
+register(fk_candidate_profile, _fk_profile_sql())
 
 
 def surrogate_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2300,8 +2251,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM keyed
 """
 
-SPARK_QUERIES["surrogate_key_audit"] = surrogate_key_audit
-ORACLE_SQL["surrogate_key_audit"] = SURROGATE_SQL
+register(surrogate_key_audit, SURROGATE_SQL)
 
 
 def events_value_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2354,9 +2304,7 @@ SELECT (SELECT ta FROM tot) AS n_ref,
 FROM terms
 """
 
-SPARK_QUERIES["events_value_wasserstein"] = events_value_wasserstein
-ORACLE_SQL["events_value_wasserstein"] = EVENTS_W1_SQL
-
+register(events_value_wasserstein, EVENTS_W1_SQL)
 
 
 def order_linenumber_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2410,8 +2358,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
 FROM flagged
 """
 
-SPARK_QUERIES["order_linenumber_gaps"] = order_linenumber_gaps
-ORACLE_SQL["order_linenumber_gaps"] = LINENUMBER_GAPS_SQL
+register(order_linenumber_gaps, LINENUMBER_GAPS_SQL)
 
 
 def events_purchase_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2475,8 +2422,7 @@ SELECT tot.m AS n_pos, tot.n AS n_neg,
 FROM agg CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_purchase_auc_delong"] = events_purchase_auc_delong
-ORACLE_SQL["events_purchase_auc_delong"] = AUC_DELONG_SQL
+register(events_purchase_auc_delong, AUC_DELONG_SQL)
 
 
 def events_value_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2537,8 +2483,7 @@ SELECT tot.ta AS n_ref, tot.tb AS n_cur,
 FROM agg CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_value_energy_distance"] = events_value_energy_distance
-ORACLE_SQL["events_value_energy_distance"] = ENERGY_SQL
+register(events_value_energy_distance, ENERGY_SQL)
 
 
 def events_value_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2589,8 +2534,7 @@ SELECT tot.ta AS n_ref, tot.tb AS n_cur,
 FROM agg CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_value_cvm"] = events_value_cvm
-ORACLE_SQL["events_value_cvm"] = CVM_SQL
+register(events_value_cvm, CVM_SQL)
 
 
 def events_value_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2644,8 +2588,7 @@ SELECT tot.ta AS n_ref, tot.tb AS n_cur,
 FROM agg CROSS JOIN tot
 """
 
-SPARK_QUERIES["events_value_anderson_darling"] = events_value_anderson_darling
-ORACLE_SQL["events_value_anderson_darling"] = AD_SQL
+register(events_value_anderson_darling, AD_SQL)
 
 
 def orders_price_date_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2684,5 +2627,4 @@ WHERE prevmax IS NULL OR orderdate > prevmax
 ORDER BY price
 """
 
-SPARK_QUERIES["orders_price_date_skyline"] = orders_price_date_skyline
-ORACLE_SQL["orders_price_date_skyline"] = SKYLINE_SQL
+register(orders_price_date_skyline, SKYLINE_SQL)

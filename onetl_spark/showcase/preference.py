@@ -13,10 +13,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from onetl_spark.operators.preference import bradley_terry, pairwise_outcomes
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _BT_ITER = 5
 
@@ -125,8 +124,7 @@ ORDER BY brand
     )
 
 
-SPARK_QUERIES["brand_bradley_terry"] = brand_bradley_terry
-ORACLE_SQL["brand_bradley_terry"] = _brand_bt_sql()
+register(brand_bradley_terry, _brand_bt_sql())
 
 
 def brand_bt_upset_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,8 +217,7 @@ FROM scored
     )
 
 
-SPARK_QUERIES["brand_bt_upset_rate"] = brand_bt_upset_rate
-ORACLE_SQL["brand_bt_upset_rate"] = _upset_rate_sql()
+register(brand_bt_upset_rate, _upset_rate_sql())
 
 
 def doc_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -300,5 +297,4 @@ WHERE t.rk * 2 < t.n + 1 AND t.n_chars > b.n_chars
 ORDER BY t.source, t.lang, chosen_id
 """
 
-SPARK_QUERIES["doc_preference_pairs"] = doc_preference_pairs
-ORACLE_SQL["doc_preference_pairs"] = DOC_PAIRS_SQL
+register(doc_preference_pairs, DOC_PAIRS_SQL)

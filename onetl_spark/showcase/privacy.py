@@ -22,10 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.privacy import dp_count_release, dp_sum_release
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views, sql_fsig
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _EPS_COUNT = 1.0
 _EPS_SUM = 1.0
@@ -250,9 +249,6 @@ SELECT '_composition_total', CAST(NULL AS VARCHAR), CAST(NULL AS DOUBLE),
 """
 
 
-SPARK_QUERIES["dp_active_users_by_type"] = dp_active_users_by_type
-ORACLE_SQL["dp_active_users_by_type"] = COUNT_RELEASE_SQL
-SPARK_QUERIES["dp_value_sum_by_type"] = dp_value_sum_by_type
-ORACLE_SQL["dp_value_sum_by_type"] = SUM_RELEASE_SQL
-SPARK_QUERIES["dp_release_audit"] = dp_release_audit
-ORACLE_SQL["dp_release_audit"] = AUDIT_SQL
+register(dp_active_users_by_type, COUNT_RELEASE_SQL)
+register(dp_value_sum_by_type, SUM_RELEASE_SQL)
+register(dp_release_audit, AUDIT_SQL)

@@ -23,10 +23,9 @@ from onetl_spark.llm.retrieval_eval import (
     quantization_ledger,
     recall_by_slice,
 )
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _K = 10
 # Panel = every 25th vector, SIZE-CAPPED at 500 queries: an evaluation
@@ -110,7 +109,7 @@ def ann_recall_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("slice")
 
 
-ORACLE_SQL["ann_recall_by_label"] = f"""
+register(ann_recall_by_label, f"""
 WITH {_base_ctes(1, with_slice=True).strip()},
 approx AS (
   SELECT query_id, neighbor_id
@@ -134,9 +133,7 @@ SELECT slice,
 FROM per_query
 GROUP BY slice
 ORDER BY slice
-"""
-
-SPARK_QUERIES["ann_recall_by_label"] = ann_recall_by_label
+""")
 
 
 def ann_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,7 +147,7 @@ def ann_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id")
 
 
-ORACLE_SQL["ann_mrr"] = f"""
+register(ann_mrr, f"""
 WITH {_base_ctes(1).strip()},
 nn AS (
   SELECT query_id, neighbor_id AS nn_id
@@ -176,9 +173,7 @@ SELECT nn.query_id, nn.nn_id,
 FROM nn LEFT JOIN approx_ranked ar
   ON nn.query_id = ar.query_id AND nn.nn_id = ar.neighbor_id
 ORDER BY nn.query_id
-"""
-
-SPARK_QUERIES["ann_mrr"] = ann_mrr
+""")
 
 
 def ivf_quantization_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,7 +188,7 @@ def ivf_quantization_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("centroid_id")
 
 
-ORACLE_SQL["ivf_quantization_ledger"] = f"""
+register(ivf_quantization_ledger, f"""
 WITH centroids AS (
   SELECT vec_id AS centroid_id, embedding AS cvec FROM embeddings
   WHERE {_CENTROIDS}
@@ -224,9 +219,7 @@ SELECT centroid_id, n_vecs,
        mean_loss, max_loss
 FROM cells CROSS JOIN (SELECT CAST(SUM(n_vecs) AS DOUBLE) AS total FROM cells) t
 ORDER BY centroid_id
-"""
-
-SPARK_QUERIES["ivf_quantization_ledger"] = ivf_quantization_ledger
+""")
 
 
 def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,7 +234,7 @@ def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("nprobe")
 
 
-ORACLE_SQL["ivf_probe_sweep"] = f"""
+register(ivf_probe_sweep, f"""
 WITH {_base_ctes(max(_PROBES)).strip()},
 probes(nprobe) AS (VALUES {', '.join(f'({p})' for p in _PROBES)}),
 swept AS (
@@ -268,9 +261,7 @@ SELECT CAST(nprobe AS INT) AS nprobe,
 FROM per_query
 GROUP BY nprobe
 ORDER BY nprobe
-"""
-
-SPARK_QUERIES["ivf_probe_sweep"] = ivf_probe_sweep
+""")
 
 
 def semantic_near_dup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,8 +338,7 @@ ORDER BY a_id, b_id
 """
 
 
-SPARK_QUERIES["semantic_near_dup_banded"] = semantic_near_dup_banded
-ORACLE_SQL["semantic_near_dup_banded"] = _banded_near_dup_sql()
+register(semantic_near_dup_banded, _banded_near_dup_sql())
 
 
 def banded_near_dup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -440,5 +430,4 @@ FROM hit
 """
 
 
-SPARK_QUERIES["banded_near_dup_recall"] = banded_near_dup_recall
-ORACLE_SQL["banded_near_dup_recall"] = _banded_recall_sql()
+register(banded_near_dup_recall, _banded_recall_sql())

@@ -34,11 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.ri_store import ri_apply_batch, ri_final_status
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _N_BATCHES = 3
 _FACT_PRED = "o_orderkey % 4 = 0"
@@ -206,9 +205,6 @@ def streaming_ri_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _status_out(ri_final_status(events))
 
 
-SPARK_QUERIES["incremental_ri_verdicts"] = incremental_ri_verdicts
-ORACLE_SQL["incremental_ri_verdicts"] = VERDICTS_SQL
-SPARK_QUERIES["incremental_ri_report"] = incremental_ri_report
-ORACLE_SQL["incremental_ri_report"] = REPORT_SQL
-SPARK_QUERIES["streaming_ri_monitor"] = streaming_ri_monitor
-ORACLE_SQL["streaming_ri_monitor"] = VERDICTS_SQL
+register(incremental_ri_verdicts, VERDICTS_SQL)
+register(incremental_ri_report, REPORT_SQL)
+register(streaming_ri_monitor, VERDICTS_SQL)

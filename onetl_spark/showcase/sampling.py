@@ -26,6 +26,7 @@ from onetl_spark.llm.text import (
     repetition_stats,
     token_count,
 )
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views
 
 SQL_TOKENS = r"list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"
@@ -215,21 +216,11 @@ FROM us LEFT JOIN bs USING (doc_id)
 """
 
 
-SPARK_QUERIES = {
-    "corpus_split_counts": corpus_split_counts,
-    "stratified_sample_counts": stratified_sample_counts,
-    "sequence_packing": sequence_packing,
-    "pii_redaction": pii_redaction,
-    "doc_repetition_stats": doc_repetition_stats,
-}
-
-ORACLE_SQL = {
-    "corpus_split_counts": CORPUS_SPLIT_SQL,
-    "stratified_sample_counts": STRATIFIED_SAMPLE_SQL,
-    "sequence_packing": SEQUENCE_PACKING_SQL,
-    "pii_redaction": _pii_sql(),
-    "doc_repetition_stats": REPETITION_SQL,
-}
+register(corpus_split_counts, CORPUS_SPLIT_SQL)
+register(stratified_sample_counts, STRATIFIED_SAMPLE_SQL)
+register(sequence_packing, SEQUENCE_PACKING_SQL)
+register(pii_redaction, _pii_sql())
+register(doc_repetition_stats, REPETITION_SQL)
 
 
 def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,8 +252,7 @@ FROM (
 WHERE rn <= 20
 """
 
-SPARK_QUERIES["weighted_doc_sample"] = weighted_doc_sample
-ORACLE_SQL["weighted_doc_sample"] = WEIGHTED_SAMPLE_SQL
+register(weighted_doc_sample, WEIGHTED_SAMPLE_SQL)
 
 
 def leakage_safe_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,8 +298,7 @@ SELECT split, COUNT(*) AS n_docs, COUNT(DISTINCT fp) AS n_clusters,
 FROM assigned GROUP BY 1
 """
 
-SPARK_QUERIES["leakage_safe_split_counts"] = leakage_safe_split_counts
-ORACLE_SQL["leakage_safe_split_counts"] = LEAKAGE_SPLIT_SQL
+register(leakage_safe_split_counts, LEAKAGE_SPLIT_SQL)
 
 
 _TRIM_BUDGET = 10_000
@@ -375,8 +364,7 @@ FROM c WHERE cum <= {_TRIM_BUDGET}
 GROUP BY lang
 """
 
-SPARK_QUERIES["corpus_budget_trim"] = corpus_budget_trim
-ORACLE_SQL["corpus_budget_trim"] = BUDGET_TRIM_SQL
+register(corpus_budget_trim, BUDGET_TRIM_SQL)
 
 
 _N_SHUFFLE_SHARDS = 8
@@ -409,8 +397,7 @@ FROM k
 """
 
 
-SPARK_QUERIES["training_shuffle_shards"] = training_shuffle_shards
-ORACLE_SQL["training_shuffle_shards"] = _shuffle_sql()
+register(training_shuffle_shards, _shuffle_sql())
 
 
 _CORR_RATE = 15
@@ -456,5 +443,4 @@ FROM g
 """
 
 
-SPARK_QUERIES["span_corruption_stats"] = span_corruption_stats
-ORACLE_SQL["span_corruption_stats"] = _span_corruption_sql()
+register(span_corruption_stats, _span_corruption_sql())

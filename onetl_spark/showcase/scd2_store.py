@@ -29,11 +29,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.cdc import scd2_apply_batch, scd2_batch_audit
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import batch_stream, run_foreach_batch, stage_batches
 from onetl_spark.showcase.util import ensure_views
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _USER_PRED = "user_id % 5 = 0"
 _CUT1 = "2024-01-11 00:00:00"
@@ -306,11 +305,7 @@ def el_scd2_dimension_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DBReader(conn, source=target).run()
 
 
-SPARK_QUERIES["incremental_scd2_state"] = incremental_scd2_state
-ORACLE_SQL["incremental_scd2_state"] = STATE_SQL
-SPARK_QUERIES["incremental_scd2_audit"] = incremental_scd2_audit
-ORACLE_SQL["incremental_scd2_audit"] = AUDIT_SQL
-SPARK_QUERIES["streaming_scd2_store"] = streaming_scd2_store
-ORACLE_SQL["streaming_scd2_store"] = STATE_SQL
-SPARK_QUERIES["el_scd2_dimension_pipeline"] = el_scd2_dimension_pipeline
-ORACLE_SQL["el_scd2_dimension_pipeline"] = STATE_SQL
+register(incremental_scd2_state, STATE_SQL)
+register(incremental_scd2_audit, AUDIT_SQL)
+register(streaming_scd2_store, STATE_SQL)
+register(el_scd2_dimension_pipeline, STATE_SQL)

@@ -28,10 +28,9 @@ from onetl_spark.llm.selection import (
     dsir_select,
     hashed_ngram_features,
 )
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views, sql_davg
 
-SPARK_QUERIES: dict = {}
-ORACLE_SQL: dict = {}
 
 _B = DEFAULT_BUCKETS
 _TOP = 200      # importance-scores query: top docs by weight
@@ -234,9 +233,6 @@ FROM raw r LEFT JOIN picked p ON p.source = r.source CROSS JOIN tot
 """
 
 
-SPARK_QUERIES["dsir_importance_scores"] = dsir_importance_scores
-ORACLE_SQL["dsir_importance_scores"] = DSIR_SCORES_SQL
-SPARK_QUERIES["dsir_selection_report"] = dsir_selection_report
-ORACLE_SQL["dsir_selection_report"] = DSIR_SELECTION_SQL
-SPARK_QUERIES["dsir_composition_shift"] = dsir_composition_shift
-ORACLE_SQL["dsir_composition_shift"] = DSIR_SHIFT_SQL
+register(dsir_importance_scores, DSIR_SCORES_SQL)
+register(dsir_selection_report, DSIR_SELECTION_SQL)
+register(dsir_composition_shift, DSIR_SHIFT_SQL)

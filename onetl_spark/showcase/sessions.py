@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import dsum, ensure_views, sql_dsum
 
 SESSION_GAP_MIN = 30
@@ -92,11 +93,6 @@ BUCKETED_SQL = """
 SELECT * FROM customer
 """
 
-
-SPARK_QUERIES = {
-    "events_sessionization": events_sessionization,
-    "bucketed_write_roundtrip": bucketed_write_roundtrip,
-}
 
 def session_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 session-opening event paths: gaps-and-islands sessions
@@ -181,10 +177,6 @@ LIMIT 10
 """
 
 
-SPARK_QUERIES["session_top_paths"] = session_top_paths
-
-ORACLE_SQL = {
-    "events_sessionization": SESSIONIZATION_SQL,
-    "bucketed_write_roundtrip": BUCKETED_SQL,
-    "session_top_paths": SESSION_PATHS_SQL,
-}
+register(events_sessionization, SESSIONIZATION_SQL)
+register(bucketed_write_roundtrip, BUCKETED_SQL)
+register(session_top_paths, SESSION_PATHS_SQL)

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from onetl_spark.file.format.parquet import Parquet
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.replay import run_foreach_batch, staging_dir
 from onetl_spark.showcase.sessions import SESSION_GAP_MIN
 from onetl_spark.showcase.util import dsum, sql_dsum, sql_fsig
@@ -327,23 +328,12 @@ FROM events c JOIN events p
 """
 
 
-SPARK_QUERIES = {
-    "streaming_enriched_counts": streaming_enriched_counts,
-    "streaming_click_purchase_join": streaming_click_purchase_join,
-    "streaming_windowed_agg": streaming_windowed_agg,
-    "streaming_sessionize": streaming_sessionize,
-    "streaming_dedup_keys": streaming_dedup_keys,
-    "streaming_stateful_totals": streaming_stateful_totals,
-}
-
-ORACLE_SQL = {
-    "streaming_enriched_counts": STREAMING_ENRICHED_SQL,
-    "streaming_click_purchase_join": STREAMING_CLICK_PURCHASE_SQL,
-    "streaming_windowed_agg": STREAMING_WINDOWED_AGG_SQL,
-    "streaming_sessionize": STREAMING_SESSIONIZE_SQL,
-    "streaming_dedup_keys": STREAMING_DEDUP_SQL,
-    "streaming_stateful_totals": STREAMING_STATEFUL_SQL,
-}
+register(streaming_enriched_counts, STREAMING_ENRICHED_SQL)
+register(streaming_click_purchase_join, STREAMING_CLICK_PURCHASE_SQL)
+register(streaming_windowed_agg, STREAMING_WINDOWED_AGG_SQL)
+register(streaming_sessionize, STREAMING_SESSIONIZE_SQL)
+register(streaming_dedup_keys, STREAMING_DEDUP_SQL)
+register(streaming_stateful_totals, STREAMING_STATEFUL_SQL)
 
 
 def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,10 +374,8 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SPARK_QUERIES["streaming_cdc_apply"] = streaming_cdc_apply
-
 from onetl_spark.showcase.cdc import CDC_LATEST_SQL as _CDC_SQL
-ORACLE_SQL["streaming_cdc_apply"] = _CDC_SQL
+register(streaming_cdc_apply, _CDC_SQL)
 
 
 def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -427,8 +415,7 @@ FROM expanded
 GROUP BY 1, 2, 3
 """
 
-SPARK_QUERIES["streaming_sliding_window"] = streaming_sliding_window
-ORACLE_SQL["streaming_sliding_window"] = STREAMING_SLIDING_SQL
+register(streaming_sliding_window, STREAMING_SLIDING_SQL)
 
 
 def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,8 +486,7 @@ WITH c AS (
 SELECT * FROM matched UNION ALL SELECT * FROM unmatched
 """
 
-SPARK_QUERIES["streaming_left_outer_join"] = streaming_left_outer_join
-ORACLE_SQL["streaming_left_outer_join"] = STREAMING_LEFT_OUTER_SQL
+register(streaming_left_outer_join, STREAMING_LEFT_OUTER_SQL)
 
 
 def streaming_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,13 +543,11 @@ def streaming_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SPARK_QUERIES["streaming_rollup_maintenance"] = streaming_rollup_maintenance
-
 from onetl_spark.showcase.operators import (  # noqa: E402
     INCREMENTAL_ROLLUP_MERGE_SQL as _ROLLUP_SQL,
 )
 
-ORACLE_SQL["streaming_rollup_maintenance"] = _ROLLUP_SQL
+register(streaming_rollup_maintenance, _ROLLUP_SQL)
 
 
 _HIST_EDGES = [10.0, 20.0, 50.0, 100.0, 200.0]
@@ -617,8 +601,7 @@ FROM grid LEFT JOIN b ON b.event_type = grid.event_type AND b.bin = grid.bin
 GROUP BY 1, 2
 """
 
-SPARK_QUERIES["streaming_value_histogram"] = streaming_value_histogram
-ORACLE_SQL["streaming_value_histogram"] = STREAMING_HISTOGRAM_SQL
+register(streaming_value_histogram, STREAMING_HISTOGRAM_SQL)
 
 
 def streaming_type_topk_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -656,8 +639,7 @@ FROM (
 ) WHERE rk <= 3
 """
 
-SPARK_QUERIES["streaming_type_topk_values"] = streaming_type_topk_values
-ORACLE_SQL["streaming_type_topk_values"] = STREAMING_TOPK_SQL
+register(streaming_type_topk_values, STREAMING_TOPK_SQL)
 
 
 _DRIFT_MAX_DAYS = 64   # production state bound; inactive at the 30-day window
@@ -835,5 +817,4 @@ JOIN neg g ON g.event_type = p.event_type
 JOIN per_key k ON k.event_type = p.event_type
 """
 
-SPARK_QUERIES["streaming_rolling_drift"] = streaming_rolling_drift
-ORACLE_SQL["streaming_rolling_drift"] = STREAMING_DRIFT_SQL
+register(streaming_rolling_drift, STREAMING_DRIFT_SQL)

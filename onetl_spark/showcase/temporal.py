@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from onetl_spark.operators.temporal import asof_join, range_join, scd2_intervals
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import ensure_views
 
 
@@ -112,17 +113,9 @@ JOIN (SELECT * FROM events WHERE event_type = 'error') e
 """
 
 
-SPARK_QUERIES = {
-    "asof_join_events": asof_join_events,
-    "asof_join_tolerance": asof_join_tolerance,
-    "range_join_events": range_join_events,
-}
-
-ORACLE_SQL = {
-    "asof_join_events": ASOF_SQL,
-    "asof_join_tolerance": ASOF_TOLERANCE_SQL,
-    "range_join_events": RANGE_SQL,
-}
+register(asof_join_events, ASOF_SQL)
+register(asof_join_tolerance, ASOF_TOLERANCE_SQL)
+register(range_join_events, RANGE_SQL)
 
 
 def user_state_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,8 +172,7 @@ SELECT user_id, value, effective_from,
 FROM g ORDER BY user_id, effective_from
 """
 
-SPARK_QUERIES["user_state_scd2"] = user_state_scd2
-ORACLE_SQL["user_state_scd2"] = SCD2_SQL
+register(user_state_scd2, SCD2_SQL)
 
 
 def events_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,5 +262,4 @@ SELECT COALESCE(state, '(unmatched)') AS state,
 FROM joined GROUP BY state ORDER BY state
 """
 
-SPARK_QUERIES["events_scd2_point_in_time"] = events_scd2_point_in_time
-ORACLE_SQL["events_scd2_point_in_time"] = SCD2_PIT_SQL
+register(events_scd2_point_in_time, SCD2_PIT_SQL)

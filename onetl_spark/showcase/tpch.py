@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import davg, dsum, ensure_views, sql_davg, sql_dsum
 
 SHIP_CUTOFF = "1998-09-02"
@@ -274,7 +275,7 @@ WHERE c_custkey IN (SELECT o_custkey FROM orders)
 """
 
 
-def events_sessionless_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def events_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bucketed event aggregation (date_trunc + conditional agg)."""
     ensure_views(spark, sf_dir)
     e = spark.table("events")
@@ -302,31 +303,16 @@ GROUP BY 1, 2
 """
 
 
-SPARK_QUERIES = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_local_supplier_volume": q5_local_supplier_volume,
-    "window_top_order_per_customer": window_top_order_per_customer,
-    "window_running_total": window_running_total,
-    "topk_expensive_orders": topk_expensive_orders,
-    "agg_rollup_status_priority": agg_rollup_status_priority,
-    "setops_high_value_not_building": setops_high_value_not_building,
-    "semi_anti_join_customers": semi_anti_join_customers,
-    "events_daily_stats": events_sessionless_stats,
-}
-
-ORACLE_SQL = {
-    "q1_pricing_summary": Q1_SQL,
-    "q3_shipping_priority": Q3_SQL,
-    "q5_local_supplier_volume": Q5_SQL,
-    "window_top_order_per_customer": WINDOW_TOP_SQL,
-    "window_running_total": WINDOW_RUNNING_SQL,
-    "topk_expensive_orders": TOPK_SQL,
-    "agg_rollup_status_priority": ROLLUP_SQL,
-    "setops_high_value_not_building": SETOPS_SQL,
-    "semi_anti_join_customers": SEMI_ANTI_SQL,
-    "events_daily_stats": EVENTS_STATS_SQL,
-}
+register(q1_pricing_summary, Q1_SQL)
+register(q3_shipping_priority, Q3_SQL)
+register(q5_local_supplier_volume, Q5_SQL)
+register(window_top_order_per_customer, WINDOW_TOP_SQL)
+register(window_running_total, WINDOW_RUNNING_SQL)
+register(topk_expensive_orders, TOPK_SQL)
+register(agg_rollup_status_priority, ROLLUP_SQL)
+register(setops_high_value_not_building, SETOPS_SQL)
+register(semi_anti_join_customers, SEMI_ANTI_SQL)
+register(events_daily_stats, EVENTS_STATS_SQL)
 
 
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,15 +431,7 @@ JOIN orders   ON b.l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
 
-SPARK_QUERIES.update({
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q10_returned_items": q10_returned_items,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q18_large_volume_customers": q18_large_volume_customers,
-})
-ORACLE_SQL.update({
-    "q6_forecast_revenue": Q6_SQL,
-    "q10_returned_items": Q10_SQL,
-    "q14_promo_revenue": Q14_SQL,
-    "q18_large_volume_customers": Q18_SQL,
-})
+register(q6_forecast_revenue, Q6_SQL)
+register(q10_returned_items, Q10_SQL)
+register(q14_promo_revenue, Q14_SQL)
+register(q18_large_volume_customers, Q18_SQL)

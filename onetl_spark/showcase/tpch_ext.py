@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from onetl_spark.showcase.registry import register
 from onetl_spark.showcase.util import (
     davg,
     dsum,
@@ -323,27 +324,14 @@ GROUP BY 1
 """
 
 
-SPARK_QUERIES = {
-    "q4_order_priority": q4_order_priority,
-    "q7_nation_volume": q7_nation_volume,
-    "q12_priority_shipping": q12_priority_shipping,
-    "q13_customer_order_distribution": q13_customer_order_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q19_disjunctive_revenue": q19_disjunctive_revenue,
-    "q22_inactive_customers": q22_inactive_customers,
-}
-
-ORACLE_SQL = {
-    "q4_order_priority": Q4_SQL,
-    "q7_nation_volume": Q7_SQL,
-    "q12_priority_shipping": Q12_SQL,
-    "q13_customer_order_distribution": Q13_SQL,
-    "q15_top_supplier": Q15_SQL,
-    "q17_small_quantity_revenue": Q17_SQL,
-    "q19_disjunctive_revenue": Q19_SQL,
-    "q22_inactive_customers": Q22_SQL,
-}
+register(q4_order_priority, Q4_SQL)
+register(q7_nation_volume, Q7_SQL)
+register(q12_priority_shipping, Q12_SQL)
+register(q13_customer_order_distribution, Q13_SQL)
+register(q15_top_supplier, Q15_SQL)
+register(q17_small_quantity_revenue, Q17_SQL)
+register(q19_disjunctive_revenue, Q19_SQL)
+register(q22_inactive_customers, Q22_SQL)
 
 
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -562,21 +550,11 @@ GROUP BY s_name
 """
 
 
-SPARK_QUERIES.update({
-    "q8_market_share": q8_market_share,
-    "q9_profit_by_nation_year": q9_profit_by_nation_year,
-    "q16_supplier_part_counts": q16_supplier_part_counts,
-    "q20_bulk_suppliers": q20_bulk_suppliers,
-    "q21_last_shipper": q21_last_shipper,
-})
-
-ORACLE_SQL.update({
-    "q8_market_share": Q8_SQL,
-    "q9_profit_by_nation_year": Q9_SQL,
-    "q16_supplier_part_counts": Q16_SQL,
-    "q20_bulk_suppliers": Q20_SQL,
-    "q21_last_shipper": Q21_SQL,
-})
+register(q8_market_share, Q8_SQL)
+register(q9_profit_by_nation_year, Q9_SQL)
+register(q16_supplier_part_counts, Q16_SQL)
+register(q20_bulk_suppliers, Q20_SQL)
+register(q21_last_shipper, Q21_SQL)
 
 
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,15 +661,8 @@ HAVING {sql_dsum('l_extendedprice * (1 - l_discount)')} >
 """
 
 
-SPARK_QUERIES.update({
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q11_important_parts": q11_important_parts,
-})
-
-ORACLE_SQL.update({
-    "q2_min_cost_supplier": Q2_SQL,
-    "q11_important_parts": Q11_SQL,
-})
+register(q2_min_cost_supplier, Q2_SQL)
+register(q11_important_parts, Q11_SQL)
 
 
 def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,8 +730,7 @@ ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
 LIMIT 100
 """
 
-SPARK_QUERIES["q18_large_volume_customer"] = q18_large_volume_customer
-ORACLE_SQL["q18_large_volume_customer"] = Q18_SQL
+register(q18_large_volume_customer, Q18_SQL)
 
 
 def q10_returned_item_reporting(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -828,8 +798,7 @@ ORDER BY revenue DESC, c_custkey ASC
 LIMIT 20
 """
 
-# Renamed from "q10_returned_items": that key belongs to showcase/tpch.py's
-# original (all-double) Q10, which this module's dict.update was silently
-# shadowing (judge r7 "What's wrong" #2). Both variants are now reachable.
-SPARK_QUERIES["q10_returned_item_reporting"] = q10_returned_item_reporting
-ORACLE_SQL["q10_returned_item_reporting"] = Q10_SQL
+# Named apart from "q10_returned_items", showcase/tpch.py's original
+# (all-double) Q10, which a shared name once silently shadowed; both
+# variants are registered.
+register(q10_returned_item_reporting, Q10_SQL)

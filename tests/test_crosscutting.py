@@ -138,6 +138,46 @@ def test_dbwriter_metrics_count_rows_read_and_written(spark, testdata):
         spark.sql("DROP TABLE IF EXISTS metrics_rows_sink")
 
 
+def test_sparksql_write_mode_matrix(spark):
+    """The SparkSQL write path reads the target's columns once: absent
+    tables are created, present ones dispatch on if_exists, and an
+    analysis error other than table-not-found is not read as absent."""
+    from pyspark.errors import AnalysisException
+
+    from onetl_spark.connections import SparkSQLConnection
+    from onetl_spark.connections.catalog import drop_table_completely
+    from onetl_spark.connections.sparksql import SparkSQLWriteOptions
+    from onetl_spark.exceptions import TargetAlreadyExistsError
+
+    conn = SparkSQLConnection(spark)
+    target = "write_mode_matrix"
+    drop_table_completely(spark, target)
+
+    def write(df, mode, **kw):
+        conn.write_df_to_target(df, target, SparkSQLWriteOptions(if_exists=mode, **kw))
+
+    def rows():
+        return sorted(tuple(r) for r in spark.table(target).collect())
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id INT, p STRING")
+    try:
+        write(df, "error", partition_by=["p"])  # absent: created in every mode
+        with pytest.raises(TargetAlreadyExistsError):
+            write(df, "error")
+        write(df.limit(0), "ignore")
+        write(df.select("p", "id").where("id = 1"), "append")  # reordered by name
+        assert rows() == [(1, "a"), (1, "a"), (2, "b")]
+        write(spark.createDataFrame([(3, "a")], "id INT, p STRING"), "replace_overlapping_partitions")
+        assert rows() == [(2, "b"), (3, "a")]
+        write(df.where("id = 2"), "replace_entire_table")
+        assert rows() == [(2, "b")]
+        assert conn._table_columns("no_such_table") is None
+        with pytest.raises(AnalysisException):
+            conn._table_columns("not a table name!")
+    finally:
+        drop_table_completely(spark, target)
+
+
 def test_metrics_recorder_reads_only_new_executions(spark, monkeypatch):
     """The exit cost follows the block's work, not the session's history:
     with 5,000 retained executions only the ids after the start are read."""
@@ -346,17 +386,66 @@ def test_dialect_sql_matches_golden_file():
 
 
 def test_registry_rejects_duplicate_keys():
-    """dict.update silently shadowed q10_returned_items in round 7 —
-    all_queries()/all_oracles() must raise on any cross-module key
-    collision, and the reachable count must equal the declared count."""
+    """dict.update once silently shadowed q10_returned_items (358 declared,
+    357 reachable): a second registration under a taken name raises and
+    keeps the first, a query cannot join without its oracle, and every
+    registering module is one the registry is read from."""
     import onetl_spark.showcase as sc
+    from onetl_spark.showcase import registry
 
-    queries = sc.all_queries()  # raises ValueError on any duplicate
-    declared = sum(len(m.SPARK_QUERIES) for m in sc._modules())
-    assert len(queries) == declared
+    first = sc.registered()["q10_returned_items"]
+
+    def q10_returned_items(spark, sf_dir):
+        raise AssertionError("never registered")
 
     with pytest.raises(ValueError, match="duplicate"):
-        sc._merge_unique({"a": 1}, {"a": 2, "b": 3}, "modX", "SPARK_QUERIES")
+        registry.register(q10_returned_items, "SELECT 1")
+    assert sc.registered()["q10_returned_items"] == first
+
+    def query_without_oracle(spark, sf_dir):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError, match="oracle"):
+        registry.register(query_without_oracle, "")
+    assert "query_without_oracle" not in registry._QUERIES
+
+    modules = {m.__name__ for m in sc._modules()}
+    assert {q.module for q in registry._QUERIES.values()} <= modules
+    assert len(sc.all_queries()) == len(registry._QUERIES)
+
+
+def _bench(monkeypatch):
+    monkeypatch.syspath_prepend(str(Path(__file__).resolve().parent.parent))
+    import bench
+
+    return bench
+
+
+def test_bench_headline_and_excluded_partition_the_registry(monkeypatch):
+    """Every registered query is benched or excluded by name with one of
+    the three reasons, and an exclusion names a registered query, so a
+    rename cannot leave a stale one behind."""
+    import onetl_spark.showcase as sc
+
+    bench = _bench(monkeypatch)
+    assert sorted(bench.HEADLINE + list(bench.EXCLUDED)) == sorted(sc.registered())
+    assert set(bench.EXCLUDED.values()) <= {bench._PLUMBING, bench._VARIANT, bench._UTILITY}
+
+
+def test_every_bench_family_keeps_a_headline_entry(monkeypatch):
+    """A showcase module (a bench family) with no HEADLINE entry holds
+    nothing but plumbing probes, whose wall-clock is not data work."""
+    import onetl_spark.showcase as sc
+
+    bench = _bench(monkeypatch)
+    headline = set(bench.HEADLINE)
+    families: dict[str, list[str]] = {}
+    for name, q in sc.registered().items():
+        families.setdefault(bench._family(name), []).append(name)
+    assert set(families) == {m.__name__.rsplit(".", 1)[-1] for m in sc._modules()}
+    for family, names in families.items():
+        if not headline & set(names):
+            assert {bench.EXCLUDED[n] for n in names} == {bench._PLUMBING}, family
 
 
 def test_registry_output_types_safe(spark, sf_dir, testdata):

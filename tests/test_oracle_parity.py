@@ -11,82 +11,38 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-from driver_parity import norm  # typed, full-precision — the r11 tool upgrade
+# the parity tool's own loader, DuckDB views and typed full-precision
+# multiset, so this file and tools/driver_parity.py can never disagree
+from driver_parity import complex_type_fields, duck_con, load_entry, multiset  # noqa: E402
 
-ENTRY_PATH = os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py")
-
-
-def load_entry_module():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY_PATH)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+_ENTRY = load_entry()
+_QUERIES = _ENTRY.queries()
+_ORACLES = _ENTRY.oracle_sql()
+_NAMES = sorted(_QUERIES)
 
 
-def duckdb_con(sf_dir):
-    con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-    return con
-
-
-def rows_to_multiset(columns, rows):
-    # norm() type-tags every value (None sorts as ("n",), floats compare
-    # at full repr precision) — the same canonicalization the parity tool
-    # uses, so this file and tools/driver_parity.py can never disagree
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    return sorted(
-        tuple(norm(row[i]) for i in order)
-        for row in rows
-    )
-
-
-def _all_cases():
-    mod = load_entry_module()
-    q = mod.queries()
-    o = mod.oracle_sql()
-    return [(name, q[name], o.get(name)) for name in sorted(q)]
-
-
-@pytest.mark.parametrize("name,fn,oracle", _all_cases(), ids=[c[0] for c in _all_cases()])
-def test_query_matches_oracle(spark, sf_dir, name, fn, oracle):
-    df = fn(spark, sf_dir)
+@pytest.mark.parametrize("name", _NAMES, ids=_NAMES)
+def test_query_matches_oracle(spark, sf_dir, name):
+    df = _QUERIES[name](spark, sf_dir)
     # The driver's canonicalizer sorts result rows via pandas sort_values,
     # which raises "unhashable type: 'list'" on array/struct/map output
     # columns (the r4 sequence_packing crash) — ban them structurally.
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    complex_cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+    complex_cols = complex_type_fields(df)
     assert not complex_cols, f"canonicalizer-unsafe output columns: {complex_cols}"
     spark_rows = df.collect()
     spark_cols = df.columns
     assert len(set(spark_cols)) == len(spark_cols), f"duplicate column names: {spark_cols}"
 
-    if oracle is None:
-        assert spark_rows is not None  # weaker rows-only check
-        return
-
-    con = duckdb_con(sf_dir)
+    con = duck_con(sf_dir)
     # Arrow fetch, NOT fetchall(): fetchall() returns DuckDB HUGEINT (SUM
     # over integers) as a Python int, silently matching Spark's bigint —
     # the driver's fetch degrades HUGEINT to float/string and flags it.
     # Arrow reproduces the driver-visible typing (r3's three "red" rows
     # passed this file under fetchall while failing the driver).
-    tbl = con.execute(oracle).arrow()
+    tbl = con.execute(_ORACLES[name]).arrow()
     oracle_cols = tbl.column_names
     oracle_rows = list(zip(*(tbl.column(c).to_pylist() for c in oracle_cols)))
     if not oracle_cols:
@@ -98,15 +54,14 @@ def test_query_matches_oracle(spark, sf_dir, name, fn, oracle):
     assert len(spark_rows) == len(oracle_rows), (
         f"{name}: row count spark={len(spark_rows)} oracle={len(oracle_rows)}"
     )
-    left = rows_to_multiset(spark_cols, [tuple(r) for r in spark_rows])
-    right = rows_to_multiset(oracle_cols, oracle_rows)
+    left = multiset(spark_cols, [tuple(r) for r in spark_rows])
+    right = multiset(oracle_cols, oracle_rows)
     mismatches = [(l, r) for l, r in zip(left, right) if l != r]
     assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
 
 
 def test_entry_smoke(spark):
-    mod = load_entry_module()
-    df = mod.entry(spark)
+    df = _ENTRY.entry(spark)
     rows = df.collect()
     assert len(rows) >= 0
     assert df.schema is not None

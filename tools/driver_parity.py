@@ -40,7 +40,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+from onetl_spark.connections.catalog import TESTDATA_TABLES  # noqa: E402
 
 
 def load_entry():
@@ -56,7 +56,7 @@ def load_entry():
 
 def duck_con(sf_dir):
     con = duckdb.connect()
-    for name in TABLES:
+    for name in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")

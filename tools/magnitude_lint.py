@@ -41,7 +41,7 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from driver_parity import TABLES, load_entry  # noqa: E402
+from driver_parity import duck_con, load_entry  # noqa: E402
 
 OUT = os.path.join(REPO, "MAGNITUDE_LINT.json")
 
@@ -107,13 +107,7 @@ def main() -> None:
             if sql:
                 import threading
 
-                con = duckdb.connect()
-                for t in TABLES:
-                    p = os.path.join(sf_dir, f"{t}.parquet")
-                    if os.path.exists(p):
-                        con.execute(
-                            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-                        )
+                con = duck_con(sf_dir)
                 done = threading.Event()
                 timer = threading.Timer(
                     oracle_timeout, lambda: done.is_set() or con.interrupt()

@@ -69,9 +69,7 @@ def main() -> None:
     import __spark_entry__ as entry
 
     queries = entry.queries()
-    names = [n for n in bench.HEADLINE if n in queries]
-    if only:
-        names = [n for n in names if n in only]
+    names = [n for n in bench.HEADLINE if not only or n in only]
     timings: dict[str, dict] = {}
     records: dict[str, dict] = {}
     errors: dict[str, dict] = {}
