@@ -68,6 +68,9 @@ EXCLUDED = {
 # from run to run, unlike the verification-debt order of all_queries().
 _REGISTRY = registered()
 HEADLINE = [name for name in _REGISTRY if name not in EXCLUDED]
+# The drift canary of bench.main and tools/timing.py solo. A registry
+# rename degrades to the first headline query, not a KeyError (ADVICE r8).
+CANARY = "q1_pricing_summary" if "q1_pricing_summary" in _REGISTRY else next(iter(HEADLINE), None)
 
 
 # Deployment settings of the bench session; its confs are
@@ -173,27 +176,17 @@ def main() -> None:
     records: dict[str, dict] = {}
 
     # Per-query JVM-warm median of three timed runs (time_query). A fixed
-    # CANARY query is re-timed every 25 queries; its trajectory is recorded
-    # in the side file so cross-round deltas can be normalized by session
-    # drift instead of argued about.
-    # Guarded lookup: a registry rename/removal of the canary must degrade
-    # to "no canary track", not KeyError-crash the whole bench (ADVICE r8).
-    CANARY = "q1_pricing_summary"
-    if CANARY not in _REGISTRY:
-        CANARY = HEADLINE[0] if HEADLINE else None
-    canary_track: list[float] = []
+    # CANARY query is re-timed (reps=1, after its own compile run) every 25
+    # queries; its trajectory and records go to the side file so
+    # cross-round deltas can be normalized by session drift instead of
+    # argued about.
+    canary = {"query": CANARY, "timings": [], "records": []}
 
     def _run_canary():
-        if CANARY is None:
-            return
-        if not canary_track:
-            # one untimed compile run, as time_query gives every query, so
-            # the first reading is not the JVM's cold start
-            execute_fully(_REGISTRY[CANARY].fn(spark, sf_dir))
-        start = time.perf_counter()
-        execute_fully(_REGISTRY[CANARY].fn(spark, sf_dir))
-        canary_track.append(round(time.perf_counter() - start, 3))
-        spark.catalog.clearCache()
+        if CANARY is not None:
+            seconds, record = time_query(spark, _REGISTRY[CANARY].fn, sf_dir, reps=1)
+            canary["timings"].append(round(seconds, 3))
+            canary["records"].append(record.as_dict())
 
     _run_canary()
     for qi, name in enumerate(HEADLINE):
@@ -241,10 +234,10 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "cpus": cpus,
-                "methodology": "registry order (showcase module order, then registration order), minus bench.EXCLUDED; per-query JVM-warm median-of-3 (one untimed compile run); cache cleared between runs; canary re-timed every 25 queries for session-drift normalization",
+                "methodology": "registry order (showcase module order, then registration order), minus bench.EXCLUDED; per-query JVM-warm median-of-3 (one untimed compile run); cache cleared between runs; canary re-timed every 25 queries (one untimed compile run before each reading) for session-drift normalization",
                 "closes_round": _current_round(),
                 "naming_note": "BENCH_close_r{N}_full.json is named for the round it CLOSES (newest committed CORRECTNESS round + 1) and is never overwritten (an existing file gets a letter-suffixed sibling); the driver's stdout-captured BENCH_r{N}.json for the same run may carry a different round number",
-                "canary": {"query": CANARY, "timings": canary_track},
+                "canary": canary,
                 "testdata_fingerprint": _testdata_fingerprint(sf_dir),
                 "records": records,
             },
@@ -259,7 +252,7 @@ def main() -> None:
     # canary stats in the one-line JSON (additions-only, r12 verdict item
     # 10): lets the driver's round-over-round comparison normalize for
     # host/session drift without opening the side file
-    canary_sorted = sorted(canary_track)
+    canary_sorted = sorted(canary["timings"])
     canary_median = (
         round(canary_sorted[len(canary_sorted) // 2], 3) if canary_sorted else None
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import logging
 import math
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +27,9 @@ from onetl_spark.spark_utils import widen_small_scan
 
 log = logging.getLogger(__name__)
 
+_NANO = Decimal("1E-9")
+_ROUND9 = Context(prec=309 + 9, rounding=ROUND_HALF_UP)
+
 
 def _spark_round9(x: float) -> float:
     """Driver-side replica of Spark's ``F.round(x, 9)`` on a double:
@@ -34,10 +38,12 @@ def _spark_round9(x: float) -> float:
     with the −0.0 result normalized to +0.0 exactly as BigDecimal does
     (it cannot represent signed zero). The repo-wide ``_ref_fsig``
     quantize convention, packaged for iterative drivers that fold a
-    collected d-vector back into the next Spark expression."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    r = float(Decimal(repr(x)).quantize(Decimal("1E-9"), rounding=ROUND_HALF_UP))
+    collected d-vector back into the next Spark expression. Total over
+    doubles: ±inf and NaN come back unchanged, as from Spark, and the
+    context holds the largest double's 309 integer digits plus 9 places."""
+    if not math.isfinite(x):
+        return x
+    r = float(Decimal(repr(x)).quantize(_NANO, context=_ROUND9))
     return 0.0 if r == 0.0 else r
 
 

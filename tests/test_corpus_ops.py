@@ -1363,6 +1363,45 @@ def test_top_principal_component_matches_numpy(spark):
         top_principal_component(empty)
 
 
+def test_spark_round9_matches_jvm_round_bit_for_bit(spark):
+    """``_spark_round9`` is total and equals ``F.round(x, 9)`` on the
+    running JVM bit for bit over the doubles an iterative driver can feed
+    it: the float32 grid, values next to HALF_UP ties, magnitudes 1e-12 to
+    1e12, raw bit patterns up to 1e25, and the edge values (±0,
+    subnormals, the largest double, ±inf, NaN)."""
+    import math
+    import random
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from onetl_spark.llm.similarity import _spark_round9
+
+    rng = random.Random(9)
+    xs = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072009e-308, 1e-310,
+          1.7976931348623157e308, -1.7976931348623157e308, 1e19, -1e19,
+          math.inf, -math.inf, math.nan]
+    for _ in range(800):
+        xs.append(struct.unpack("f", struct.pack("f", rng.uniform(-4.0, 4.0)))[0])
+        tie = (rng.randrange(-10**7, 10**7) + 0.5) / 1e9
+        xs += [tie, math.nextafter(tie, math.inf), math.nextafter(tie, -math.inf)]
+        xs.append(rng.choice((1, -1)) * 10 ** rng.uniform(-12, 12))
+        while True:
+            x = struct.unpack("d", struct.pack("Q", rng.getrandbits(64)))[0]
+            if abs(x) <= 1e25:
+                xs.append(x)
+                break
+    df = spark.createDataFrame(list(enumerate(xs)), "i int, x double")
+    got = dict(df.select("i", F.round("x", 9).alias("r")).collect())
+
+    def bits(v):
+        return "nan" if math.isnan(v) else struct.pack("d", v).hex()
+
+    bad = [(x, got[i], _spark_round9(x)) for i, x in enumerate(xs)
+           if bits(got[i]) != bits(_spark_round9(x))]
+    assert bad == []
+
+
 def test_top_two_principal_components_match_numpy(spark):
     """Block (orthogonal) power iteration converges to numpy's top TWO
     covariance eigenvectors (sign-aligned), eigenvalues approach theirs,

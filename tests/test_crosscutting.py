@@ -503,3 +503,26 @@ def test_one_session_profile(spark):
         if builder.search(p.read_text(encoding="utf-8"))
     ]
     assert hits == ["onetl_spark/session.py"]
+
+
+def test_one_timing_loop():
+    """``bench.time_query`` is the one timing loop of ``bench.py`` and
+    ``tools/``: no other line there reads a timer or opens a run recorder,
+    so every reading is taken the same way and carries one record."""
+    import ast
+    import re
+
+    repo = Path(__file__).resolve().parent.parent
+    bench_src = (repo / "bench.py").read_text(encoding="utf-8")
+    loop = next(
+        node for node in ast.parse(bench_src).body
+        if isinstance(node, ast.FunctionDef) and node.name == "time_query"
+    )
+    timer = re.compile(r"perf_counter|monotonic|SparkMetricsRecorder\(")
+    hits = [
+        f"{path.relative_to(repo).as_posix()}:{no}"
+        for path in [repo / "bench.py", *sorted((repo / "tools").rglob("*.py"))]
+        for no, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+        if timer.search(line) and not (path.name == "bench.py" and loop.lineno <= no <= loop.end_lineno)
+    ]
+    assert hits == []

@@ -1,4 +1,7 @@
-"""Compare two full-bench JSON files per query (canary-normalized).
+"""Compare two full-bench JSON files per query (canary-normalized), and
+class each top riser from its two run records: a new barrier (more jobs),
+carry-over (more GC, state an earlier query left behind), a host stall
+(executor CPU flat, wall up) or more work.
 
 Usage:
     python tools/bench_compare.py BENCH_close_r12_full.json BENCH_close_r12_fullb.json
@@ -8,6 +11,26 @@ from __future__ import annotations
 
 import json
 import sys
+
+# A change counts only past both its relative and its absolute step, so
+# timer jitter on a short query stays "work".
+GC_UP = (0.25, 0.10)  # GC seconds up by more than 25% and 0.1 s
+CPU_FLAT = (0.10, 0.05)  # executor CPU seconds within 10% or 0.05 s
+WALL_UP = (0.10, 0.05)  # wall seconds up by more than 10% and 0.05 s
+
+
+def classify(a: dict, b: dict) -> str:
+    """The class of a riser whose run record went from ``a`` to ``b``."""
+    def change(key, step):  # in steps: above 1 is up, within ±1 is flat
+        return (b[key] - a[key]) / max(step[0] * a[key], step[1])
+
+    if b["jobs"] > a["jobs"]:
+        return "barrier"
+    if change("gc_s", GC_UP) > 1:
+        return "carry-over"
+    if abs(change("executor_cpu_s", CPU_FLAT)) <= 1 and change("wall_s", WALL_UP) > 1:
+        return "stall"
+    return "work"
 
 
 def main() -> None:
@@ -43,10 +66,8 @@ def main() -> None:
     ra, rb = da.get("records", {}), db.get("records", {})
     print("\ntop risers (s):")
     for n in deltas[-12:]:
-        rec = ""
-        if n in ra and n in rb:  # more jobs: a new barrier; more driver gap: driver work or a stall
-            rec = f"  jobs {rb[n]['jobs'] - ra[n]['jobs']:+d}  driver_gap_s {rb[n]['driver_gap_s'] - ra[n]['driver_gap_s']:+.2f}"
-        print(f"  {qa[n]:7.2f} -> {qb[n]:7.2f}  ({qb[n] - qa[n]:+.2f})  {n}{rec}")
+        cls = classify(ra[n], rb[n]) if n in ra and n in rb else "no record"
+        print(f"  {qa[n]:7.2f} -> {qb[n]:7.2f}  ({qb[n] - qa[n]:+.2f})  {cls:10s} {n}")
     extra = sorted(set(qb) - set(qa))
     if extra:
         print(f"\nnew queries ({len(extra)}): {sum(qb[n] for n in extra):.1f}s total")

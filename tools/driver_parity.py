@@ -11,7 +11,8 @@ intact (date-returning queries were driver-green). A plain ``fetchall()``
 would hide the HUGEINT artifact; pandas ``.df()`` would break dates/NULLs
 that the driver demonstrably accepts.
 
-Usage: python tools/driver_parity.py [N] [--sf /root/testdata/sf0.01]
+Usage: python tools/driver_parity.py [N] [--sf /root/testdata/sf0.01] [--only a,b]
+       python tools/driver_parity.py 403 --parts 16,64
        python tools/driver_parity.py --sweep-complex-types
 
 ``--oracle-timeout SECS`` interrupts a DuckDB oracle that exceeds the
@@ -20,6 +21,13 @@ sweep — for large-SF value-parity runs where a handful of exact oracles
 are inherently quadratic (all-pairs Jaccard, brute-force ANN ground
 truth) while the Spark side stays banded/bucketed. An ORACLE-SLOW row is
 an explicit coverage gap, not a pass.
+
+``--parts 16,64`` checks output stability: the reference side is a second
+Spark run at the other ``spark.sql.shuffle.partitions`` width instead of
+the oracle, which never sees Spark's partitioning. A moved width moves
+partition boundaries and so float accumulation order, so a query whose
+values change (UNSTABLE) breaks the dsum / fsig order-independence claim.
+The session's width is restored after each query.
 
 The sweep mode builds EVERY registered query's DataFrame (lazy — plan
 analysis only, no execution) and fails if any output column is an
@@ -30,9 +38,11 @@ pandas ``sort_values``, which raises ``TypeError: unhashable type:
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
 import sys
+import threading
 import time
 
 import duckdb
@@ -144,140 +154,137 @@ def sweep_types(spark, mod, sf_dir, kinds=("complex",)):
     return bad
 
 
+OK_STATUSES = ("OK", "ROWS-ONLY", "EXEC-OK", "ORACLE-SLOW")
+
+
+def spark_side(spark, fn, sf_dir, parts=None):
+    """Columns and rows of one Spark run, at shuffle width ``parts`` if given."""
+    if parts is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    df = fn(spark, sf_dir)
+    complex_cols = complex_type_fields(df)
+    if complex_cols:
+        raise TypeError(
+            f"canonicalizer-unsafe output columns {complex_cols} "
+            "(driver sort_values crashes on array/struct/map)"
+        )
+    return df.columns, [tuple(r) for r in df.collect()]
+
+
+def oracle_side(sql, sf_dir, oracle_timeout=None):
+    """Columns and rows of the DuckDB oracle; None when it runs past
+    ``oracle_timeout`` seconds."""
+    con = duck_con(sf_dir)
+    # done-flag instead of relying on cancel() timing: an interrupt firing
+    # between .arrow() returning and cancel() would hit an idle/closing
+    # connection (and raise in the timer thread after close)
+    done = threading.Event()
+    timer = threading.Timer(oracle_timeout or 0, lambda: done.is_set() or con.interrupt())
+    if oracle_timeout:
+        timer.start()
+    try:
+        tbl = con.execute(sql).arrow()
+    except duckdb.InterruptException:
+        return None
+    finally:
+        done.set()
+        timer.cancel()
+        con.close()
+    cols = tbl.column_names
+    return cols, list(zip(*(tbl.column(c).to_pylist() for c in cols))) if cols else []
+
+
+def compare(left, right, sides=("spark", "oracle"), mismatch="VALUES"):
+    """(status, detail) of two (columns, rows) results."""
+    (l_cols, l_rows), (r_cols, r_rows) = left, right
+    if sorted(l_cols) != sorted(r_cols):
+        return "SCHEMA", f"{sides[0]}={sorted(l_cols)} {sides[1]}={sorted(r_cols)}"
+    if len(l_rows) != len(r_rows):
+        return "ROWS", f"{sides[0]}={len(l_rows)} {sides[1]}={len(r_rows)}"
+    lm, rm = multiset(l_cols, l_rows), multiset(r_cols, r_rows)
+    bad = [(a, b) for a, b in zip(lm, rm) if a != b]
+    if bad:
+        return mismatch, f"{len(bad)}/{len(lm)} rows differ; first: {bad[0]}"
+    return "OK", ""
+
+
+def check(spark, fn, sql, sf_dir, parts=None, oracle_timeout=None, exec_only=False):
+    """(status, detail) of one query: its Spark result against the DuckDB
+    oracle or, with ``parts``, against a second Spark run at the other
+    shuffle width. The session's shuffle width is restored afterwards."""
+    if parts:
+        width = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            runs = [spark_side(spark, fn, sf_dir, p) for p in parts]
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+        return compare(*runs, sides=[f"parts={p}" for p in parts], mismatch="UNSTABLE")
+    result = spark_side(spark, fn, sf_dir)
+    if exec_only or sql is None:
+        return ("EXEC-OK" if exec_only else "ROWS-ONLY"), ""
+    oracle = oracle_side(sql, sf_dir, oracle_timeout)
+    if oracle is None:
+        return "ORACLE-SLOW", f"oracle exceeded {oracle_timeout:.0f}s budget"
+    return compare(result, oracle)
+
+
 def main():
-    n = 50
-    sf_dir = "/root/testdata/sf0.01"
-    oracle_timeout = None
-    args = sys.argv[1:]
-    only = None
-    exec_only = False
-    sweep = False
-    sweep_kinds = ("complex",)
-    while args:
-        a = args.pop(0)
-        if a == "--sf":
-            sf_dir = args.pop(0)
-        elif a == "--only":
-            only = set(args.pop(0).split(","))
-        elif a == "--sweep-complex-types":
-            sweep = True
-        elif a == "--sweep-decimal-types":
-            sweep = True
-            sweep_kinds = ("complex", "decimal")
-        elif a == "--oracle-timeout":
-            oracle_timeout = float(args.pop(0))
-        elif a == "--exec-only":
-            # Execute each Spark query fully (collect) but skip the DuckDB
-            # oracle. The ANSI failure mode is a Spark RUNTIME ABORT, not a
-            # value drift (a silent non-ANSI wrap would already mismatch the
-            # exact DuckDB oracle at sf0.01) — and the sf0.1 oracles dominate
-            # wall-clock ~10:1 (iterative-CTE graph oracles), so exec-only
-            # is what makes a full-registry sf0.1 ANSI sweep tractable.
-            exec_only = True
-        else:
-            n = int(a)
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n", nargs="?", type=int, default=50, help="first N queries() entries")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", type=lambda v: set(v.split(",")))
+    ap.add_argument("--sweep-complex-types", action="store_true")
+    ap.add_argument("--sweep-decimal-types", action="store_true")
+    ap.add_argument("--oracle-timeout", type=float)
+    # Execute each Spark query fully (collect) but skip the DuckDB oracle.
+    # The ANSI failure mode is a Spark RUNTIME ABORT, not a value drift (a
+    # silent non-ANSI wrap would already mismatch the exact DuckDB oracle at
+    # sf0.01) — and the sf0.1 oracles dominate wall-clock ~10:1
+    # (iterative-CTE graph oracles), so exec-only is what makes a
+    # full-registry sf0.1 ANSI sweep tractable.
+    ap.add_argument("--exec-only", action="store_true")
+    ap.add_argument("--parts", type=lambda v: tuple(int(x) for x in v.split(",")))
+    args = ap.parse_args()
+    if args.parts is not None and len(args.parts) != 2:
+        raise SystemExit("--parts takes two shuffle widths, e.g. 16,64")
+    sf_dir, parts = args.sf, args.parts
 
     from onetl_spark.session import build_session
 
     spark = build_session(8, "8g", "driver-parity")
 
     mod = load_entry()
-    if sweep:
-        bad = sweep_types(spark, mod, sf_dir, kinds=sweep_kinds)
+    if args.sweep_complex_types or args.sweep_decimal_types:
+        kinds = ("complex", "decimal") if args.sweep_decimal_types else ("complex",)
+        bad = sweep_types(spark, mod, sf_dir, kinds=kinds)
         spark.stop()
         sys.exit(1 if bad else 0)
     queries = mod.queries()
     oracles = mod.oracle_sql()
-    names = list(queries)[:n]
-    if only:
-        names = [x for x in names if x in only]
+    names = [x for x in list(queries)[: args.n] if not args.only or x in args.only]
 
     failures = []
     slow = []
+    t_all = time.time()
     for i, name in enumerate(names):
         t0 = time.time()
-        status = "OK"
-        detail = ""
         try:
-            df = queries[name](spark, sf_dir)
-            complex_cols = complex_type_fields(df)
-            if complex_cols:
-                raise TypeError(
-                    f"canonicalizer-unsafe output columns {complex_cols} "
-                    "(driver sort_values crashes on array/struct/map)"
-                )
-            s_rows = [tuple(r) for r in df.collect()]
-            s_cols = df.columns
-            sql = None if exec_only else oracles.get(name)
-            if sql is None:
-                status = "EXEC-OK" if exec_only else "ROWS-ONLY"
-            else:
-                con = duck_con(sf_dir)
-                tbl = None
-                if oracle_timeout:
-                    import threading
-
-                    # done-flag instead of relying on cancel() timing: an
-                    # interrupt firing between .arrow() returning and
-                    # cancel() would hit an idle/closing connection (and
-                    # raise in the timer thread after close).
-                    done = threading.Event()
-
-                    def _interrupt():
-                        if not done.is_set():
-                            con.interrupt()
-
-                    timer = threading.Timer(oracle_timeout, _interrupt)
-                    timer.start()
-                    try:
-                        tbl = con.execute(sql).arrow()
-                        done.set()
-                    except duckdb.InterruptException:
-                        status = "ORACLE-SLOW"
-                        detail = f"oracle exceeded {oracle_timeout:.0f}s budget"
-                    finally:
-                        done.set()
-                        timer.cancel()
-                else:
-                    tbl = con.execute(sql).arrow()
-                o_cols = tbl.column_names if tbl is not None else []
-                o_rows = (
-                    list(zip(*(tbl.column(c).to_pylist() for c in o_cols)))
-                    if tbl is not None
-                    else []
-                )
-                if not o_cols:
-                    o_rows = []
-                con.close()
-                if status == "ORACLE-SLOW":
-                    pass
-                elif sorted(s_cols) != sorted(o_cols):
-                    status = "SCHEMA"
-                    detail = f"spark={sorted(s_cols)} oracle={sorted(o_cols)}"
-                elif len(s_rows) != len(o_rows):
-                    status = "ROWS"
-                    detail = f"spark={len(s_rows)} oracle={len(o_rows)}"
-                else:
-                    left = multiset(s_cols, s_rows)
-                    right = multiset(o_cols, o_rows)
-                    bad = [(l, r) for l, r in zip(left, right) if l != r]
-                    if bad:
-                        status = "VALUES"
-                        detail = f"{len(bad)}/{len(left)} rows differ; first: {bad[0]}"
+            status, detail = check(
+                spark, queries[name], oracles.get(name), sf_dir, parts,
+                args.oracle_timeout, args.exec_only,
+            )
         except Exception as e:  # noqa: BLE001
-            status = "ERROR"
-            detail = f"{type(e).__name__}: {e}"
-        dt = time.time() - t0
-        ok_statuses = ("OK", "ROWS-ONLY", "EXEC-OK", "ORACLE-SLOW")
-        mark = "  " if status in ok_statuses else "!!"
-        print(f"{mark} [{i:2d}] {name:38s} {status:11s} {dt:5.1f}s {detail[:300]}")
-        sys.stdout.flush()
-        if status not in ok_statuses:
+            status, detail = "ERROR", f"{type(e).__name__}: {e}"
+        mark = "  " if status in OK_STATUSES else "!!"
+        print(f"{mark} [{i:2d}] {name:38s} {status:11s} {time.time() - t0:5.1f}s {detail[:300]}", flush=True)
+        if status not in OK_STATUSES:
             failures.append((name, status, detail))
         if status == "ORACLE-SLOW":
             slow.append(name)
 
-    print(f"\n{len(names) - len(failures) - len(slow)}/{len(names)} clean"
+    verdict = f"stable across shuffle widths {parts}" if parts else "clean"
+    print(f"\n{len(names) - len(failures) - len(slow)}/{len(names)} {verdict} "
+          f"at {sf_dir} ({time.time() - t_all:.0f}s total)"
           + (f"; {len(slow)} oracle-slow (skipped): {slow}" if slow else ""))
     for name, status, detail in failures:
         print(f"FAIL {name}: {status} {detail[:500]}")

@@ -36,12 +36,10 @@ import math
 import os
 import sys
 
-import duckdb
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from driver_parity import duck_con, load_entry  # noqa: E402
+from driver_parity import load_entry, oracle_side  # noqa: E402
 
 OUT = os.path.join(REPO, "MAGNITUDE_LINT.json")
 
@@ -58,7 +56,7 @@ def _dp6_exact(v: float) -> bool:
 
 
 def _column_stats(names, columns):
-    """Per REAL column: max |finite value| and exactness hints."""
+    """Per column holding finite floats: max |value| and exactness hints."""
     stats = {}
     for name, vals in zip(names, columns):
         finite = [
@@ -105,61 +103,20 @@ def main() -> None:
         entry: dict = {"source": "oracle" if sql else "spark", "flags": {}}
         try:
             if sql:
-                import threading
-
-                con = duck_con(sf_dir)
-                done = threading.Event()
-                timer = threading.Timer(
-                    oracle_timeout, lambda: done.is_set() or con.interrupt()
-                )
-                timer.start()
-                try:
-                    tbl = con.execute(sql).arrow()
-                    done.set()
-                except duckdb.InterruptException:
-                    entry["status"] = "ORACLE-SLOW"
-                    tbl = None
-                finally:
-                    done.set()
-                    timer.cancel()
-                if tbl is not None:
-                    import pyarrow.types as pt
-
-                    real_cols = [
-                        c
-                        for c, f in zip(tbl.column_names, tbl.schema)
-                        if pt.is_floating(f.type)
-                    ]
-                    stats = _column_stats(
-                        real_cols,
-                        [
-                            [v if v is None else float(v) for v in tbl.column(c).to_pylist()]
-                            for c in real_cols
-                        ],
-                    )
-                    entry["flags"] = {
-                        c: s for c, s in stats.items() if s["max_abs"] >= threshold
-                    }
-                    entry["status"] = "OK"
-                con.close()
+                got = oracle_side(sql, sf_dir, oracle_timeout)
             else:
                 if spark is None:
                     from onetl_spark.session import build_session
 
                     spark = build_session(8, "8g", "magnitude-lint")
                 df = queries[name](spark, sf_dir)
-                real_cols = [
-                    f.name
-                    for f in df.schema.fields
-                    if f.dataType.typeName() in ("double", "float")
-                ]
-                rows = df.select(*real_cols).collect() if real_cols else []
-                stats = _column_stats(
-                    real_cols, [[r[c] for r in rows] for c in real_cols]
-                )
-                entry["flags"] = {
-                    c: s for c, s in stats.items() if s["max_abs"] >= threshold
-                }
+                got = df.columns, df.collect()
+            if got is None:
+                entry["status"] = "ORACLE-SLOW"
+            else:
+                # only float values count: decimals and integers are exact
+                stats = _column_stats(got[0], zip(*got[1]))
+                entry["flags"] = {c: s for c, s in stats.items() if s["max_abs"] >= threshold}
                 entry["status"] = "OK"
         except Exception as e:  # noqa: BLE001 — lint must finish the sweep
             entry["status"] = "ERROR"
