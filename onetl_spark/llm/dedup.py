@@ -69,16 +69,6 @@ def shingle_hashes(col, n: int = SHINGLE_N):
     return F.transform(word_shingles(col, n), lambda s: md5_long(s) % MOD)
 
 
-def minhash_signature(col, num_perm: int = NUM_PERM):
-    """MinHash signature as an array<long> of length num_perm."""
-    hashes = shingle_hashes(col)
-    sig = [
-        F.array_min(F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MOD))
-        for a, b in perm_constants(num_perm)
-    ]
-    return F.array(*sig)
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup by raw text: survivor = min id per distinct text."""
     return df.groupBy(text_col).agg(

@@ -4,7 +4,7 @@ metadata, processed with Arrow-batched ``mapInPandas``.
 PNG payloads decode for REAL through the pure-stdlib codec in
 :mod:`onetl_spark.llm.png` (zlib inflate + scanline unfiltering + integer
 luma) — no imaging library needed; Pillow, when installed, extends decode
-to other formats. Audio decode and non-PNG images without Pillow raise
+to other formats. Other images without Pillow raise
 ``NotImplementedError``, and ``extract_features`` keeps a deterministic
 fake (md5 digest + byte stats) so the Spark-side plumbing — schema,
 partitioning, UDF signature, Arrow batch shape — stays testable on text
@@ -51,14 +51,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def decode_image(payload: bytes):
-    """Decode an image payload to ``(width, height, grayscale_bytes)``.
-    Alias of :func:`decode_image_gray` — one return shape regardless of
-    which decoder (stdlib PNG codec or Pillow) handled the payload, so
-    caller code behaves identically across environments."""
-    return decode_image_gray(payload)
-
-
 def decode_image_gray(payload: bytes) -> "tuple[int, int, bytes]":
     """Decode an image payload to ``(width, height, grayscale_bytes)``.
 
@@ -87,11 +79,6 @@ def decode_image_gray(payload: bytes) -> "tuple[int, int, bytes]":
         raise NotImplementedError(
             "non-PNG/JPEG image decoding requires Pillow; not available",
         ) from e
-
-
-def decode_audio(payload: bytes):  # pragma: no cover
-    """Decode an audio payload. STUB: requires an audio library."""
-    raise NotImplementedError("audio decoding requires soundfile/librosa; not available")
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -448,40 +448,6 @@ def test_every_bench_family_keeps_a_headline_entry(monkeypatch):
             assert {bench.EXCLUDED[n] for n in names} == {bench._PLUMBING}, family
 
 
-def test_registry_output_types_safe(spark, sf_dir, testdata):
-    """Full-registry lazy-build sweep: no array/struct/map output column
-    (driver canonicalizer crash, r4 sequence_packing class) and no
-    DecimalType output column (driver hash mismatch, r7 q18 class —
-    exact decimals stay internal, the output boundary is DOUBLE per the
-    dsum convention in showcase/util.py)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "driver_parity",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "driver_parity.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    import onetl_spark.showcase as sc
-
-    bad = []
-    for name, fn in sc.all_queries().items():
-        try:
-            df = fn(spark, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            bad.append((name, f"build error: {type(e).__name__}: {e}"))
-            continue
-        fields = mod.complex_type_fields(df)
-        if fields:
-            bad.append((name, f"complex output columns: {fields}"))
-        dfields = mod.decimal_type_fields(df)
-        if dfields:
-            bad.append((name, f"decimal output columns: {dfields}"))
-    assert bad == []
-
-
 def test_one_session_profile(spark):
     """Tests, parity and tools run the benchmarked plan regime: the test
     session carries ``session.PROFILE`` key by key, and no other module

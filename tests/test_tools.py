@@ -1,5 +1,6 @@
 """The timing tool's arithmetic and file merges, the bench riser classes,
-and the parity tool's shuffle-width stability mode."""
+and the parity tool's per-query check: output columns, the magnitude rule
+and the shuffle-width stability mode."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import json
 import shutil
 import sys
 from argparse import Namespace
+from decimal import Decimal
 from pathlib import Path
 
 import pytest
@@ -100,23 +102,27 @@ def test_partial_curve_merges_into_the_committed_curve(tmp_path, monkeypatch):
     shutil.copy(REPO / "SCALE_CURVE.json", path)
     before = json.loads(path.read_text())
     monkeypatch.setattr(timing, "CURVE_PATH", str(path))
-    rows = {"sf0.001": {"embeddings": 500}, "sf0.01": {"embeddings": 5000}}
+    # sf0.01 is new to the file; sf0.1 is committed with other tables
+    rows = {"sf0.01": {"embeddings": 500}, "sf0.1": {"embeddings": 5000}}
     monkeypatch.setattr(timing, "driving_rows", lambda spark, sf_dirs, tables: rows)
     rec = _record()
     monkeypatch.setattr(timing, "read", _fake_read([
-        ("embedding_kmeans_clusters", "sf0.001", 1.0, rec, None),
-        ("embedding_kmeans_clusters", "sf0.01", 2.0, rec, None),
+        ("embedding_kmeans_clusters", "sf0.01", 1.0, rec, None),
+        ("embedding_kmeans_clusters", "sf0.1", 2.0, rec, None),
     ]))
-    args = Namespace(sf_dirs=["/d/sf0.001", "/d/sf0.01"], only=["kmeans"], reps=2)
+    args = Namespace(sf_dirs=["/d/sf0.01", "/d/sf0.1"], only=["kmeans"], reps=2)
     timing.curve(None, args)
     after = json.loads(path.read_text())
 
-    assert set(after) == set(before) and after["rows"] == rows and after["reps"] == 2
+    assert set(after) == set(before) and after["reps"] == 2
+    # the committed rows survive, merged per SF with the new counts
+    assert after["rows"] == {**before["rows"], "sf0.01": {"embeddings": 500},
+                             "sf0.1": {**before["rows"]["sf0.1"], "embeddings": 5000}}
     assert after["families"]["kmeans"] == {
         "query": "embedding_kmeans_clusters", "driving_table": "embeddings",
-        "times_sec": {"sf0.001": 1.0, "sf0.01": 2.0},
-        "exponents": {"sf0.001->sf0.01": 0.301},
-        "records": {"sf0.001": rec, "sf0.01": rec}}
+        "times_sec": {"sf0.01": 1.0, "sf0.1": 2.0},
+        "exponents": {"sf0.01->sf0.1": 0.301},
+        "records": {"sf0.01": rec, "sf0.1": rec}}
     others = {f: v for f, v in before["families"].items() if f != "kmeans"}
     assert {f: after["families"][f] for f in others} == others
 
@@ -153,3 +159,41 @@ def test_parity_parts_mode_compares_two_shuffle_widths(spark, sf_dir, testdata):
     with pytest.raises(ZeroDivisionError):
         driver_parity.check(spark, lambda s, d: 1 / 0, None, sf_dir, parts=(16, 64))
     assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
+@pytest.mark.parametrize("kind", ["decimal", "complex", "duplicate"])
+def test_parity_check_fails_unsafe_output_columns(spark, sf_dir, kind):
+    """An output column the driver cannot canonicalize or hash fails as
+    OUTPUT, even where its values match the oracle's."""
+    from pyspark.sql import functions as F
+
+    cols = {
+        "decimal": [F.lit(1.5).cast("decimal(10,2)").alias("x")],
+        "complex": [F.array(F.lit(1.5)).alias("x")],
+        "duplicate": [F.lit(1.5).alias("x"), F.lit(2.5).alias("x")],
+    }[kind]
+    status, detail = driver_parity.check(
+        spark, lambda s, _d: s.range(1).select(*cols), "SELECT CAST(1.5 AS DECIMAL(10, 2)) AS x", sf_dir)
+    assert (status, detail) == ("OUTPUT", f"output columns: {kind} ['x']")
+
+
+def test_parity_check_fails_fractional_doubles_above_the_magnitude_bound(spark, sf_dir):
+    """Matching values still fail when the oracle holds a double above 1e6
+    that neither is integral nor sits on the 6-dp grid: round(x, 9) cannot
+    canonicalize it across engines."""
+    from pyspark.sql import functions as F
+
+    v = 14000000.123456789
+    status, detail = driver_parity.check(
+        spark, lambda s, _d: s.range(1).select(F.lit(v).alias("v")), f"SELECT {v}::DOUBLE AS v", sf_dir)
+    assert status == "MAGNITUDE" and repr(v) in detail
+
+
+def test_magnitude_rule():
+    risks = driver_parity.magnitude_risks
+    assert risks(["a", "b"], [(1.0, 14000000.123456789), (2.0, -14000000.123456789)]) == {
+        "b": 14000000.123456789}
+    # integral, on the 6-dp grid, below the bound, or not a finite float: safe
+    assert risks(["v"], [(14000000.0,), (14000000.123457,), (-2.5e9,), (999999.123456789,),
+                         (None,), (float("nan"),), (float("inf"),), (14000001,),
+                         (Decimal("14000000.123456789"),)]) == {}

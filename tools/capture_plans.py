@@ -8,9 +8,9 @@ Usage:
     python tools/capture_plans.py before --only q1_pricing_summary,dedup_exact
     python tools/capture_plans.py after  --only ...  [--round r12] [--sf DIR]
 
-The session is bench.py's (``onetl_spark.session.build_session``, same
-cores and driver memory) so the captured initial plan matches what the
-bench executes.
+The session is bench.py's (``onetl_spark.session.build_session`` on
+``$SPARK_GRAFT_CPUS`` cores with ``bench.DRIVER_MEMORY``) so the captured
+initial plan matches what the bench executes.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ def main() -> None:
     ap.add_argument("--only", required=True, help="comma-separated query names")
     ap.add_argument("--round", default="r12")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument(
         "--exec",
         action="store_true",
@@ -47,7 +46,8 @@ def main() -> None:
     import bench  # noqa: E402  (repo root on path)
     from onetl_spark.session import build_session
 
-    spark = build_session(args.cpus, bench.DRIVER_MEMORY, "capture-plans", bench.WAREHOUSE)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = build_session(cpus, bench.DRIVER_MEMORY, "capture-plans", bench.WAREHOUSE)
 
     from onetl_spark.showcase import all_queries
 

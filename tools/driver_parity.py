@@ -13,7 +13,21 @@ that the driver demonstrably accepts.
 
 Usage: python tools/driver_parity.py [N] [--sf /root/testdata/sf0.01] [--only a,b]
        python tools/driver_parity.py 403 --parts 16,64
-       python tools/driver_parity.py --sweep-complex-types
+
+Every run checks each query's output columns before anything else: an
+array/struct/map column (the driver's canonicalizer sorts rows with pandas
+``sort_values``, which raises ``unhashable type: 'list'``: the r4
+``sequence_packing`` crash), a DecimalType column (the driver's value hash
+treats Decimal apart from the float path: q18 r7) or two columns with one
+name fail as OUTPUT. Exact decimals stay internal; the output boundary is
+DOUBLE (the dsum convention, showcase/util.py).
+
+Once the oracle values match, the oracle result is checked for MAGNITUDE:
+``round(x, 9)`` is a no-op above ~1e6, so a float value that large which is
+neither integral nor on the 6-dp decimal grid (a dsum cast, engine-stable at
+any magnitude) comes from double arithmetic whose last-ULP drift survives
+to the output (r10 ``events_value_changepoint``). Such a column needs
+``spark_utils.fsig`` on both sides.
 
 ``--oracle-timeout SECS`` interrupts a DuckDB oracle that exceeds the
 budget and records the query as ORACLE-SLOW instead of blocking the
@@ -28,12 +42,6 @@ the oracle, which never sees Spark's partitioning. A moved width moves
 partition boundaries and so float accumulation order, so a query whose
 values change (UNSTABLE) breaks the dsum / fsig order-independence claim.
 The session's width is restored after each query.
-
-The sweep mode builds EVERY registered query's DataFrame (lazy — plan
-analysis only, no execution) and fails if any output column is an
-array/struct/map: the driver's canonicalizer sorts result rows with
-pandas ``sort_values``, which raises ``TypeError: unhashable type:
-'list'`` on such columns (the r4 ``sequence_packing`` crash class).
 """
 
 from __future__ import annotations
@@ -44,8 +52,10 @@ import os
 import sys
 import threading
 import time
+from decimal import ROUND_HALF_EVEN, Decimal
 
 import duckdb
+from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -106,69 +116,58 @@ def multiset(cols, rows):
     return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
-def complex_type_fields(df):
-    """Names of output columns the driver's canonicalizer cannot sort."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    return [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
+OK_STATUSES = ("OK", "EXEC-OK", "ORACLE-SLOW")
+# above this magnitude round(x, 9) no longer canonicalizes a double
+MAGNITUDE = 1e6
 
 
-def decimal_type_fields(df):
-    """Names of DecimalType output columns — the driver's value hash treats
-    Decimal differently from the float path every green query has used
-    (q18 r7: rows/schema green, hash red, judge exact-value green 4/4).
-    Exact decimal arithmetic stays INTERNAL; the output boundary is DOUBLE
-    per the repo's dsum convention (showcase/util.py)."""
-    from pyspark.sql.types import DecimalType
-
-    return [f.name for f in df.schema.fields if isinstance(f.dataType, DecimalType)]
+class OutputError(Exception):
+    """An output column the driver cannot canonicalize or hash."""
 
 
-def sweep_types(spark, mod, sf_dir, kinds=("complex",)):
-    """Build every registered query lazily and flag unsafe output columns.
-
-    kinds: any of "complex" (array/struct/map — canonicalizer crash) and
-    "decimal" (DecimalType — driver hash mismatch vs the DuckDB oracle).
-    """
-    queries = mod.queries()
-    bad = []
-    for name, fn in queries.items():
-        try:
-            df = fn(spark, sf_dir)
-        except Exception as e:  # noqa: BLE001
-            bad.append((name, f"build error: {type(e).__name__}: {e}"))
-            continue
-        fields = complex_type_fields(df) if "complex" in kinds else []
-        if fields:
-            bad.append((name, f"complex output columns: {fields}"))
-        dfields = decimal_type_fields(df) if "decimal" in kinds else []
-        if dfields:
-            bad.append((name, f"decimal output columns: {dfields}"))
-    for name, detail in bad:
-        print(f"!! {name}: {detail[:300]}")
-    print(f"\n{len(queries) - len(bad)}/{len(queries)} queries output-type-safe")
-    return bad
-
-
-OK_STATUSES = ("OK", "ROWS-ONLY", "EXEC-OK", "ORACLE-SLOW")
+def output_problems(schema) -> list[str]:
+    """Complex, decimal and duplicate-named output columns of ``schema``."""
+    names = [f.name for f in schema.fields]
+    typed = lambda *types: [f.name for f in schema.fields if isinstance(f.dataType, types)]  # noqa: E731
+    kinds = {
+        "complex": typed(ArrayType, MapType, StructType),
+        "decimal": typed(DecimalType),
+        "duplicate": sorted({n for n in names if names.count(n) > 1}),
+    }
+    return [f"{kind} {cols}" for kind, cols in kinds.items() if cols]
 
 
 def spark_side(spark, fn, sf_dir, parts=None):
-    """Columns and rows of one Spark run, at shuffle width ``parts`` if given."""
+    """Columns and rows of one Spark run, at shuffle width ``parts`` if given;
+    raises OutputError before running a query with unsafe output columns."""
     if parts is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     df = fn(spark, sf_dir)
-    complex_cols = complex_type_fields(df)
-    if complex_cols:
-        raise TypeError(
-            f"canonicalizer-unsafe output columns {complex_cols} "
-            "(driver sort_values crashes on array/struct/map)"
-        )
+    problems = output_problems(df.schema)
+    if problems:
+        raise OutputError("output columns: " + "; ".join(problems))
     return df.columns, [tuple(r) for r in df.collect()]
+
+
+def _dp6_exact(v: float) -> bool:
+    """True when v is exactly the double nearest a 6-dp decimal — the
+    signature of a dsum/decimal(…,≤6)→double cast, which is engine-stable
+    at any magnitude (both engines cast the SAME decimal). Heuristic:
+    loses discrimination above ~1e10 where double eps exceeds the grid."""
+    d = Decimal(v)
+    return float(d.quantize(Decimal("1e-6"), rounding=ROUND_HALF_EVEN)) == v
+
+
+def magnitude_risks(cols, rows) -> dict:
+    """``{column: first value}`` of the float values at or above MAGNITUDE
+    that are neither integral nor on the 6-dp decimal grid."""
+    risky = {}
+    for row in rows:
+        for col, v in zip(cols, row):
+            if (isinstance(v, float) and MAGNITUDE <= abs(v) < math.inf
+                    and not (v.is_integer() or _dp6_exact(v))):
+                risky.setdefault(col, v)
+    return risky
 
 
 def oracle_side(sql, sf_dir, oracle_timeout=None):
@@ -209,23 +208,31 @@ def compare(left, right, sides=("spark", "oracle"), mismatch="VALUES"):
 
 
 def check(spark, fn, sql, sf_dir, parts=None, oracle_timeout=None, exec_only=False):
-    """(status, detail) of one query: its Spark result against the DuckDB
-    oracle or, with ``parts``, against a second Spark run at the other
+    """(status, detail) of one query: its output columns (OUTPUT), then its
+    Spark result against the DuckDB oracle and the magnitude rule
+    (MAGNITUDE) or, with ``parts``, against a second Spark run at the other
     shuffle width. The session's shuffle width is restored afterwards."""
-    if parts:
-        width = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            runs = [spark_side(spark, fn, sf_dir, p) for p in parts]
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", width)
-        return compare(*runs, sides=[f"parts={p}" for p in parts], mismatch="UNSTABLE")
-    result = spark_side(spark, fn, sf_dir)
-    if exec_only or sql is None:
-        return ("EXEC-OK" if exec_only else "ROWS-ONLY"), ""
+    try:
+        if parts:
+            width = spark.conf.get("spark.sql.shuffle.partitions")
+            try:
+                runs = [spark_side(spark, fn, sf_dir, p) for p in parts]
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", width)
+            return compare(*runs, sides=[f"parts={p}" for p in parts], mismatch="UNSTABLE")
+        result = spark_side(spark, fn, sf_dir)
+    except OutputError as e:
+        return "OUTPUT", str(e)
+    if exec_only:
+        return "EXEC-OK", ""
     oracle = oracle_side(sql, sf_dir, oracle_timeout)
     if oracle is None:
         return "ORACLE-SLOW", f"oracle exceeded {oracle_timeout:.0f}s budget"
-    return compare(result, oracle)
+    status, detail = compare(result, oracle)
+    risky = magnitude_risks(*oracle) if status == "OK" else None
+    if risky:
+        return "MAGNITUDE", f"values >= {MAGNITUDE:g} off the integer and 6-dp grids: {risky}"
+    return status, detail
 
 
 def main():
@@ -233,8 +240,6 @@ def main():
     ap.add_argument("n", nargs="?", type=int, default=50, help="first N queries() entries")
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--only", type=lambda v: set(v.split(",")))
-    ap.add_argument("--sweep-complex-types", action="store_true")
-    ap.add_argument("--sweep-decimal-types", action="store_true")
     ap.add_argument("--oracle-timeout", type=float)
     # Execute each Spark query fully (collect) but skip the DuckDB oracle.
     # The ANSI failure mode is a Spark RUNTIME ABORT, not a value drift (a
@@ -254,11 +259,6 @@ def main():
     spark = build_session(8, "8g", "driver-parity")
 
     mod = load_entry()
-    if args.sweep_complex_types or args.sweep_decimal_types:
-        kinds = ("complex", "decimal") if args.sweep_decimal_types else ("complex",)
-        bad = sweep_types(spark, mod, sf_dir, kinds=kinds)
-        spark.stop()
-        sys.exit(1 if bad else 0)
     queries = mod.queries()
     oracles = mod.oracle_sql()
     names = [x for x in list(queries)[: args.n] if not args.only or x in args.only]
@@ -270,7 +270,7 @@ def main():
         t0 = time.time()
         try:
             status, detail = check(
-                spark, queries[name], oracles.get(name), sf_dir, parts,
+                spark, queries[name], oracles[name], sf_dir, parts,
                 args.oracle_timeout, args.exec_only,
             )
         except Exception as e:  # noqa: BLE001

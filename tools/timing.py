@@ -23,9 +23,10 @@ curve   FAMILIES (or ``--only`` families or queries) at sf0.01, sf0.1, sf1;
         ~1 is linear, >>1.15 on sf0.1 -> sf1 needs a look. Writes
         SCALE_CURVE.json and prints a markdown table.
 
-A run with ``--only`` merges into the file: its readings replace the old
-ones, and a re-screened or errored query loses its old flag. ``--sf`` takes
-SF directories; a bare name like ``sf1`` is read under .scratch/testdata
+A run with ``--only`` merges into the file: its readings (and, in curve,
+its driving-table rows per SF) replace the old ones, and a re-screened or
+errored query loses its old flag. ``--sf`` takes SF directories; a bare
+name like ``sf1`` is read under .scratch/testdata
 (``tools/gen_testdata.py``). Solo's default is ``$SPARK_GRAFT_SF_DIR`` or
 /root/testdata/sf0.1. Cores: ``$SPARK_GRAFT_CPUS``; memory:
 ``bench.DRIVER_MEMORY``.
@@ -174,11 +175,15 @@ def merge_screen(prev: dict | None, run: dict) -> dict:
 
 
 def merge_curve(prev: dict | None, run: dict) -> dict:
-    """A full curve replaces the file; a partial one keeps the families it
-    did not re-measure (rows and reps are the new run's)."""
+    """A full curve replaces the file; a partial one keeps the families and,
+    per SF, the driving-table rows it did not re-measure (reps are the new
+    run's), so the rows behind a kept exponent stay in the file."""
     if prev is None:
         return run
-    return {**run, "families": {**prev.get("families", {}), **run["families"]}}
+    rows = dict(prev.get("rows", {}))
+    for sf, counts in run["rows"].items():
+        rows[sf] = {**rows.get(sf, {}), **counts}
+    return {**run, "rows": rows, "families": {**prev.get("families", {}), **run["families"]}}
 
 
 def write(path: str, merge, run: dict, partial: bool) -> None:
